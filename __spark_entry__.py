@@ -2958,7 +2958,7 @@ def oracle_sql() -> dict[str, str]:
             ), hosts AS (
               SELECT doc_id,
                      string_split(regexp_replace(lower(regexp_extract(url,
-                         '^[^:/?#]+://([^/:?#]+)', 1)), '^www\\.', ''),
+                         '^[^:/?#]+://([^/:?#]+)', 1)), '^www\\.(.*\\.)', '\\1'),
                          '.') AS labels
               FROM d
             ), sufs AS (

@@ -1,4 +1,7 @@
-"""Benchmark: headline queries at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS].
+"""Benchmark: headline queries at $SPARK_GRAFT_SF_DIR on local[N].
+
+N is $SPARK_GRAFT_CPUS when set, else the CPUs this process may run on
+(``session.host_cpus``).
 
 Prints ONE JSON line:
   {"metric": "...", "value": total_sec, "unit": "sec",
@@ -24,6 +27,8 @@ import time
 os.environ.setdefault("SPARK_GRAFT_TMPFS", "1")
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from gnames_spark.session import get_spark, host_cpus  # noqa: E402
 
 
 def _bench_queries(spark, sf_dir):
@@ -97,7 +102,7 @@ def _bench_queries(spark, sf_dir):
         )
     )
     n_docs = docs.count()
-    cfg = DedupConfig(shuffle_partitions=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    cfg = DedupConfig(shuffle_partitions=host_cpus())
     t0 = time.monotonic()
     res = DedupPipeline(spark, cfg).run(docs)
     res["components"].count()
@@ -197,10 +202,7 @@ def _bench_queries(spark, sf_dir):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-    from gnames_spark.session import get_spark
-
+    cpus = host_cpus()
     spark = get_spark(app_name="gnames_spark_bench", master=f"local[{cpus}]")
     try:
         (timings, n_docs, pipeline_sec, syn_dps, big_dps,
@@ -221,7 +223,7 @@ def main() -> None:
         "fullconfig_120k_docs_per_sec": full_dps,
         "funnel_120k_docs_per_sec": funnel_dps,
         "fullconfig_120k_stages_sec": full_stages,
-        "cpus": int(cpus),
+        "cpus": cpus,
     }
 
     if os.environ.get("SPARK_GRAFT_SCALING") == "1":

@@ -21,11 +21,14 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -36,6 +39,36 @@ class StageResult:
     secs: float
     path: str
     reused: bool
+
+
+# Spark's committed data files: part-<partition id>-<job uuid>-c<nnn>...
+_PART_FILE = re.compile(r"part-(\d+)-")
+
+
+def _footer_lineage(data_dir: str) -> dict[int, int]:
+    """Written partition id → rows, summed from the parquet footers of a
+    flat Spark output directory; empty partitions are left out."""
+    lineage: dict[int, int] = {}
+    for name in os.listdir(data_dir):
+        m = _PART_FILE.match(name)
+        if m is None:
+            continue
+        n = pq.read_metadata(os.path.join(data_dir, name)).num_rows
+        if n:
+            pid = int(m.group(1))
+            lineage[pid] = lineage.get(pid, 0) + n
+    return lineage
+
+
+def _write_lineage(lineage: dict[int, int], out_dir: str) -> None:
+    """The ``(partition_id int, rows long)`` lineage table, one row group."""
+    pids = sorted(lineage)
+    table = pa.table({
+        "partition_id": pa.array(pids, pa.int32()),
+        "rows": pa.array([lineage[p] for p in pids], pa.int64()),
+    })
+    os.makedirs(out_dir)
+    pq.write_table(table, os.path.join(out_dir, "part-00000.parquet"))
 
 
 _REMOTE_SCHEMES = (
@@ -107,7 +140,7 @@ class ParquetCheckpointIO:
         with open(self._manifest_path(stage)) as f:
             return json.load(f).get("rows")
 
-    def write(self, df: DataFrame, stage: str, partition_by: list[str] | None = None) -> StageResult:
+    def write(self, df: DataFrame, stage: str) -> StageResult:
         """Materialize df; atomic: data lands in a tmp dir, manifest is
         written last (a crashed run leaves no valid manifest → stage
         recomputes on resume). Per-partition lineage (partition_id →
@@ -115,8 +148,10 @@ class ParquetCheckpointIO:
         manifest (north_rule: checkpoints carry per-partition lineage +
         throughput; reference analog: per-request structured logging,
         /root/reference/pkg/gnames_verif.go:166-173)."""
-        from gnames_spark.metrics import partition_lineage
-
+        # the data write is the only Spark job: the lineage (rows per
+        # written partition) comes from the part files' parquet footers,
+        # read on the driver (the root is a driver-visible POSIX path,
+        # see the class docstring), and is written with pyarrow
         t0 = time.monotonic()
         stage_dir = os.path.join(self.root, stage)
         tmp = os.path.join(stage_dir, f"_tmp_{uuid.uuid4().hex[:8]}")
@@ -124,23 +159,15 @@ class ParquetCheckpointIO:
         # near-unique 64-bit hashes (bands, signatures, ids) that thrash
         # the dictionary builder before falling back (measured 75s → 34s
         # writing a 36M-hash array column at 120k docs)
-        writer = df.write.mode("overwrite").option("parquet.enable.dictionary", "false")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
+        df.write.mode("overwrite").option("parquet.enable.dictionary", "false").parquet(tmp)
         final = self._data_path(stage)
         if os.path.exists(final):
             shutil.rmtree(final)
         os.replace(tmp, final)
-        spark = df.sparkSession
-        written = spark.read.parquet(final)
-        lineage_rows = partition_lineage(written).collect()
-        rows = sum(r["rows"] for r in lineage_rows)
+        lineage = _footer_lineage(final)
+        rows = sum(lineage.values())
         lineage_tmp = os.path.join(stage_dir, f"_ltmp_{uuid.uuid4().hex[:8]}")
-        spark.createDataFrame(
-            [(int(r["partition_id"]), int(r["rows"])) for r in lineage_rows],
-            schema="partition_id int, rows long",
-        ).write.mode("overwrite").parquet(lineage_tmp)
+        _write_lineage(lineage, lineage_tmp)
         lineage_final = os.path.join(stage_dir, "lineage")
         if os.path.exists(lineage_final):
             shutil.rmtree(lineage_final)
@@ -152,8 +179,8 @@ class ParquetCheckpointIO:
             "rows": rows,
             "secs": round(secs, 3),
             "schema": df.schema.simpleString(),
-            "n_partitions": len(lineage_rows),
-            "max_partition_rows": max((r["rows"] for r in lineage_rows), default=0),
+            "n_partitions": len(lineage),
+            "max_partition_rows": max(lineage.values(), default=0),
             "complete": True,
         }
         mp = self._manifest_path(stage)
@@ -163,11 +190,7 @@ class ParquetCheckpointIO:
         return StageResult(stage, rows, secs, final, reused=False)
 
     def write_or_reuse(
-        self,
-        spark: SparkSession,
-        stage: str,
-        build,
-        partition_by: list[str] | None = None,
+        self, spark: SparkSession, stage: str, build
     ) -> tuple[DataFrame, StageResult]:
         """Resume contract: if the stage is complete under this config
         hash, read it back; otherwise call ``build()`` and persist."""
@@ -177,8 +200,11 @@ class ParquetCheckpointIO:
                 m = json.load(f)
             return df, StageResult(stage, m["rows"], 0.0, self._data_path(stage), reused=True)
         df = build()
-        res = self.write(df, stage, partition_by)
-        return self.read(spark, stage), res
+        res = self.write(df, stage)
+        # the written schema is known: reading with it skips the
+        # footer-sampling schema-inference job (a file source reads
+        # every field back nullable either way)
+        return spark.read.schema(df.schema).parquet(res.path), res
 
     def invalidate(self, stage: str) -> None:
         sd = os.path.join(self.root, stage)

@@ -96,21 +96,24 @@ def _host_sql(col: str) -> str:
     host = f"lower(regexp_extract({col}, '^[^:/?#]+://([^/:?#]+)', 1))"
     return (
         f"CASE WHEN {col} RLIKE '^[^:/?#]+://' THEN "
-        f"regexp_replace({host}, '^www\\\\.', '') END"
+        f"regexp_replace({host}, '^www\\\\.(?=.*\\\\.)', '') END"
     )
 
 
 def url_host(col: str = "url") -> Column:
     """Lowercase host of ``col`` (port and a leading ``www.`` label
-    stripped); NULL for values with no ``scheme://``."""
+    stripped, unless one label would remain: ``www.com`` stays); NULL
+    for values with no ``scheme://``."""
     return F.expr(_host_sql(col))
 
 
 def _norm_blocklist_entry(d: str) -> str:
     """Normalize a blocklist entry the way url_host normalizes hosts:
-    lowercase, strip leading dots, strip one leading 'www.' label."""
+    lowercase, strip leading dots, strip one leading 'www.' label unless
+    one label would remain ('www.com' stripped to 'com' would block the
+    whole TLD)."""
     e = d.lower().lstrip(".")
-    return e[4:] if e.startswith("www.") else e
+    return e[4:] if e.startswith("www.") and "." in e[4:] else e
 
 
 def filter_blocked_domains(
@@ -135,7 +138,8 @@ def filter_blocked_domains(
     spark = docs.sparkSession
     if isinstance(blocklist, list):
         # entries get the SAME normalization as extracted hosts (lower
-        # + leading-dot strip + one leading 'www.' label), so a
+        # + leading-dot strip + one leading 'www.' label unless one
+        # label would remain), so a
         # user-supplied 'www.bad.com' blocks bad.com and its subdomains
         # instead of silently never matching
         bl = spark.createDataFrame(
@@ -145,7 +149,7 @@ def filter_blocked_domains(
         bl = blocklist.toDF("_blocked").select(
             F.regexp_replace(
                 F.regexp_replace(F.lower("_blocked"), r"^\.+", ""),
-                r"^www\.",
+                r"^www\.(?=.*\.)",
                 "",
             ).alias("_blocked")
         )

@@ -1,8 +1,9 @@
-"""Per-stage / per-partition lineage + throughput metrics.
+"""Per-stage throughput metrics.
 
 Reference analog: per-request structured logging of name counts and
 timings (`/root/reference/pkg/gnames_verif.go:166-173`). North_rule
-requires per-partition lineage and docs/sec with each checkpoint.
+requires per-partition lineage and docs/sec with each checkpoint; the
+lineage table is written by the checkpoint store (checkpoint.py).
 """
 
 from __future__ import annotations
@@ -11,9 +12,6 @@ import json
 import os
 import time
 from dataclasses import asdict, dataclass, field
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 @dataclass
@@ -50,14 +48,6 @@ class MetricsCollector:
         os.makedirs(os.path.dirname(path), exist_ok=True)
         with open(path, "w") as f:
             f.write(self.to_json())
-
-
-def partition_lineage(df: DataFrame) -> DataFrame:
-    """(partition_id, rows [, input_file]) — the per-partition lineage
-    rows written alongside each checkpoint (SURVEY §2.9)."""
-    cols = [F.spark_partition_id().alias("partition_id")]
-    lineage = df.select(*cols).groupBy("partition_id").agg(F.count("*").alias("rows"))
-    return lineage
 
 
 def timed(fn):

@@ -20,12 +20,29 @@ Scale notes:
 - Convergence test is a fixed-point check on (edge_count,
   sum(xxhash64(src,dst))) — two scalars per round, no subtract/collect
   of edges.
+- Size-selected evaluation (hybrid evaluation, SIGMOD 2021): every star
+  round costs several Spark jobs whatever the graph's size, so a graph
+  with at most ``LOCAL_FINISH_MAX_EDGES`` normalized edges skips the
+  loop and finishes in ONE task — a vectorized numpy union-find. That
+  is the common case for increments, whose contracted graphs are tiny.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+# Normalized edge count at or below which the components finish in one
+# task. Per-task memory at the bound, E = 10^6 edges of two int64 ids:
+# the Arrow batches and their pandas copy (2 x 16 MB), the 2E endpoint
+# ids and np.unique's sorted copy and inverse (3 x 16 MB), the node ids
+# and parent array (<= 2E nodes, 16 MB each) and each round's gather
+# temporaries — measured 106 MB allocated over the 16 MB input and
+# 0.8 s for 10^6 random edges, so ~140 MB in one Python worker.
+LOCAL_FINISH_MAX_EDGES = 1_000_000
 
 
 def _salted_min_join(nb: DataFrame, mins: DataFrame, salt_buckets: int | None) -> DataFrame:
@@ -113,6 +130,52 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["s"])
 
 
+def _union_find(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(node ids, component min id per node) of an edge list.
+
+    Vectorized hook-and-compress: each round every edge hooks the larger
+    of its endpoints' roots under the smaller (``np.minimum.at`` keeps
+    the smallest bid per root), then pointer jumping flattens every tree
+    to depth one. ``parent[x] <= x`` always holds, so each root is its
+    tree's minimum; a round with a cross-root edge removes at least one
+    root, and the loop stops when every edge joins two nodes of one
+    tree. Nodes are indexed in ascending id order, so the minimum index
+    is the minimum id."""
+    ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    u, v = inv[: len(src)], inv[len(src):]
+    parent = np.arange(len(ids))
+    while True:
+        pu, pv = parent[u], parent[v]
+        cross = pu != pv
+        if not cross.any():
+            break
+        np.minimum.at(parent, np.maximum(pu, pv)[cross], np.minimum(pu, pv)[cross])
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    return ids, ids[parent]
+
+
+def _local_finish(edges: DataFrame) -> DataFrame:
+    """(doc_id, component_id) of a small edge list, in one task: the
+    edges coalesce into one partition (narrow, no shuffle) and one
+    pandas call runs :func:`_union_find` over all of them."""
+    dt = edges.schema["src"].dataType
+    schema = StructType([StructField("doc_id", dt), StructField("component_id", dt)])
+
+    def finish(batches):
+        parts = [b for b in batches if len(b)]
+        if not parts:
+            return
+        pdf = pd.concat(parts, ignore_index=True)
+        ids, comp = _union_find(pdf["src"].to_numpy(), pdf["dst"].to_numpy())
+        yield pd.DataFrame({"doc_id": ids, "component_id": comp})
+
+    return edges.select("src", "dst").coalesce(1).mapInPandas(finish, schema)
+
+
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 50,
@@ -128,6 +191,10 @@ def connected_components(
     `/root/reference/pkg/gnames_verif.go:92-107`). Nodes that appear in
     no edge are absent — callers attach singletons with
     ``all_components``.
+
+    A graph of at most ``LOCAL_FINISH_MAX_EDGES`` normalized edges
+    (counted by the round-0 checksum) finishes in one task instead of
+    the star loop; the assignments are identical.
 
     Fault tolerance: by default each round is ``localCheckpoint``-ed —
     fast, but blocks live on executors, so an executor loss mid-loop
@@ -155,6 +222,12 @@ def connected_components(
 
     e = _cut(_normalize(edges), 0)
     prev = _checksum(e)
+    if prev[0] <= LOCAL_FINISH_MAX_EDGES:
+        if io is None:
+            return _local_finish(e)
+        # one store stage, so a resumed run reuses the finished assignment
+        got, _ = io.write_or_reuse(spark, f"{stage_prefix}_final", lambda: _local_finish(e))
+        return got
     converged = False
     for i in range(max_iterations):
         prev_e = e

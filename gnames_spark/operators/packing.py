@@ -48,24 +48,26 @@ def token_count(text_col: str, tokens_col: str | None) -> F.Column:
     share a token definition): a precomputed count column when
     ``tokens_col`` is plugged, whitespace tokens of ``text_col``
     otherwise. Plugged counts are runtime-VALIDATED — a NULL (missed
-    upstream tokenizer join) or negative count would silently corrupt
-    the disjoint-offset invariant every consumer depends on (NULLs
-    vanish from the window sum; negatives walk the running total
-    backwards into earlier docs' spans), so the job fails fast with the
-    offending value instead."""
+    upstream tokenizer join), negative or non-integral count would
+    silently corrupt the disjoint-offset invariant every consumer
+    depends on (NULLs vanish from the window sum; negatives walk the
+    running total backwards into earlier docs' spans; a cast would
+    truncate 3.9 to 3), so the job fails fast with the offending value
+    instead."""
     if tokens_col is None:
         return F.size(tokens(text_col)).cast("long")
-    n = F.col(tokens_col).cast("long")
+    raw = F.col(tokens_col)
+    n = raw.cast("long")
     return (
-        F.when(n >= 0, n)
+        F.when((n >= 0) & (raw.cast("double") == n.cast("double")), n)
         .otherwise(
             F.raise_error(
                 F.concat(
                     F.lit(
                         f"packing: tokens_col {tokens_col!r} must be a "
-                        "non-negative count, got: "
+                        "non-negative integer count, got: "
                     ),
-                    F.coalesce(n.cast("string"), F.lit("NULL")),
+                    F.coalesce(raw.cast("string"), F.lit("NULL")),
                 )
             ).cast("long")
         )

@@ -112,10 +112,10 @@ class DedupPipeline:
         self._stage_ns = ""
 
     # -- stage helper ------------------------------------------------
-    def _stage(self, name: str, build, partition_by: list[str] | None = None) -> DataFrame:
+    def _stage(self, name: str, build) -> DataFrame:
         name = self._stage_ns + name
         if self.io is not None:
-            df, res = self.io.write_or_reuse(self.spark, name, build, partition_by)
+            df, res = self.io.write_or_reuse(self.spark, name, build)
             self.metrics.record(name, res.rows, res.secs, reused=res.reused)
             return df
         # no checkpoint store: localCheckpoint (persist + LINEAGE CUT) so

@@ -15,6 +15,38 @@ import os
 
 from pyspark.sql import SparkSession
 
+# share of the host's memory a local session's driver JVM may grow to
+# (the JVM commits heap on use, so the ceiling costs nothing when idle)
+DRIVER_MEM_FRACTION = 0.5
+_MEMINFO = "/proc/meminfo"
+
+
+def host_cpus() -> int:
+    """Task slots of a local session: ``SPARK_GRAFT_CPUS`` when set, else
+    the CPUs this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory`` of a local session:
+    ``SPARK_GRAFT_DRIVER_MEM`` when set, else ``DRIVER_MEM_FRACTION`` of
+    ``MemTotal`` in whole GiB (at least 1g; 4g where /proc/meminfo is
+    unreadable)."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open(_MEMINFO) as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "4g"
+    return f"{max(1, int(kb * DRIVER_MEM_FRACTION) // 2**20)}g"
+
 
 def get_spark(
     app_name: str = "gnames_spark",
@@ -49,8 +81,7 @@ def get_spark(
         spark.sparkContext.setLogLevel("WARN")
         return spark
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{host_cpus()}]"
     if shuffle_partitions is None:
         # local[N] → N concurrent tasks; shuffle width ≈ cores. On a real
         # cluster this is overridden via spark-submit --conf to
@@ -84,14 +115,13 @@ def get_spark(
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # local-only sizing: on spark-submit (inherit_master) the UI and
-        # driver memory belong to the submitter. 32g heap: local[32] runs
-        # 32 concurrent tasks whose SHJ build maps share one JVM's
-        # execution memory — 8g measured insufficient at 10^6 docs
-        # (SparkException: can't acquire memory to build hash relation);
-        # the JVM commits heap on use, so the larger -Xmx costs nothing
-        # on smaller runs
+        # driver memory belong to the submitter. The heap is sized to the
+        # host, not to the task count: concurrent tasks' SHJ build maps
+        # share one JVM's execution memory (8g measured insufficient at
+        # 10^6 docs on local[32]: can't acquire memory to build hash
+        # relation), so a big run wants most of the machine
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", driver_memory())
     )
     builder = _tuning(builder)
     if local_dir:

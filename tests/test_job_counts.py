@@ -1,0 +1,77 @@
+"""Spark-job counts of the fixed-cost paths every increment pays.
+
+A job's driver-side cost (planning, scheduling, a Python worker round
+trip) dwarfs the work of a small increment, so these pin the NUMBER of
+jobs, read from the status tracker under a job group:
+
+- a checkpoint stage write launches exactly the jobs of the bare data
+  write (its lineage comes from the parquet footers, on the driver);
+- a small graph's connected components run in a fixed number of jobs,
+  however long its paths are (the local finish replaces the star loop).
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import functions as F
+
+from gnames_spark.checkpoint import ParquetCheckpointIO
+from gnames_spark.operators import components
+from gnames_spark.operators.components import connected_components
+
+
+def _jobs(spark, group: str, fn):
+    """(number of Spark jobs ``fn`` launched, its result)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def _small_df(spark):
+    # one shuffle: under AQE the bare write is two jobs
+    return spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+
+
+class TestCheckpointJobs:
+    def test_write_launches_only_the_data_write(self, spark, tmp_path):
+        df = _small_df(spark)
+        bare, _ = _jobs(spark, "jc_bare", lambda: df.write.parquet(str(tmp_path / "bare")))
+        io = ParquetCheckpointIO(str(tmp_path / "store"), "cfg")
+        ckpt, res = _jobs(spark, "jc_ckpt", lambda: io.write(df, "stage"))
+        assert bare >= 1
+        assert ckpt == bare
+        assert res.rows == 7
+
+    def test_write_or_reuse_reads_back_without_a_job(self, spark, tmp_path):
+        df = _small_df(spark)
+        bare, _ = _jobs(spark, "jc_bare2", lambda: df.write.parquet(str(tmp_path / "bare")))
+        io = ParquetCheckpointIO(str(tmp_path / "store"), "cfg")
+        n, (got, _) = _jobs(spark, "jc_wor", lambda: io.write_or_reuse(spark, "stage", lambda: df))
+        assert n == bare
+        # the explicit-schema read-back sees what schema inference would
+        assert got.schema == spark.read.parquet(str(tmp_path / "store" / "stage" / "data")).schema
+
+
+class TestComponentsJobs:
+    def _path_jobs(self, spark, n_nodes: int, group: str) -> tuple[int, dict]:
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(n_nodes - 1)], "src long, dst long"
+        )
+        n, rows = _jobs(
+            spark, group, lambda: connected_components(edges, max_iterations=50).collect()
+        )
+        return n, {r["doc_id"]: r["component_id"] for r in rows}
+
+    def test_small_graph_jobs_independent_of_diameter(self, spark):
+        assert components.LOCAL_FINISH_MAX_EDGES >= 199
+        short, got_short = self._path_jobs(spark, 3, "jc_cc3")
+        long_, got_long = self._path_jobs(spark, 200, "jc_cc200")
+        assert got_short == {0: 0, 1: 0, 2: 0}
+        assert got_long == {i: 0 for i in range(200)}
+        # round 0 (normalize + checkpoint), its count, one finishing task
+        assert long_ == short <= 6

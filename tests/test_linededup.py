@@ -429,6 +429,32 @@ class TestDomainBlocklist:
         }
         assert kept_df == {4}
 
+    def test_www_tld_entry_does_not_block_the_tld(self, spark):
+        # 'www.com' must not normalize to the bare TLD 'com' (which would
+        # block every .com url): it blocks only the host www.com and its
+        # subdomains, on both the list and the DataFrame branch
+        from gnames_spark.functions.urlnorm import (
+            _norm_blocklist_entry,
+            filter_blocked_domains,
+            url_host,
+        )
+
+        assert _norm_blocklist_entry("WWW.com") == "www.com"
+        assert _norm_blocklist_entry(".www.bad.com") == "bad.com"
+        rows = [
+            (1, "https://www.com/p"),
+            (2, "https://a.www.com/p"),
+            (3, "https://example.com/p"),
+            (4, "https://www.example.com/p"),
+        ]
+        docs = spark.createDataFrame(rows, ["doc_id", "url"])
+        hosts = [r.h for r in docs.orderBy("doc_id").select(url_host("url").alias("h")).collect()]
+        assert hosts == ["www.com", "a.www.com", "example.com", "example.com"]
+        kept = {r.doc_id for r in filter_blocked_domains(docs, ["www.com"]).collect()}
+        assert kept == {3, 4}
+        bl = spark.createDataFrame([("WWW.COM",)], ["domain"])
+        assert {r.doc_id for r in filter_blocked_domains(docs, bl).collect()} == {3, 4}
+
     def test_blocklist_as_dataframe_and_tld_block(self, spark):
         from gnames_spark.functions.urlnorm import filter_blocked_domains
 

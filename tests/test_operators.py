@@ -14,6 +14,7 @@ from gnames_spark.corpus import GROUP_SLOTS, expected_dup_groups, generate_pages
 from gnames_spark.functions.minhash import minhash
 from gnames_spark.functions.shingles import shingle_set, token_hashes
 from gnames_spark.functions.simhash import simhash
+from gnames_spark.operators import components
 from gnames_spark.operators.components import all_components, connected_components
 from gnames_spark.operators.exact import exact_dup_edges, exact_groups, with_content_sha
 from gnames_spark.operators.lsh import lsh_candidates
@@ -319,6 +320,55 @@ class TestComponents:
         assert full == {0: 0, 1: 0, 2: 2, 3: 2, 4: 4, 5: 5, 6: 6, 7: 7}
 
 
+class TestComponentsStarLoop(TestComponents):
+    """TestComponents again with the local finish off: every graph runs
+    the large-star/small-star loop, salting included."""
+
+    @pytest.fixture(autouse=True)
+    def _star_loop(self, monkeypatch):
+        monkeypatch.setattr(components, "LOCAL_FINISH_MAX_EDGES", -1)
+
+
+class TestLocalFinishEqualsStarLoop:
+    """Property: below the bound, the one-task union-find gives exactly
+    the star loop's assignments (and column types)."""
+
+    @staticmethod
+    def _graphs():
+        rng = np.random.RandomState(11)
+        yield "empty", []
+        hub = [(5, leaf) for leaf in range(10_000, 12_000)]  # 2,000-leaf hub
+        yield "hub", hub + [(11_999, 12_500), (12_500, 12_501)]
+        for k, (n_nodes, n_edges) in enumerate([(40, 25), (60, 90), (30, 200)]):
+            e = [(int(a), int(b)) for a, b in rng.randint(0, n_nodes, size=(n_edges, 2))]
+            e += e[: n_edges // 4]                       # duplicate edges
+            e += [(i, i) for i in range(0, n_nodes, 7)]  # self-loops
+            e += [(b, a) for a, b in e[:5]]              # reversed duplicates
+            yield f"random{k}", [(a + 1000 * k, b + 1000 * k) for a, b in e]
+
+    def test_local_finish_equals_star_loop(self, spark, monkeypatch):
+        for name, edges in self._graphs():
+            df = spark.createDataFrame(edges, "src long, dst long")
+            local = connected_components(df, max_iterations=30)
+            assert local.schema.simpleString() == "struct<doc_id:bigint,component_id:bigint>"
+            got = {r["doc_id"]: r["component_id"] for r in local.collect()}
+            with monkeypatch.context() as m:
+                m.setattr(components, "LOCAL_FINISH_MAX_EDGES", -1)
+                star = connected_components(df, max_iterations=30)
+                want = {r["doc_id"]: r["component_id"] for r in star.collect()}
+            assert got == want, name
+            # self-loop-only nodes are absent in both, like the loop's output
+            assert set(got) == {x for a, b in edges if a != b for x in (a, b)}, name
+
+    def test_int_ids_keep_their_type(self, spark):
+        df = spark.createDataFrame([(3, 1), (1, 2), (7, 8)], "src int, dst int")
+        out = connected_components(df)
+        assert out.schema.simpleString() == "struct<doc_id:int,component_id:int>"
+        assert {r["doc_id"]: r["component_id"] for r in out.collect()} == {
+            1: 1, 2: 1, 3: 1, 7: 7, 8: 7
+        }
+
+
 class TestEndToEndClusters:
     def test_golden_cluster_assignments(self, spark, docs, brute_pairs):
         """Pipeline components == union-find over ground-truth edges.
@@ -512,7 +562,7 @@ class TestCCReliableRounds:
         import os as _os
 
         rounds = sorted(d for d in _os.listdir(tmp_path / "cc") if d.startswith("cc_round"))
-        assert len(rounds) >= 2  # round 0 + at least one star round
+        assert len(rounds) >= 2  # round 0 + the finished assignment or star rounds
 
     def test_resume_mid_loop(self, spark, tmp_path):
         """Kill-after-round-k: delete a later round's manifest, rerun —
@@ -537,6 +587,34 @@ class TestCCReliableRounds:
             for r in connected_components(e, io=io2).collect()
         }
         assert again == first
+
+
+class TestCCReliableRoundsStarLoop(TestCCReliableRounds):
+    """Round checkpoints and mid-loop resume of the star loop itself."""
+
+    @pytest.fixture(autouse=True)
+    def _star_loop(self, monkeypatch):
+        monkeypatch.setattr(components, "LOCAL_FINISH_MAX_EDGES", -1)
+
+
+class TestCCLocalFinishStore:
+    def test_finished_assignment_is_one_reused_stage(self, spark, tmp_path):
+        """On the io= path the local finish writes round 0 and ONE
+        finished-assignment stage; a rerun reuses both."""
+        import os as _os
+
+        from gnames_spark.checkpoint import ParquetCheckpointIO
+
+        e = spark.createDataFrame([(1, 2), (2, 3), (9, 8)], "src long, dst long")
+        root = tmp_path / "cc"
+        first = connected_components(e, io=ParquetCheckpointIO(str(root), "cfgC"))
+        want = {1: 1, 2: 1, 3: 1, 8: 8, 9: 8}
+        assert {r["doc_id"]: r["component_id"] for r in first.collect()} == want
+        assert sorted(_os.listdir(root)) == ["cc_round_000", "cc_round_final"]
+        mtime = _os.path.getmtime(root / "cc_round_final" / "_manifest.json")
+        again = connected_components(e, io=ParquetCheckpointIO(str(root), "cfgC"))
+        assert {r["doc_id"]: r["component_id"] for r in again.collect()} == want
+        assert _os.path.getmtime(root / "cc_round_final" / "_manifest.json") == mtime
 
 
 class TestDecontaminate:

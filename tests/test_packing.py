@@ -348,6 +348,21 @@ class TestTokensColPacking:
         with pytest.raises(PySparkException, match="non-negative"):
             pack_sequences(docs, 64, 2, tokens_col="n_tok").collect()
 
+    def test_non_integral_plugged_count_fails_fast(self, spark):
+        # a fractional count (a bad upstream avg/join) must fail, not be
+        # truncated by the cast to long (3.9 silently becoming 3)
+        from pyspark.errors import PySparkException
+
+        docs = spark.createDataFrame([(1, 5.0), (2, 3.9)], "doc_id long, n_tok double")
+        with pytest.raises(PySparkException, match="3.9"):
+            pack_sequences(docs, 64, 2, tokens_col="n_tok").collect()
+        # integral doubles are valid counts and lay out like longs
+        ok = spark.createDataFrame([(1, 5.0), (2, 4.0)], "doc_id long, n_tok double")
+        as_long = ok.withColumn("n_tok", F.col("n_tok").cast("long"))
+        got = pack_sequences(ok, 64, 2, tokens_col="n_tok").orderBy("doc_id").collect()
+        want = pack_sequences(as_long, 64, 2, tokens_col="n_tok").orderBy("doc_id").collect()
+        assert got == want
+
     def test_materialize_rejects_foreign_currency_layout(self, spark):
         # materialize slices whitespace tokens: a tokens_col layout
         # must fail fast with both counts, never silently mis-slice

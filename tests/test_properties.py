@@ -459,3 +459,58 @@ class TestPackingProperties:
         n_seqs = (pos + budget - 1) // budget
         if token_counts and pos > 0:
             assert (pos - 1) // budget == n_seqs - 1
+
+
+def _scalar_components(edges) -> dict[int, int]:
+    """node → min id of its component, by a per-edge union-find."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+class TestUnionFindProperties:
+    """connected_components' one-task finish (``_union_find``) against a
+    scalar union-find, on graphs with duplicate edges, self-loops, hubs
+    and long paths."""
+
+    node_ids = st.integers(min_value=-(1 << 62), max_value=1 << 62)
+
+    @given(st.lists(st.tuples(st.integers(0, 40), st.integers(0, 40)), max_size=120),
+           st.lists(node_ids, min_size=41, max_size=41, unique=True))
+    def test_matches_scalar_union_find(self, edges, relabel):
+        # small index space for dense collisions, then scattered 64-bit ids
+        edges = [(relabel[a], relabel[b]) for a, b in edges]
+        src = np.array([a for a, _ in edges], dtype=np.int64)
+        dst = np.array([b for _, b in edges], dtype=np.int64)
+        from gnames_spark.operators.components import _union_find
+
+        ids, comp = _union_find(src, dst)
+        assert dict(zip(ids.tolist(), comp.tolist())) == _scalar_components(edges)
+
+    @given(st.integers(1, 3000), st.randoms(use_true_random=False))
+    def test_hub_and_shuffled_path(self, n, rnd):
+        from gnames_spark.operators.components import _union_find
+
+        order = list(range(n + 1))
+        rnd.shuffle(order)
+        path = list(zip(order, order[1:]))           # one long path
+        hub = [(n + 1, n + 2 + i) for i in range(n)]  # one n-leaf hub
+        edges = path + hub
+        ids, comp = _union_find(
+            np.array([a for a, _ in edges], dtype=np.int64),
+            np.array([b for _, b in edges], dtype=np.int64),
+        )
+        want = dict.fromkeys(range(n + 1), 0)
+        want.update(dict.fromkeys(range(n + 1, 2 * n + 2), n + 1))
+        assert dict(zip(ids.tolist(), comp.tolist())) == want

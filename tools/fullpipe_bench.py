@@ -26,21 +26,21 @@ sys.path.insert(0, ".")
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     n_trials = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     from pyspark.sql import functions as F
 
     from gnames_spark.config import DedupConfig
     from gnames_spark.pipeline import DedupPipeline
-    from gnames_spark.session import get_spark
+    from gnames_spark.session import get_spark, host_cpus
 
+    cpus = host_cpus()
     spark = get_spark(app_name="fullpipe_bench", master=f"local[{cpus}]")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text", "lang",
         F.concat(F.lit("doc://"), F.col("doc_id")).alias("url"),
     )
     n_docs = docs.count()  # warms the scan + JVM off the clock
-    cfg = DedupConfig(shuffle_partitions=int(cpus))
+    cfg = DedupConfig(shuffle_partitions=cpus)
     trials = []
     for i in range(n_trials):
         t0 = time.monotonic()
@@ -54,7 +54,7 @@ def main() -> int:
     out = {
         "sf_dir": sf_dir,
         "n_docs": n_docs,
-        "cpus": int(cpus),
+        "cpus": cpus,
         "trials": trials,
         "min": min(trials),
         "median": med,
