@@ -9,12 +9,11 @@ is written to a table; a JSON manifest records (stage, config_hash,
 row_count, duration, schema). Rerunning with the same config hash skips
 completed stages; a config change invalidates everything downstream.
 
-Two backends behind one interface (SURVEY §7.5):
-- ``ParquetCheckpointIO`` — parquet directory + ``_manifest.json``,
-  atomic via write-to-tmp-then-rename. Used in this sandbox and tests.
-- ``IcebergCheckpointIO`` — ``writeTo(table).createOrReplace()`` against
-  a configured Iceberg catalog (production path per north_rule). It is
-  config-selected and import-guarded: the sandbox has no Iceberg jar.
+One backend: ``ParquetCheckpointIO`` — parquet directory +
+``_manifest.json``, atomic via write-to-tmp-then-rename. Another backend
+(an Iceberg table store, say) must implement ``ParquetCheckpointIO``'s
+interface: ``is_complete``, ``read``, ``write``, ``write_or_reuse``,
+``manifest_rows`` and ``invalidate``.
 """
 
 from __future__ import annotations
@@ -88,9 +87,9 @@ class ParquetCheckpointIO:
     construction: Spark would resolve the URI scheme while the
     manifests landed under a literal local ``./s3:…`` directory —
     a split-brained store whose resume contract silently never fires.
-    For object-store-backed production checkpoints use
-    :class:`IcebergCheckpointIO` (atomic table replace, no local
-    manifest files, survives an ephemeral cluster-deploy-mode driver).
+    Object-store-backed checkpoints need another backend (an Iceberg
+    table store, say: atomic table replace, no local manifest files);
+    a backend must implement this class's interface.
     """
 
     def __init__(self, root: str, config_hash: str):
@@ -102,8 +101,9 @@ class ParquetCheckpointIO:
                 "files, so a remote root split-brains (data under the "
                 "URI, manifests under a local directory literally "
                 "named after the scheme). Use a driver-visible POSIX "
-                "path (local or shared mount), or IcebergCheckpointIO "
-                "for object-store-backed checkpoints."
+                "path (local or shared mount); object-store-backed "
+                "checkpoints need another backend (e.g. an Iceberg "
+                "table store) implementing ParquetCheckpointIO's interface."
             )
         if low.startswith("file://"):
             root = root[len("file://"):] or "/"
@@ -210,37 +210,3 @@ class ParquetCheckpointIO:
         sd = os.path.join(self.root, stage)
         if os.path.exists(sd):
             shutil.rmtree(sd)
-
-
-class IcebergCheckpointIO:
-    """Iceberg-backed checkpoints (production). Requires the
-    iceberg-spark-runtime jar and a catalog named in ``catalog``;
-    unavailable in this sandbox — selected via PipelineRunner(io=...).
-
-    Semantics mirror ParquetCheckpointIO: atomic stage replacement
-    (``createOrReplace``), manifest stored as table property
-    ``gnames.config_hash``; resume validates the property.
-    """
-
-    def __init__(self, catalog: str, namespace: str, config_hash: str):
-        self.catalog = catalog
-        self.namespace = namespace
-        self.config_hash = config_hash
-
-    def _table(self, stage: str) -> str:
-        return f"{self.catalog}.{self.namespace}.{stage}"
-
-    def is_complete(self, spark: SparkSession, stage: str) -> bool:  # pragma: no cover
-        try:
-            props = spark.sql(f"SHOW TBLPROPERTIES {self._table(stage)}").collect()
-        except Exception:
-            return False
-        kv = {r["key"]: r["value"] for r in props}
-        return kv.get("gnames.config_hash") == self.config_hash
-
-    def write(self, df: DataFrame, stage: str) -> None:  # pragma: no cover
-        (
-            df.writeTo(self._table(stage))
-            .tableProperty("gnames.config_hash", self.config_hash)
-            .createOrReplace()
-        )

@@ -19,10 +19,10 @@ the promoted-batches marker as driver-local files, and
 ParquetCheckpointIO fails fast on object-store/HDFS URIs (the data
 would land under the URI while the manifests split-brained into a
 local directory). Use client deploy-mode so the marker outlives the
-job, or — for object-store-backed checkpoints and cluster deploy-mode,
-where the driver container (and any local marker) is ephemeral — the
-IcebergCheckpointIO backend (checkpoint.py), whose atomic table
-replaces need no local files.
+job. Object-store-backed checkpoints and cluster deploy-mode (where the
+driver container, and any local marker, is ephemeral) need another
+checkpoint backend; a backend must implement ``ParquetCheckpointIO``'s
+interface (checkpoint.py). This repository ships none.
 
 Design rules:
 - The script never chooses a master, executor topology, or driver
@@ -46,6 +46,7 @@ import json
 import sys
 from dataclasses import asdict
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 
@@ -138,7 +139,8 @@ def build_arg_parser() -> argparse.ArgumentParser:
                         "drop docs); repeat = UP-sampling (head stratum "
                         "kept exactly once, low-resource strata repeated "
                         "by deterministic integer+fractional copies; "
-                        "training_set gains a 0-based copy column)")
+                        "training_set and training_layout gain a "
+                        "0-based copy column)")
     p.add_argument("--mix-max-rate", type=float, default=100_000.0,
                    help="repeat-mode guard: the largest per-stratum "
                         "repeat rate allowed (the repeat array costs "
@@ -545,12 +547,24 @@ def main(argv: list[str] | None = None) -> int:
             f"{out}/training_set"
         )
         if args.pack_budget is not None:
-            pack_sequences(
+            layout = pack_sequences(
                 train,
                 args.pack_budget,
                 args.pack_shards,
                 salt=args.pack_salt,
-            ).write.mode("overwrite").parquet(f"{out}/training_layout")
+            )
+            if "copy" in train.columns:
+                # the copies of one doc share its shard and sit at
+                # consecutive offsets; numbering them in offset order
+                # keys the layout by (doc_id, copy) like training_set,
+                # so a join of the two artifacts is 1:1, not n² per doc
+                layout = layout.withColumn(
+                    "copy",
+                    F.row_number().over(
+                        Window.partitionBy("doc_id").orderBy("start_offset")
+                    ) - 1,
+                )
+            layout.write.mode("overwrite").parquet(f"{out}/training_layout")
 
     from gnames_spark.session import _TUNING_CONFS
 

@@ -30,6 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
+from gnames_spark.operators.postings import capped_posting_pairs
+
 
 def _dot_expr(a: str, b: str) -> str:
     return f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), 0.0D, (acc, v) -> acc + v)"
@@ -228,14 +230,23 @@ def blocked_cosine_pairs(
         return pd.DataFrame({"id_a": lo, "id_b": hi})
 
     cands = tagged.groupBy("ba", "bb").applyInPandas(gemm, schema="id_a long, id_b long")
-    # exact join-back cosine (Catalyst sequential fold == oracle rounding)
+    return _join_back_cosine(cands, vectors, id_col, vec_col, round_digits).filter(
+        F.col("cosine") >= threshold
+    )
+
+
+def _join_back_cosine(
+    cands: DataFrame, vectors: DataFrame, id_col: str, vec_col: str, round_digits: int
+) -> DataFrame:
+    """(id_a, id_b) candidates → (id_a, id_b, cosine): both vectors
+    hydrated by joining back on the id, the cosine computed exactly by
+    the Catalyst sequential fold (== the DuckDB oracle's rounding)."""
     va = vectors.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
     vb = vectors.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
     return (
         cands.join(va, "id_a")
         .join(vb, "id_b")
         .withColumn("cosine", F.round(cosine_similarity_col("_va", "_vb"), round_digits))
-        .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
 
@@ -355,52 +366,45 @@ def _banded_candidate_pairs(
     bucket_cap: int | None,
     n_vectors_hint: int | None,
     round_digits: int = 6,
+    base: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared sign-LSH candidate machinery for :func:`ann_dup_pairs` and
-    :func:`ann_topk`: derive banding from (threshold, corpus size),
-    posting self-join per (band, bucket) with the hot-bucket cap,
-    dedup candidates, hydrate vectors by join-back and score exact
-    cosine. Returns ``(candidates_with_cosine, overflow_buckets)`` —
-    candidates are UNFILTERED by the threshold (top-k ranks below-
-    threshold collisions too; the pair miner filters)."""
+    :func:`ann_topk`: derive banding from (threshold, corpus size), run
+    the (band, bucket) postings through the capped posting engine
+    (operators/postings.py), dedup candidates, hydrate vectors by
+    join-back and score exact cosine.
+    Returns ``(candidates_with_cosine, overflow_buckets)`` — candidates
+    are UNFILTERED by the threshold (top-k ranks below-threshold
+    collisions too; the pair miner filters); overflow is
+    ``(band, bucket, n_vecs)``.
+
+    With ``base`` (same schema as ``vectors``), only pairs touching >= 1
+    row of ``vectors`` are generated while caps count base ∪ vectors —
+    the one-sided increment. ``n_vectors_hint`` must then be the
+    combined size, so the banding equals a fresh run's."""
     if n_bands is None:
         if n_vectors_hint is not None:
             band_bits, n_bands = derive_sign_banding(threshold, n_vectors_hint)
         else:
             n_bands = optimal_sign_bands(threshold, band_bits)
     sig = make_banded_hyperplane_udf(dim, n_bands, band_bits, seed)
-    posting = vectors.select(
-        F.col(id_col).alias("vid"),
-        F.posexplode(sig(F.col(vec_col))).alias("band", "bucket"),
-    )
-    spark = vectors.sparkSession
-    if bucket_cap is not None:
-        counts = posting.groupBy("band", "bucket").agg(F.count("*").alias("n_vecs"))
-        overflow = counts.filter(F.col("n_vecs") > bucket_cap)
-        posting = posting.join(
-            overflow.select("band", "bucket"), ["band", "bucket"], "left_anti"
+
+    def posting(df: DataFrame) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias("vid"),
+            F.posexplode(sig(F.col(vec_col))).alias("band", "bucket"),
         )
-    else:
-        overflow = spark.createDataFrame([], "band int, bucket long, n_vecs long")
-    lhs = posting.select("band", "bucket", F.col("vid").alias("id_a"))
-    rhs = posting.select("band", "bucket", F.col("vid").alias("id_b"))
-    cands = (
-        lhs.join(rhs, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
+
+    pairs, overflow = capped_posting_pairs(
+        posting(vectors), ["band", "bucket"], bucket_cap, None,
+        base=None if base is None else posting(base), id_col="vid",
     )
-    va = vectors.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
-    vb = vectors.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
-    scored = (
-        cands.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn(
-            "cosine", F.round(cosine_similarity_col("_va", "_vb"), round_digits)
-        )
-        .select("id_a", "id_b", "cosine")
-    )
-    return scored, overflow
+    cands = pairs.select(
+        F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")
+    ).dropDuplicates(["id_a", "id_b"])
+    allv = vectors if base is None else base.unionByName(vectors)
+    scored = _join_back_cosine(cands, allv, id_col, vec_col, round_digits)
+    return scored, overflow.withColumnRenamed("n_docs", "n_vecs")
 
 
 def ann_dup_pairs(
@@ -414,6 +418,7 @@ def ann_dup_pairs(
     vec_col: str = "embedding",
     bucket_cap: int | None = None,
     n_vectors_hint: int | None = None,
+    base: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """APPROXIMATE near-dup pairs: BANDED sign-LSH — n_bands buckets of
     band_bits hyperplane signs per vector, posting-list self-join per
@@ -439,8 +444,13 @@ def ann_dup_pairs(
 
     ``bucket_cap``: drop (band, bucket) postings holding more than this
     many vectors (returned in overflow, never silent) — same hot-bucket
-    policy as lsh.capped_buckets; dense embedding regions otherwise
-    create quadratic bucket blow-ups at crawl scale.
+    policy as every posting branch (operators/postings.py); dense
+    embedding regions otherwise create quadratic bucket blow-ups at
+    crawl scale.
+
+    ``base`` (same schema as ``vectors``): the one-sided increment —
+    only pairs touching >= 1 row of ``vectors``, caps counted over
+    base ∪ vectors; ``n_vectors_hint`` must then be the combined size.
 
     Plan shape: the posting table carries ONLY (band, bucket, vid) —
     never the vector — so the n_bands-way explode shuffles ~20 bytes
@@ -452,21 +462,6 @@ def ann_dup_pairs(
     (pipeline.verified)."""
     scored, overflow = _banded_candidate_pairs(
         vectors, threshold, dim, n_bands, band_bits, seed,
-        id_col, vec_col, bucket_cap, n_vectors_hint,
+        id_col, vec_col, bucket_cap, n_vectors_hint, base=base,
     )
     return scored.filter(F.col("cosine") >= threshold), overflow
-
-
-def embedding_dup_pairs(
-    vectors: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_blocks: int = 8,
-) -> DataFrame:
-    """All pairs with cosine >= threshold (embedding near-dup dedup).
-    Exact, via :func:`blocked_cosine_pairs` — the previous self
-    crossJoin form is gone (it was the one checked path that could not
-    survive 100×; the blocked form is the same exact result with the
-    work spread over block-pair tasks)."""
-    return blocked_cosine_pairs(vectors, threshold, n_blocks, id_col, vec_col)

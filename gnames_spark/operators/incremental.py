@@ -10,15 +10,15 @@ increment must cost O(|increment| x corpus-postings-touched), never
 O(|corpus|^2) — the base corpus is scanned (once, columnar) but only
 increment-touching pairs are generated, verified, and clustered.
 
-Three pieces:
+The one-sided candidate join (pairs sharing a posting key where >= 1
+endpoint is NEW) is not here: it is the pair join of the capped
+posting engine (operators/postings.py), which every candidate branch
+runs for the full and the incremental path alike. This module holds
+what is specific to folding in:
 
-- :func:`incremental_posting_pairs` — generic one-sided posting join:
-  candidates sharing a posting key where >= 1 endpoint is NEW. The
-  shape every candidate branch (LSH bucket, SimHash chunk, winnowing
-  anchor, shingle posting) reuses.
 - :func:`incremental_jaccard_pairs` — the oracle-grade exact-Jaccard
-  variant of the above (the incremental form of
-  ``verify.exact_jaccard_pairs``).
+  variant of the posting join over shingle postings (the incremental
+  form of ``verify.exact_jaccard_pairs``).
 - :func:`merge_components` — fold the increment's verified edges into
   the standing (doc_id, component_id) assignment by CONTRACTION: old
   components collapse to their component_id (which is the component's
@@ -40,54 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gnames_spark.operators.components import connected_components
-
-
-def tag_postings(old_post: DataFrame, new_post: DataFrame) -> DataFrame:
-    """Union old+new posting tables with the ``_new`` endpoint flag the
-    incremental join filters on."""
-    return old_post.withColumn("_new", F.lit(False)).unionByName(
-        new_post.withColumn("_new", F.lit(True))
-    )
-
-def incremental_posting_pairs(
-    new_post: DataFrame,
-    all_post: DataFrame,
-    keys: list[str],
-    id_col: str = "doc_id",
-    extra_cols: list[str] | None = None,
-) -> DataFrame:
-    """Candidate pairs sharing a posting key, >= 1 NEW endpoint, each
-    pair exactly once.
-
-    ``all_post`` must be ``tag_postings(old, new)`` — it carries the
-    ``_new`` flag. Join condition: a NEW posting meets every OLD
-    posting in its bucket unconditionally (produced once — old docs
-    never sit on the left side), and meets NEW postings only under
-    ``a.id < b.id`` (the classic self-join half). Output is canonical
-    ``doc_a < doc_b``; ``extra_cols`` (e.g. ``simhash``) are emitted as
-    ``<col>_a``/``<col>_b``, swapped consistently with the ids.
-
-    Scale: identical shuffle shape to the full-corpus self-join
-    (repartition by the posting key), but the probe side is only the
-    increment — the base corpus posting table streams through once.
-    """
-    extra_cols = extra_cols or []
-    a, b = new_post.alias("a"), all_post.alias("b")
-    cond = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
-    swap = F.col(f"a.{id_col}") > F.col(f"b.{id_col}")
-    cols = [
-        F.when(swap, F.col(f"b.{id_col}")).otherwise(F.col(f"a.{id_col}")).alias("doc_a"),
-        F.when(swap, F.col(f"a.{id_col}")).otherwise(F.col(f"b.{id_col}")).alias("doc_b"),
-    ]
-    for c in extra_cols:
-        cols.append(F.when(swap, F.col(f"b.{c}")).otherwise(F.col(f"a.{c}")).alias(f"{c}_a"))
-        cols.append(F.when(swap, F.col(f"a.{c}")).otherwise(F.col(f"b.{c}")).alias(f"{c}_b"))
-    return (
-        a.join(b, cond)
-        .filter((~F.col("b._new")) | (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .filter(F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
-        .select(*cols)
-    )
+from gnames_spark.operators.verify import overlap_jaccard, shingle_overlaps
 
 
 def incremental_jaccard_pairs(
@@ -106,30 +59,8 @@ def incremental_jaccard_pairs(
     encoded in the base component assignment that
     :func:`merge_components` folds the new edges into.
     """
-
-    def posting(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias("id"),
-            F.size(set_col).alias("_n"),
-            F.explode(set_col).alias("shingle"),
-        )
-
-    pn = posting(new_sets)
-    pall = tag_postings(posting(base_sets), pn)
-    inter = (
-        incremental_posting_pairs(pn, pall, ["shingle"], id_col="id", extra_cols=["_n"])
-        .groupBy("doc_a", "doc_b", "_n_a", "_n_b")
-        .agg(F.count("*").alias("n_inter"))
-        .filter(F.col("n_inter") >= min_shared)
-    )
-    jac = F.col("n_inter").cast("double") / (
-        F.col("_n_a") + F.col("_n_b") - F.col("n_inter")
-    ).cast("double")
-    return (
-        inter.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= F.lit(threshold))
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    overlaps = shingle_overlaps(new_sets, id_col, set_col, min_shared, base_sets=base_sets)
+    return overlap_jaccard(overlaps, threshold)
 
 
 def merge_components(

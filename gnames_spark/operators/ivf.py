@@ -40,7 +40,7 @@ for scoring. Unlike multi-band LSH every vector lives in EXACTLY ONE
 cell, so candidates need no dedup and the index is not replicated
 n_bands times. k-means cells on real corpora skew (dense regions →
 hot cells): ``cell_cap`` drops over-full cells into an overflow
-DataFrame, never silently (same policy as lsh.capped_buckets). Past
+DataFrame, never silently (same policy as postings.capped_posting_pairs). Past
 the 2^16-cell cap the composition is hierarchical and IMPLEMENTED:
 :func:`train_ivf2` / :func:`ivf2_topk` — a broadcastable coarse level
 plus per-cell fine k-means trained distributedly (one task per coarse

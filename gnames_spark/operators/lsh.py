@@ -1,24 +1,23 @@
-"""LSH banding + bucket self-join → candidate pairs.
+"""LSH banding → candidate pairs.
 
 Reference analog: the candidate-generation join shape is exactly the
-reference's 4-way posting-list equi-join
-(`/root/reference/internal/io/pgio/sp_query.go:19-27`) — docs sharing a
-(band, bucket_hash) key are candidates, as names sharing a word posting
-are. The bucket-size cap is the reference's hot-key truncation
-(>100 results → drop, `/root/reference/internal/io/pgio/match_records_map.go:17-22`):
+reference's 4-way posting-list equi-join (``sp_query.go:19-27``) —
+docs sharing a (band, bucket_hash) key are candidates, as names
+sharing a word posting are. The bucket-size cap is the reference's
+hot-key truncation (>100 results → drop, ``match_records_map.go:17-22``):
 a bucket larger than ``bucket_cap`` is dropped *and counted* — never
-silently (P5 in SURVEY §4).
+silently (P5 in SURVEY §4). The cap, the overflow count and the
+bucket self-join are the capped posting engine's
+(operators/postings.py); this module only builds the band postings.
 
 Scale notes:
 - Band hashing is JVM-side (`slice` + `xxhash64` over the signature
   array) — no Python between the MinHash UDF and the join.
-- The self-join shuffles both sides by (band, bucket_hash); we
-  repartition explicitly so the shuffle width is the configured
-  partition count rather than whatever upstream produced, and AQE's
-  skew-join splitting handles residual imbalance below the cap.
 - Emitted pairs are deduped across bands with one extra shuffle
   (`dropDuplicates`) — at 10^12 docs this is the dominant shuffle, and
   it is unavoidable: it is the set-union of per-band candidate sets.
+  The pipeline's LSH branch (the engine over the stored ``bands``
+  column) skips it: its candidate union dedups all branches at once.
 """
 
 from __future__ import annotations
@@ -27,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gnames_spark.config import DedupConfig
+from gnames_spark.operators.postings import capped_posting_pairs
 
 
 def band_buckets(signatures: DataFrame, cfg: DedupConfig, id_col: str = "doc_id") -> DataFrame:
@@ -44,48 +44,19 @@ def band_buckets(signatures: DataFrame, cfg: DedupConfig, id_col: str = "doc_id"
     )
 
 
-def capped_buckets(buckets: DataFrame, cfg: DedupConfig) -> tuple[DataFrame, DataFrame]:
-    """Split buckets into (kept, overflow_stats).
-
-    overflow_stats = (band, bucket_hash, n_docs) for buckets above the
-    cap — persisted by the pipeline so truncation is observable, the
-    way the reference logs its skipped-record counts
-    (`/root/reference/internal/io/pgio/match_records_map.go:236-239`).
-    """
-    counts = buckets.groupBy("band", "bucket_hash").agg(F.count("*").alias("n_docs"))
-    overflow = counts.filter(F.col("n_docs") > cfg.bucket_cap)
-    kept = buckets.join(overflow.select("band", "bucket_hash"), ["band", "bucket_hash"], "left_anti")
-    return kept, overflow
-
-
-def candidate_pairs(
-    buckets: DataFrame, cfg: DedupConfig, id_col: str = "doc_id", dedup: bool = True
-) -> DataFrame:
-    """Self-join docs sharing an LSH bucket → (doc_a < doc_b, method).
-
-    ``dedup=False`` skips the cross-band dropDuplicates shuffle — used by
-    the pipeline, whose candidate-union stage ends in a per-pair groupBy
-    that dedups all branches at once (one shuffle instead of four)."""
-    kept = buckets.repartition(cfg.shuffle_partitions, "band", "bucket_hash")
-    a = kept.alias("a")
-    b = kept.alias("b")
-    pairs = (
-        a.join(b, ["band", "bucket_hash"], "inner")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-        )
-    )
-    if dedup:
-        pairs = pairs.dropDuplicates(["doc_a", "doc_b"])
-    return pairs.withColumn("method", F.lit("lsh"))
-
-
 def lsh_candidates(
     signatures: DataFrame, cfg: DedupConfig, id_col: str = "doc_id"
 ) -> tuple[DataFrame, DataFrame]:
-    """signatures (doc_id, minhash) → (candidate pairs, overflow stats)."""
-    buckets = band_buckets(signatures, cfg, id_col)
-    kept, overflow = capped_buckets(buckets, cfg)
-    return candidate_pairs(kept, cfg, id_col), overflow
+    """signatures (doc_id, minhash) → (candidate pairs, overflow stats).
+
+    Pairs are ``(doc_a < doc_b, method='lsh')``, deduped across bands;
+    overflow is ``(band, bucket_hash, n_docs)`` for the buckets above
+    ``cfg.bucket_cap``."""
+    pairs, overflow = capped_posting_pairs(
+        band_buckets(signatures, cfg, id_col),
+        ["band", "bucket_hash"],
+        cfg.bucket_cap,
+        cfg.shuffle_partitions,
+        id_col=id_col,
+    )
+    return pairs.dropDuplicates(["doc_a", "doc_b"]).withColumn("method", F.lit("lsh")), overflow

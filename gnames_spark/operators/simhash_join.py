@@ -10,7 +10,8 @@ nested-loop join at any scale; everything is JVM-side.
 
 Skew note: boilerplate families make some chunk values extremely hot
 (thousands of docs agreeing on 16 bits). The same cap-and-log policy as
-LSH buckets applies (reference hot-key truncation analog).
+LSH buckets applies (reference hot-key truncation analog): the chunk
+postings run through the capped posting engine (operators/postings.py).
 """
 
 from __future__ import annotations
@@ -19,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gnames_spark.config import DedupConfig
+from gnames_spark.operators.postings import capped_posting_pairs
 
 
 def simhash_chunks(simhashes: DataFrame, cfg: DedupConfig, id_col: str = "doc_id") -> DataFrame:
@@ -35,36 +37,28 @@ def simhash_chunks(simhashes: DataFrame, cfg: DedupConfig, id_col: str = "doc_id
     )
 
 
+def within_hamming(pairs: DataFrame, d: int) -> DataFrame:
+    """Engine pairs carrying ``simhash_a``/``simhash_b`` → (doc_a,
+    doc_b, hamming) for the pairs within Hamming distance ``d``."""
+    hamming = F.expr("bit_count(simhash_a ^ simhash_b)")
+    return pairs.filter(hamming <= d).select("doc_a", "doc_b", hamming.alias("hamming"))
+
+
 def simhash_candidates(
-    simhashes: DataFrame, cfg: DedupConfig, id_col: str = "doc_id", dedup: bool = True
+    simhashes: DataFrame, cfg: DedupConfig, id_col: str = "doc_id"
 ) -> tuple[DataFrame, DataFrame]:
     """(doc_id, simhash) → (pairs with hamming <= d, overflow stats).
 
     Pairs arrive pre-verified: the popcount filter is exact, so the
     `hamming` column is final (no later join-back needed).
-    ``dedup=False`` skips the cross-chunk dropDuplicates shuffle (the
-    pipeline's candidate union dedups all branches in one groupBy).
     """
-    chunks = simhash_chunks(simhashes, cfg, id_col)
-    counts = chunks.groupBy("chunk_id", "chunk_val").agg(F.count("*").alias("n_docs"))
-    overflow = counts.filter(F.col("n_docs") > cfg.bucket_cap)
-    kept = chunks.join(
-        overflow.select("chunk_id", "chunk_val"), ["chunk_id", "chunk_val"], "left_anti"
-    ).repartition(cfg.shuffle_partitions, "chunk_id", "chunk_val")
-
-    a, b = kept.alias("a"), kept.alias("b")
-    pairs = (
-        a.join(b, ["chunk_id", "chunk_val"], "inner")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .filter(
-            F.expr(f"bit_count(a.simhash ^ b.simhash) <= {cfg.hamming_d}")
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-            F.expr("bit_count(a.simhash ^ b.simhash)").alias("hamming"),
-        )
+    pairs, overflow = capped_posting_pairs(
+        simhash_chunks(simhashes, cfg, id_col),
+        ["chunk_id", "chunk_val"],
+        cfg.bucket_cap,
+        cfg.shuffle_partitions,
+        extra_cols=["simhash"],
+        id_col=id_col,
     )
-    if dedup:
-        pairs = pairs.dropDuplicates(["doc_a", "doc_b"])
+    pairs = within_hamming(pairs, cfg.hamming_d).dropDuplicates(["doc_a", "doc_b"])
     return pairs.withColumn("method", F.lit("simhash")), overflow

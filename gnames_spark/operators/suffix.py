@@ -12,8 +12,8 @@ Two stages:
    defined sample). Two docs sharing a >=512-char substring of k-word
    shingles share ~that-many shingles, so they share an anchor with
    probability ~1-(1-1/q)^(L/q)... in practice >=1 anchor almost surely.
-   Self-join posting lists of anchors (same J1 join shape as LSH),
-   capped per anchor like LSH buckets.
+   Self-join posting lists of anchors through the capped posting
+   engine (the same J1 join shape and per-key cap as LSH buckets).
 2. **LCS verification** (grouped pandas UDF): exact longest-common-
    substring length per candidate pair via binary search over rolling
    hashes (two 31-bit moduli + direct string confirmation — collision-
@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gnames_spark.config import DedupConfig
+from gnames_spark.operators.postings import capped_posting_pairs
 
 _P1, _B1 = np.uint64(2147483647), np.uint64(1000003)      # 2^31-1
 _P2, _B2 = np.uint64(2147483629), np.uint64(100019)
@@ -215,37 +216,34 @@ def anchor_candidates(
     return anchor_pairs_from_anchors(anchors, cfg, id_col)
 
 
+def shared_anchor_pairs(pairs: DataFrame, min_shared: int) -> DataFrame:
+    """Keep the anchor-engine pairs sharing >= ``min_shared`` distinct
+    anchors (one engine row per shared anchor; deduped as a side effect
+    when ``min_shared > 1``). >= min_substring_len shared chars
+    guarantees >= 2 distinct winnow anchors (see config); single shared
+    anchors are overwhelmingly shingle coincidences in low-entropy text
+    and would flood the LCS verifier."""
+    if min_shared <= 1:
+        return pairs.select("doc_a", "doc_b")
+    return (
+        pairs.groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias("_n_shared"))
+        .filter(F.col("_n_shared") >= min_shared)
+        .drop("_n_shared")
+    )
+
+
 def anchor_pairs_from_anchors(
-    anchors: DataFrame, cfg: DedupConfig, id_col: str = "doc_id", dedup: bool = True
+    anchors: DataFrame, cfg: DedupConfig, id_col: str = "doc_id"
 ) -> tuple[DataFrame, DataFrame]:
     """(doc_id, anchor) posting list → (candidate pairs, overflow stats).
-    Used directly by the pipeline, whose fused signature kernel emits the
-    anchor sample as a column (functions/sigkernel.py). ``dedup=False``
-    skips the cross-anchor dropDuplicates shuffle (the pipeline's
-    candidate union dedups all branches in one groupBy)."""
-    counts = anchors.groupBy("anchor").agg(F.count("*").alias("n_docs"))
-    overflow = counts.filter(F.col("n_docs") > cfg.anchor_cap)
-    kept = anchors.join(overflow.select("anchor"), "anchor", "left_anti").repartition(
-        cfg.shuffle_partitions, "anchor"
+    The anchors run through the capped posting engine
+    (operators/postings.py) with ``cfg.anchor_cap``."""
+    pairs, overflow = capped_posting_pairs(
+        anchors, ["anchor"], cfg.anchor_cap, cfg.shuffle_partitions, id_col=id_col
     )
-    a, b = kept.alias("a"), kept.alias("b")
-    pairs = (
-        a.join(b, "anchor", "inner")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b"))
-    )
-    if cfg.min_shared_anchors > 1:
-        # >= min_substring_len shared chars guarantees >= 2 distinct
-        # winnow anchors (see config); single shared anchors are
-        # overwhelmingly shingle coincidences in low-entropy text and
-        # would flood the LCS verifier (dedups the pair as a side effect)
-        pairs = (
-            pairs.groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("_n_shared"))
-            .filter(F.col("_n_shared") >= cfg.min_shared_anchors)
-            .drop("_n_shared")
-        )
-    elif dedup:
+    pairs = shared_anchor_pairs(pairs, cfg.min_shared_anchors)
+    if cfg.min_shared_anchors <= 1:
         pairs = pairs.dropDuplicates(["doc_a", "doc_b"])
     return pairs.withColumn("method", F.lit("anchor")), overflow
 

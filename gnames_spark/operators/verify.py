@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gnames_spark.config import DedupConfig
+from gnames_spark.operators.postings import capped_posting_pairs
 
 
 @F.pandas_udf(T.DoubleType())
@@ -82,6 +83,52 @@ def verify_pairs(
     )
 
 
+def shingle_overlaps(
+    shingle_sets: DataFrame,
+    id_col: str = "doc_id",
+    set_col: str = "shingle_set",
+    min_shared: int = 1,
+    base_sets: DataFrame | None = None,
+) -> DataFrame:
+    """(doc_a < doc_b, n_a, n_b, n_inter) for every pair sharing >=
+    ``min_shared`` shingles: set sizes and intersection size.
+
+    Any pair with a nonzero overlap shares >= 1 shingle, so the exact
+    pair set is the self-join of the exploded (shingle, doc) posting
+    list — the capped posting engine (operators/postings.py) with no
+    cap. Intersection sizes come from the group count; no arrays are
+    shuffled. With ``base_sets`` (same schema), only pairs touching >=
+    1 row of ``shingle_sets`` are generated — the incremental form.
+    """
+
+    def posting(df: DataFrame) -> DataFrame:
+        return df.select(id_col, F.size(set_col).alias("_n"), F.explode(set_col).alias("shingle"))
+
+    pairs, _ = capped_posting_pairs(
+        posting(shingle_sets), ["shingle"], None, None,
+        base=None if base_sets is None else posting(base_sets),
+        extra_cols=["_n"], id_col=id_col,
+    )
+    return (
+        pairs.groupBy("doc_a", "doc_b", F.col("_n_a").alias("n_a"), F.col("_n_b").alias("n_b"))
+        .agg(F.count("*").alias("n_inter"))
+        .filter(F.col("n_inter") >= min_shared)
+    )
+
+
+def overlap_jaccard(overlaps: DataFrame, threshold: float) -> DataFrame:
+    """:func:`shingle_overlaps` rows → (doc_a, doc_b, jaccard) for the
+    pairs at jaccard >= threshold; the union size is |A|+|B|-|A∩B|."""
+    jac = F.col("n_inter").cast("double") / (
+        F.col("n_a") + F.col("n_b") - F.col("n_inter")
+    ).cast("double")
+    return (
+        overlaps.withColumn("jaccard", jac)
+        .filter(F.col("jaccard") >= F.lit(threshold))
+        .select("doc_a", "doc_b", "jaccard")
+    )
+
+
 def exact_jaccard_pairs(
     shingle_sets: DataFrame,
     threshold: float,
@@ -89,41 +136,13 @@ def exact_jaccard_pairs(
     set_col: str = "shingle_set",
     min_shared: int = 1,
 ) -> DataFrame:
-    """EXACT all-pairs Jaccard >= threshold, without a cross join.
-
-    Any pair with jaccard > 0 shares >= 1 shingle, so the exact
-    candidate set is the self-join of the exploded (shingle, doc)
-    posting list — the same J1 posting-list shape. Intersection sizes
-    come from the group count, union from |A|+|B|-|A∩B|; no arrays are
-    shuffled. This is the *oracle-grade* exact algorithm (used by the
-    recall gate and the DuckDB-comparable query); LSH replaces it at
-    scale only because the posting-list join explodes on huge corpora.
+    """EXACT all-pairs Jaccard >= threshold, without a cross join: the
+    shingle-posting self-join of :func:`shingle_overlaps`. This is the
+    *oracle-grade* exact algorithm (used by the recall gate and the
+    DuckDB-comparable query); LSH replaces it at scale only because the
+    posting-list join explodes on huge corpora.
     """
-    sized = shingle_sets.select(id_col, F.size(set_col).alias("_n"), set_col)
-    posting = sized.select(
-        F.col(id_col), F.col("_n"), F.explode(set_col).alias("shingle")
-    )
-    a, b = posting.alias("a"), posting.alias("b")
-    inter = (
-        a.join(b, "shingle", "inner")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .groupBy(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-            F.col("a._n").alias("n_a"),
-            F.col("b._n").alias("n_b"),
-        )
-        .agg(F.count("*").alias("n_inter"))
-        .filter(F.col("n_inter") >= min_shared)
-    )
-    jac = F.col("n_inter").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    ).cast("double")
-    return (
-        inter.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= F.lit(threshold))
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return overlap_jaccard(shingle_overlaps(shingle_sets, id_col, set_col, min_shared), threshold)
 
 
 def containment_pairs(
@@ -149,26 +168,10 @@ def containment_pairs(
     shuffled, no cross join); at crawl scale run it on LSH/anchor
     candidates rather than all pairs, exactly like the Jaccard verify.
     """
-    sized = shingle_sets.select(id_col, F.size(set_col).alias("_n"), set_col)
-    posting = sized.select(
-        F.col(id_col), F.col("_n"), F.explode(set_col).alias("shingle")
-    )
-    a, b = posting.alias("a"), posting.alias("b")
-    inter = (
-        a.join(b, "shingle", "inner")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .groupBy(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-            F.col("a._n").alias("n_a"),
-            F.col("b._n").alias("n_b"),
-        )
-        .agg(F.count("*").alias("n_inter"))
-        .filter(F.col("n_inter") >= min_shared)
-    )
     cont = F.col("n_inter").cast("double") / F.least("n_a", "n_b").cast("double")
     return (
-        inter.withColumn("containment", cont)
+        shingle_overlaps(shingle_sets, id_col, set_col, min_shared)
+        .withColumn("containment", cont)
         .filter(F.col("containment") >= F.lit(threshold))
         .select("doc_a", "doc_b", "containment")
     )

@@ -12,6 +12,13 @@ reference (gnmatcher + PostgreSQL) — collapse into joins inside one
 engine. Every stage checkpoints through CheckpointIO so a killed run
 resumes (north_rule), and per-stage metrics record docs/sec.
 
+The LSH, SimHash and anchor branches are described once, as data
+(:class:`_PostingBranch`), and run through the one capped posting
+engine (operators/postings.py). A full run is an increment with no
+base: ``run_incremental`` calls the same ``candidates`` and
+``embedding_pairs`` stages with the base tables, which makes their
+posting joins one-sided.
+
 Scale defaults baked in: html is dropped immediately after extraction
 (column pruning — it dominates bytes, SURVEY §4 P2); exact-dup
 representatives screen the corpus before the expensive branches (early-
@@ -22,7 +29,10 @@ the reporting edge.
 
 from __future__ import annotations
 
+import time
 import uuid
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,25 +48,34 @@ from gnames_spark.operators.exact import (
     exact_dup_edges,
     with_content_sha,
 )
-from gnames_spark.operators.incremental import (
-    incremental_posting_pairs,
-    merge_cluster_summary,
-    merge_components,
-    tag_postings,
-)
-from gnames_spark.operators.embeddings import (
-    ann_dup_pairs,
-    cosine_similarity_col,
-    derive_sign_banding,
-    make_banded_hyperplane_udf,
-)
-from gnames_spark.operators.lsh import candidate_pairs as lsh_bucket_pairs
-from gnames_spark.operators.lsh import capped_buckets
+from gnames_spark.operators.embeddings import ann_dup_pairs
+from gnames_spark.operators.incremental import merge_cluster_summary, merge_components
+from gnames_spark.operators.postings import capped_posting_pairs
 from gnames_spark.operators.representatives import cluster_summary, select_representatives
 from gnames_spark.operators.scoring import method_rank_col, pair_score
-from gnames_spark.operators.simhash_join import simhash_candidates, simhash_chunks
-from gnames_spark.operators.suffix import anchor_pairs_from_anchors, substring_verify
+from gnames_spark.operators.simhash_join import simhash_chunks, within_hamming
+from gnames_spark.operators.suffix import shared_anchor_pairs, substring_verify
 from gnames_spark.operators.verify import verify_pairs
+
+
+class _PostingBranch(NamedTuple):
+    """One posting candidate branch as data; ``pair_filter`` maps the
+    engine's pairs to the branch's (doc_a, doc_b) candidates."""
+
+    method: str
+    overflow_metric: str
+    postings: Callable[[DataFrame], DataFrame]
+    keys: tuple[str, ...]
+    cap: int
+    extra_cols: tuple[str, ...] = ()
+    pair_filter: Callable[[DataFrame], DataFrame] = lambda pairs: pairs
+
+
+def _passed_edges(verified: DataFrame) -> DataFrame:
+    """The passed verified pairs as (src, dst) graph edges."""
+    return verified.filter("passed").select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    )
 
 
 class DedupPipeline:
@@ -117,78 +136,47 @@ class DedupPipeline:
         if self.io is not None:
             df, res = self.io.write_or_reuse(self.spark, name, build)
             self.metrics.record(name, res.rows, res.secs, reused=res.reused)
-            return df
-        # no checkpoint store: localCheckpoint (persist + LINEAGE CUT) so
-        # downstream stages (each consumed 2-4x) never recompute upstream
-        # work — the in-memory analog of the checkpoint write. The
-        # lineage cut matters as much as the caching: with plain persist
-        # the logical plan of every stage nests all upstream plans, and
-        # driver-side analysis goes combinatorial once run_incremental
-        # unions base-run lineages into increment stages (measured: a
-        # count over a 1,321-row persisted table spent 96 s in the
-        # analyzer before this cut).
-        import time as _time
-
-        t0 = _time.monotonic()
-        df = build().localCheckpoint(eager=True)
-        rows = df.count()
-        self.metrics.record(name, rows, _time.monotonic() - t0)
+        else:
+            # no checkpoint store: localCheckpoint (persist + LINEAGE
+            # CUT) so downstream stages (each consumed 2-4x) never
+            # recompute upstream work — the in-memory analog of the
+            # checkpoint write. The lineage cut matters as much as the
+            # caching: with plain persist the logical plan of every stage
+            # nests all upstream plans, and driver-side analysis goes
+            # combinatorial once run_incremental unions base-run
+            # lineages into increment stages (measured: a count over a
+            # 1,321-row persisted table spent 96 s in the analyzer
+            # before this cut).
+            t0 = time.monotonic()
+            df = build().localCheckpoint(eager=True)
+            self.metrics.record(name, df.count(), time.monotonic() - t0)
+        # the overflow tables the build persisted were double-consumed
+        # (stats collect + anti-join); the stage is materialized now, so
+        # release the cached partitions
+        for o in self._overflow_cache:
+            o.unpersist()
+        self._overflow_cache.clear()
         return df
 
-    def _record_overflow(self, name: str, overflow: DataFrame) -> DataFrame:
+    def _record_overflow(
+        self, name: str, overflow: DataFrame, count_col: str = "n_docs"
+    ) -> DataFrame:
         """Hot-bucket truncation is NEVER silent (north_rule / SURVEY §4
-        P5): record how many buckets were dropped and how many docs they
-        held — the analog of the reference logging skipped-record counts.
+        P5): record how many buckets were dropped and how many docs
+        (``count_col``) they held — the analog of the reference logging
+        skipped-record counts.
 
         The overflow DF is persisted first: it is consumed twice (this
         stats collect + the branch's anti-join) and is tiny. The
-        persisted handle is returned so the candidates stage can
-        unpersist it once the stage is materialized (otherwise cached
-        partitions accumulate for the session lifetime)."""
+        persisted handle is returned; :meth:`_stage` unpersists it once
+        the stage is materialized."""
         overflow = overflow.persist()
         self._overflow_cache.append(overflow)
         row = overflow.agg(
-            F.count("*").alias("n"), F.coalesce(F.sum("n_docs"), F.lit(0)).alias("docs")
+            F.count("*").alias("n"), F.coalesce(F.sum(count_col), F.lit(0)).alias("docs")
         ).collect()[0]
         self.metrics.record(self._stage_ns + name, int(row["n"]), 0.0, dropped_docs=int(row["docs"]))
         return overflow
-
-    @staticmethod
-    def _strongest_with_overflow(branches: list[DataFrame], overflow_docs: DataFrame | None) -> DataFrame:
-        """Union candidate branches, keep the strongest method per pair,
-        and attach the anchor_overflow flag (shared tail of the full and
-        incremental candidate stages). anchor outranks lsh/simhash: the
-        verified stage routes Jaccard-failed anchor pairs into the
-        substring LCS check, so a pair co-detected by lsh must not lose
-        its anchor tag (a substring dup at J<tau would silently skip LCS
-        otherwise)."""
-        out = branches[0]
-        for b in branches[1:]:
-            out = out.unionByName(b)
-        out = (
-            out.groupBy("doc_a", "doc_b")
-            .agg(F.max_by("method", F.when(F.col("method") == "exact", 4)
-                          .when(F.col("method") == "anchor", 3)
-                          .when(F.col("method") == "lsh", 2)
-                          .otherwise(1)).alias("method"))
-        )
-        if overflow_docs is None:
-            return out.withColumn("anchor_overflow", F.lit(False))
-        ova = overflow_docs.select(
-            F.col("doc_id").alias("doc_a"), F.col("_anchor_ov").alias("_ova")
-        )
-        ovb = overflow_docs.select(
-            F.col("doc_id").alias("doc_b"), F.col("_anchor_ov").alias("_ovb")
-        )
-        return (
-            out.join(F.broadcast(ova), "doc_a", "left")
-            .join(F.broadcast(ovb), "doc_b", "left")
-            .withColumn(
-                "anchor_overflow",
-                F.coalesce("_ova", F.lit(False)) | F.coalesce("_ovb", F.lit(False)),
-            )
-            .drop("_ova", "_ovb")
-        )
 
     # -- stages --------------------------------------------------------
     # The full hygiene chain is the composition of the two phases below;
@@ -385,7 +373,7 @@ class DedupPipeline:
 
         return self._stage("docs", build)
 
-    def signatures(self, docs: DataFrame) -> DataFrame:
+    def signatures(self, docs: DataFrame, exclude: DataFrame | None = None) -> DataFrame:
         """One row per DISTINCT content: LSH band hashes + simhash +
         shingle count + anchor sample, all from ONE fused Arrow kernel
         (functions/sigkernel.py — no interpreted JVM lambdas, no wide
@@ -393,11 +381,16 @@ class DedupPipeline:
 
         Exact duplicates are signed once (early-exit cascade) — at web
         scale this is a huge saving (Common Crawl is ~50%+ exact dups).
+        ``exclude`` (doc_id): representatives not to sign —
+        :meth:`run_incremental`'s byte-identity-linked docs, whose
+        content the base already signed (a small table, broadcast).
         """
         cfg = self.cfg
 
         def build():
             reps = distinct_content(docs)
+            if exclude is not None:
+                reps = reps.join(F.broadcast(exclude.select("doc_id")), "doc_id", "left_anti")
             sig = make_signature_udf(cfg)
             return (
                 reps.select("doc_id", sig(F.col("text")).alias("sig"))
@@ -407,56 +400,109 @@ class DedupPipeline:
 
         return self._stage("signatures", build)
 
-    def candidates(self, docs: DataFrame, signatures: DataFrame) -> DataFrame:
+    def _posting_branches(self) -> list[_PostingBranch]:
+        """The enabled branches; postings build from a signature table."""
+        cfg = self.cfg
+        branches = [_PostingBranch(
+            "lsh", "lsh_overflow_buckets",
+            lambda s: s.select("doc_id", F.posexplode("bands").alias("band", "bucket_hash")),
+            ("band", "bucket_hash"), cfg.bucket_cap,
+        )]
+        if self.enable_simhash:
+            branches.append(_PostingBranch(
+                "simhash", "simhash_overflow_chunks",
+                lambda s: simhash_chunks(s.select("doc_id", "simhash"), cfg),
+                ("chunk_id", "chunk_val"), cfg.bucket_cap, ("simhash",),
+                lambda p: within_hamming(p, cfg.hamming_d),
+            ))
+        if self.enable_substring:
+            branches.append(_PostingBranch(
+                "anchor", "anchor_overflow",
+                lambda s: s.select("doc_id", F.explode("anchors").alias("anchor")),
+                ("anchor",), cfg.anchor_cap,
+                pair_filter=lambda p: shared_anchor_pairs(p, cfg.min_shared_anchors),
+            ))
+        return branches
+
+    def candidates(
+        self,
+        docs: DataFrame,
+        signatures: DataFrame,
+        base_signatures: DataFrame | None = None,
+        link_edges: DataFrame | None = None,
+    ) -> DataFrame:
         """Union of the candidate branches (U2 analog: the reference
         unions canonical+virus hydration results,
-        /root/reference/internal/io/pgio/match_records_map.go:143-144)."""
+        ``match_records_map.go:143-144``).
+
+        With ``base_signatures`` this is the one-sided form
+        :meth:`run_incremental` uses: each branch's postings combine
+        base + ``signatures`` so caps see the TRUE bucket sizes
+        (identical overflow behavior to a full recompute), but only
+        pairs touching >= 1 doc of ``signatures`` are generated —
+        old-vs-old connectivity already lives in the base component
+        assignment. ``link_edges`` (doc_a, doc_b, method) join the exact
+        branch: the increment's byte-identity edges to base docs."""
         cfg = self.cfg
 
         def build():
-            exact = exact_dup_edges(docs).select("doc_a", "doc_b", "method")
-            nonempty = signatures.filter(F.col("n_shingles") > 0)
-            buckets = nonempty.select(
-                "doc_id", F.posexplode("bands").alias("band", "bucket_hash")
-            )
-            kept, lsh_overflow = capped_buckets(buckets, cfg)
-            lsh_pairs = lsh_bucket_pairs(kept, cfg, dedup=False)
-            self._record_overflow("lsh_overflow_buckets", lsh_overflow)
-            branches = [exact, lsh_pairs.select("doc_a", "doc_b", "method")]
-            if self.enable_simhash:
-                sim_pairs, sim_overflow = simhash_candidates(
-                    nonempty.select("doc_id", "simhash"), cfg, dedup=False
-                )
-                self._record_overflow("simhash_overflow_chunks", sim_overflow)
-                branches.append(sim_pairs.select("doc_a", "doc_b", "method"))
+            pairs = exact_dup_edges(docs).select("doc_a", "doc_b", "method")
+            if link_edges is not None:
+                pairs = pairs.unionByName(link_edges)
+            new = signatures.filter(F.col("n_shingles") > 0)
+            old = None if base_signatures is None else base_signatures.filter(F.col("n_shingles") > 0)
             overflow_docs = None
-            if self.enable_substring:
-                anchors = nonempty.select("doc_id", F.explode("anchors").alias("anchor"))
-                anc_pairs, anc_overflow = anchor_pairs_from_anchors(
-                    anchors, cfg, dedup=False
+            for br in self._posting_branches():
+                new_post = br.postings(new)
+                old_post = None if old is None else br.postings(old)
+                found, overflow = capped_posting_pairs(
+                    new_post, br.keys, br.cap, cfg.shuffle_partitions,
+                    base=old_post, extra_cols=br.extra_cols,
                 )
-                anc_overflow = self._record_overflow("anchor_overflow", anc_overflow)
-                branches.append(anc_pairs.select("doc_a", "doc_b", "method"))
-                # docs whose anchors sat in a dropped (overflowed) bucket
-                # lost their chance at the anchor tag — remember them so
-                # the verify stage can still route their Jaccard-failed
-                # pairs to the substring LCS check (cap must truncate
-                # work, never silently truncate RECALL)
-                overflow_docs = (
-                    anchors.join(anc_overflow.select("anchor"), "anchor", "left_semi")
-                    .select("doc_id")
-                    .distinct()
-                    .withColumn("_anchor_ov", F.lit(True))
+                overflow = self._record_overflow(br.overflow_metric, overflow)
+                pairs = pairs.unionByName(
+                    br.pair_filter(found).select("doc_a", "doc_b", F.lit(br.method).alias("method"))
                 )
-            return self._strongest_with_overflow(branches, overflow_docs)
+                if br.method == "anchor":
+                    # docs whose anchors sat in a dropped (overflowed)
+                    # bucket lost their chance at the anchor tag —
+                    # remember them so the verify stage can still route
+                    # their Jaccard-failed pairs to the substring LCS
+                    # check (cap must truncate work, never silently
+                    # truncate RECALL)
+                    posts = new_post if old_post is None else old_post.unionByName(new_post)
+                    overflow_docs = (
+                        posts.join(overflow.select(*br.keys), list(br.keys), "left_semi")
+                        .select("doc_id")
+                        .distinct()
+                    )
+            # one groupBy dedups every branch, keeping the strongest
+            # method per pair. anchor outranks lsh/simhash: the verified
+            # stage routes Jaccard-failed anchor pairs into the
+            # substring LCS check, so a pair co-detected by lsh must not
+            # lose its anchor tag (a substring dup at J<tau would
+            # silently skip LCS otherwise)
+            out = pairs.groupBy("doc_a", "doc_b").agg(
+                F.max_by("method", F.when(F.col("method") == "exact", 4)
+                         .when(F.col("method") == "anchor", 3)
+                         .when(F.col("method") == "lsh", 2)
+                         .otherwise(1)).alias("method")
+            )
+            if overflow_docs is None:
+                return out.withColumn("anchor_overflow", F.lit(False))
+            ova = overflow_docs.select(F.col("doc_id").alias("doc_a"), F.lit(True).alias("_ova"))
+            ovb = overflow_docs.select(F.col("doc_id").alias("doc_b"), F.lit(True).alias("_ovb"))
+            return (
+                out.join(F.broadcast(ova), "doc_a", "left")
+                .join(F.broadcast(ovb), "doc_b", "left")
+                .withColumn(
+                    "anchor_overflow",
+                    F.coalesce("_ova", F.lit(False)) | F.coalesce("_ovb", F.lit(False)),
+                )
+                .drop("_ova", "_ovb")
+            )
 
-        df = self._stage("candidate_pairs", build)
-        # overflow stats were double-consumed (collect + anti-join);
-        # stage is materialized now, so release the cached partitions
-        for o in self._overflow_cache:
-            o.unpersist()
-        self._overflow_cache.clear()
-        return df
+        return self._stage("candidate_pairs", build)
 
     def verified(self, candidates: DataFrame, signatures: DataFrame, docs: DataFrame) -> DataFrame:
         cfg = self.cfg
@@ -561,12 +607,8 @@ class DedupPipeline:
         cfg = self.cfg
 
         def build():
-            edges = (
-                verified.filter("passed")
-                .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-            )
             assign = connected_components(
-                edges,
+                _passed_edges(verified),
                 max_iterations=cfg.max_cc_iterations,
                 io=self.io if self.cc_checkpoint_rounds else None,
                 salt_buckets=cfg.cc_salt_buckets,
@@ -609,19 +651,28 @@ class DedupPipeline:
         })
         return out
 
-    def embedding_pairs(self, embeddings: DataFrame) -> DataFrame:
+    def embedding_pairs(
+        self, embeddings: DataFrame, base_embeddings: DataFrame | None = None
+    ) -> DataFrame:
         """The embedding-cosine near-dup modality: banded sign-LSH
         candidates (size-aware banding — never n²) + exact-cosine verify
         at ``cfg.emb_threshold`` (operators/embeddings.ann_dup_pairs).
-        Returns verified-shaped edges with ``method='embedding'`` and
-        the cosine carried alongside; hot buckets are capped at
-        ``cfg.emb_bucket_cap`` and logged like every other branch.
+        Returns verified-shaped edges with
+        ``method='embedding'`` and the cosine carried alongside; hot
+        buckets are capped at ``cfg.emb_bucket_cap`` and logged like
+        every other branch.
 
         This is the one modality that catches semantic twins whose TEXT
         differs (paraphrase, near-rewrite) — byte/shingle methods cannot.
-        Incremental analog: sign-LSH postings are (band, bucket) rows,
-        the same shape tag_postings/incremental_posting_pairs already
-        one-side for LSH/SimHash — see run_incremental's docstring."""
+
+        With ``base_embeddings`` (:meth:`run_incremental`): the
+        one-sided form. Banding is derived from the COMBINED size —
+        exactly what a fresh run over old ∪ new would derive — caps see
+        combined bucket sizes, and only pairs touching >= 1 row of
+        ``embeddings`` generate. Unlike the text path (whose band
+        columns are STORED in the signatures table), base postings
+        recompute each increment — a hyperplane matmul over the base
+        embeddings."""
         cfg = self.cfg
 
         def build():
@@ -636,20 +687,13 @@ class DedupPipeline:
                     "doc_a long, doc_b long, method string, jaccard double, "
                     "passed boolean, cosine double",
                 )
-            dim = len(first[0])
-            n_hint = embeddings.count()
+            combined = embeddings if base_embeddings is None else base_embeddings.unionByName(embeddings)
+            n_total = combined.count()
             pairs, overflow = ann_dup_pairs(
-                embeddings,
-                cfg.emb_threshold,
-                dim=dim,
-                id_col="doc_id",
-                vec_col="embedding",
-                bucket_cap=cfg.emb_bucket_cap,
-                n_vectors_hint=n_hint,
+                embeddings, cfg.emb_threshold, dim=len(first[0]), id_col="doc_id",
+                bucket_cap=cfg.emb_bucket_cap, n_vectors_hint=n_total, base=base_embeddings,
             )
-            self._record_overflow(
-                "emb_overflow_buckets", overflow.withColumnRenamed("n_vecs", "n_docs")
-            )
+            self._record_overflow("emb_overflow_buckets", overflow, count_col="n_vecs")
             return pairs.select(
                 F.col("id_a").alias("doc_a"),
                 F.col("id_b").alias("doc_b"),
@@ -659,93 +703,7 @@ class DedupPipeline:
                 F.col("cosine"),
             )
 
-        df = self._stage("embedding_pairs", build)
-        for o in self._overflow_cache:
-            o.unpersist()
-        self._overflow_cache.clear()
-        return df
-
-    def _incremental_embedding_pairs(
-        self, base_emb: DataFrame | None, new_emb: DataFrame
-    ) -> DataFrame:
-        """One-sided embedding candidate generation for an increment:
-        sign-LSH postings over base+new (banding derived from the
-        COMBINED size — exactly what a fresh run over old ∪ new would
-        derive, so the identity-with-fresh-run property the rest of the
-        incremental suite proves extends to this branch), caps see true
-        combined bucket sizes, the pair join probes only increment
-        postings (old-vs-old pairs never generate — their edges live in
-        the base verified set), exact-cosine verify hydrates only pair
-        participants.
-
-        Unlike the text path (whose band columns are STORED in the
-        signatures table), base postings recompute here each increment —
-        a map-only hyperplane matmul over the base embeddings, no base
-        shuffle; to store them instead, pin the banding in config and
-        persist the posting table (the optimization is a caching choice,
-        not a semantic one)."""
-        cfg = self.cfg
-
-        def build():
-            empty = (
-                "doc_a long, doc_b long, method string, jaccard double, "
-                "passed boolean, cosine double"
-            )
-            first = (
-                new_emb.select("embedding").filter(F.col("embedding").isNotNull()).first()
-            )
-            if first is None:
-                return self.spark.createDataFrame([], empty)
-            dim = len(first[0])
-            n_total = new_emb.count() + (base_emb.count() if base_emb is not None else 0)
-            bits, bands = derive_sign_banding(cfg.emb_threshold, n_total)
-            sig = make_banded_hyperplane_udf(dim, bands, bits, seed=42)
-
-            def postings(df):
-                return df.select(
-                    "doc_id", F.posexplode(sig(F.col("embedding"))).alias("band", "bucket")
-                )
-
-            base_p = (
-                postings(base_emb)
-                if base_emb is not None
-                else self.spark.createDataFrame([], "doc_id long, band int, bucket long")
-            )
-            all_p = tag_postings(base_p, postings(new_emb))
-            counts = all_p.groupBy("band", "bucket").agg(F.count("*").alias("n_docs"))
-            ov = counts.filter(F.col("n_docs") > cfg.emb_bucket_cap)
-            self._record_overflow("emb_overflow_buckets", ov)
-            kept = all_p.join(
-                ov.select("band", "bucket"), ["band", "bucket"], "left_anti"
-            ).repartition(cfg.shuffle_partitions, "band", "bucket")
-            pairs = incremental_posting_pairs(
-                kept.filter("_new"), kept, ["band", "bucket"]
-            ).dropDuplicates(["doc_a", "doc_b"])
-            allv = (
-                base_emb.unionByName(new_emb) if base_emb is not None else new_emb
-            )
-            va = allv.select(F.col("doc_id").alias("doc_a"), F.col("embedding").alias("_va"))
-            vb = allv.select(F.col("doc_id").alias("doc_b"), F.col("embedding").alias("_vb"))
-            return (
-                pairs.join(va, "doc_a")
-                .join(vb, "doc_b")
-                .withColumn("cosine", F.round(cosine_similarity_col("_va", "_vb"), 6))
-                .filter(F.col("cosine") >= cfg.emb_threshold)
-                .select(
-                    "doc_a",
-                    "doc_b",
-                    F.lit("embedding").alias("method"),
-                    F.lit(None).cast("double").alias("jaccard"),
-                    F.lit(True).alias("passed"),
-                    "cosine",
-                )
-            )
-
-        df = self._stage("embedding_pairs", build)
-        for o in self._overflow_cache:
-            o.unpersist()
-        self._overflow_cache.clear()
-        return df
+        return self._stage("embedding_pairs", build)
 
     def merge_verified(self, ver: DataFrame, emb_pairs: DataFrame) -> DataFrame:
         """Union text-verified and embedding edges into one pair table.
@@ -779,103 +737,6 @@ class DedupPipeline:
         return self._stage("verified_all", build)
 
     # -- incremental path ---------------------------------------------
-    def _incremental_candidates(
-        self,
-        new_docs: DataFrame,
-        new_sigs: DataFrame,
-        base_sigs: DataFrame,
-        link_edges: DataFrame,
-    ) -> DataFrame:
-        """Candidate pairs touching >= 1 increment doc — the one-sided
-        form of :meth:`candidates`. Posting tables (LSH buckets, SimHash
-        chunks, anchors) combine base+increment so caps see the TRUE
-        bucket sizes (identical overflow behavior to a full recompute),
-        but the pair join probes only increment postings — old-vs-old
-        pairs are never generated (their connectivity already lives in
-        the base component assignment)."""
-        cfg = self.cfg
-
-        def build():
-            exact = exact_dup_edges(new_docs).select("doc_a", "doc_b", "method").unionByName(
-                link_edges
-            )
-            non_new = new_sigs.filter(F.col("n_shingles") > 0)
-            non_old = base_sigs.filter(F.col("n_shingles") > 0)
-
-            def bands_of(sigs):
-                return sigs.select("doc_id", F.posexplode("bands").alias("band", "bucket_hash"))
-
-            all_b = tag_postings(bands_of(non_old), bands_of(non_new))
-            counts = all_b.groupBy("band", "bucket_hash").agg(F.count("*").alias("n_docs"))
-            lsh_ov = counts.filter(F.col("n_docs") > cfg.bucket_cap)
-            self._record_overflow("lsh_overflow_buckets", lsh_ov)
-            kept_all = all_b.join(
-                lsh_ov.select("band", "bucket_hash"), ["band", "bucket_hash"], "left_anti"
-            ).repartition(cfg.shuffle_partitions, "band", "bucket_hash")
-            lsh_pairs = incremental_posting_pairs(
-                kept_all.filter("_new"), kept_all, ["band", "bucket_hash"]
-            ).withColumn("method", F.lit("lsh"))
-            branches = [exact, lsh_pairs]
-            if self.enable_simhash:
-                all_s = tag_postings(
-                    simhash_chunks(non_old.select("doc_id", "simhash"), cfg),
-                    simhash_chunks(non_new.select("doc_id", "simhash"), cfg),
-                )
-                s_counts = all_s.groupBy("chunk_id", "chunk_val").agg(
-                    F.count("*").alias("n_docs")
-                )
-                sim_ov = s_counts.filter(F.col("n_docs") > cfg.bucket_cap)
-                self._record_overflow("simhash_overflow_chunks", sim_ov)
-                kept_s = all_s.join(
-                    sim_ov.select("chunk_id", "chunk_val"), ["chunk_id", "chunk_val"], "left_anti"
-                ).repartition(cfg.shuffle_partitions, "chunk_id", "chunk_val")
-                sim_pairs = (
-                    incremental_posting_pairs(
-                        kept_s.filter("_new"), kept_s, ["chunk_id", "chunk_val"],
-                        extra_cols=["simhash"],
-                    )
-                    .filter(F.expr(f"bit_count(simhash_a ^ simhash_b) <= {cfg.hamming_d}"))
-                    .select("doc_a", "doc_b")
-                    .withColumn("method", F.lit("simhash"))
-                )
-                branches.append(sim_pairs)
-            overflow_docs = None
-            if self.enable_substring:
-                def anchors_of(sigs):
-                    return sigs.select("doc_id", F.explode("anchors").alias("anchor"))
-
-                all_a = tag_postings(anchors_of(non_old), anchors_of(non_new))
-                a_counts = all_a.groupBy("anchor").agg(F.count("*").alias("n_docs"))
-                anc_ov = a_counts.filter(F.col("n_docs") > cfg.anchor_cap)
-                anc_ov = self._record_overflow("anchor_overflow", anc_ov)
-                kept_a = all_a.join(
-                    anc_ov.select("anchor"), "anchor", "left_anti"
-                ).repartition(cfg.shuffle_partitions, "anchor")
-                anc_pairs = incremental_posting_pairs(
-                    kept_a.filter("_new"), kept_a, ["anchor"]
-                )
-                if cfg.min_shared_anchors > 1:
-                    anc_pairs = (
-                        anc_pairs.groupBy("doc_a", "doc_b")
-                        .agg(F.count("*").alias("_n_shared"))
-                        .filter(F.col("_n_shared") >= cfg.min_shared_anchors)
-                        .drop("_n_shared")
-                    )
-                branches.append(anc_pairs.withColumn("method", F.lit("anchor")))
-                overflow_docs = (
-                    all_a.join(anc_ov.select("anchor"), "anchor", "left_semi")
-                    .select("doc_id")
-                    .distinct()
-                    .withColumn("_anchor_ov", F.lit(True))
-                )
-            return self._strongest_with_overflow(branches, overflow_docs)
-
-        df = self._stage("candidate_pairs", build)
-        for o in self._overflow_cache:
-            o.unpersist()
-        self._overflow_cache.clear()
-        return df
-
     def run_incremental(
         self,
         new_pages: DataFrame,
@@ -900,8 +761,9 @@ class DedupPipeline:
            linked docs produce exact edges and are NOT re-signed.
         3. ``inc_signatures`` — fused kernel over genuinely-new distinct
            content only.
-        4. ``inc_candidate_pairs`` — one-sided posting joins against
-           base+increment postings; caps see true combined bucket sizes.
+        4. ``inc_candidate_pairs`` — :meth:`candidates` with the base
+           signatures: one-sided posting joins against base+increment
+           postings; caps see true combined bucket sizes.
         5. ``inc_verified_pairs`` — the unchanged :meth:`verified` stage
            (size-ratio prune, exact Jaccard, substring LCS routing) over
            the union signature/doc tables (join-back hydrates only pair
@@ -917,7 +779,7 @@ class DedupPipeline:
         incremental is recall->=-full-run under caps, never below).
 
         ``new_embeddings``/``base_embeddings``: the embedding modality's
-        one-sided analog (:meth:`_incremental_embedding_pairs`) — when
+        one-sided analog (:meth:`embedding_pairs` with a base) — when
         the base ran with embeddings, pass both and the fold-in result
         equals a fresh :meth:`run` over old ∪ new with the combined
         embedding table (same derived banding, same caps-see-combined
@@ -962,39 +824,25 @@ class DedupPipeline:
                 F.lit("exact").alias("method"),
             )
 
-            def build_sigs():
-                reps = distinct_content(new_docs).join(
-                    F.broadcast(linked.select("doc_id")), "doc_id", "left_anti"
-                )
-                sig = make_signature_udf(self.cfg)
-                return (
-                    reps.select("doc_id", sig(F.col("text")).alias("sig"))
-                    .select("doc_id", "sig.bands", "sig.simhash", "sig.n_shingles", "sig.anchors")
-                    .withColumn("config_hash", F.lit(self.cfg.config_hash()))
-                )
-
-            new_sigs = self._stage("signatures", build_sigs)
-            cands = self._incremental_candidates(new_docs, new_sigs, base_sigs, link_edges)
+            new_sigs = self.signatures(new_docs, exclude=linked)
+            cands = self.candidates(
+                new_docs, new_sigs, base_signatures=base_sigs, link_edges=link_edges
+            )
             sigs_all = base_sigs.unionByName(new_sigs)
             common = [c for c in base_docs.columns if c in new_docs.columns]
             docs_all = base_docs.select(common).unionByName(new_docs.select(common))
             ver = self.verified(cands, sigs_all, docs_all)
             if new_embeddings is not None:
-                emb_edges = self._incremental_embedding_pairs(
-                    base_embeddings, new_embeddings
-                )
+                emb_edges = self.embedding_pairs(new_embeddings, base_embeddings)
                 ver = self.merge_verified(ver, emb_edges)
 
             # merge runs OUTSIDE the stage builder so the merge map is
             # in hand for summary maintenance; the CC it runs is over
             # the tiny contracted graph (the whole point), so the eager
             # recompute on a resumed run is cheap
-            edges = ver.filter("passed").select(
-                F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-            )
             merged, comp_map = merge_components(
                 base_comps,
-                edges,
+                _passed_edges(ver),
                 new_docs,
                 max_iterations=self.cfg.max_cc_iterations,
                 salt_buckets=self.cfg.cc_salt_buckets,

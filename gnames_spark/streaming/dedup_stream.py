@@ -37,9 +37,11 @@ sense there:
 
 Full near-dup LSH as a pure stream is intentionally NOT offered:
 candidate self-joins over an unbounded corpus need the persisted
-signatures/buckets tables (stream-static join against the checkpointed
-batch state is the supported pattern and works with these same
-functions).
+signatures/buckets tables. A stream-static join against the batch
+signature tables is not offered either: the stream fingerprints with
+the FNV token hash (``make_fnv_simhash_udf``) and the batch tables with
+the fused ``sigkernel`` hash, so the same text gets different
+fingerprints (pinned in tests/test_streaming.py).
 """
 
 from __future__ import annotations
@@ -53,8 +55,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from gnames_spark.config import DedupConfig
 from gnames_spark.functions.simhash import make_fnv_simhash_udf
 from gnames_spark.functions.textstats import quality_score
+from gnames_spark.operators.simhash_join import simhash_chunks
 
 
 def _popcount64(x: np.ndarray) -> np.ndarray:
@@ -104,29 +108,14 @@ def streaming_simhash_screen(
     per chunk — callers needing set semantics dropDuplicates
     (doc_id, dup_of) downstream, exactly like the batch candidate union.
     """
-    n_chunks = hamming_d + 1
-    assert 64 % n_chunks == 0, "hamming_d+1 must divide 64"
-    bits = 64 // n_chunks
-    mask = (1 << bits) - 1
+    cfg = DedupConfig(hamming_d=hamming_d)
+    cfg.validate()  # raises unless hamming_d + 1 divides the 64 bits
     sim_udf = make_fnv_simhash_udf()
     sigs = pages.select(
         F.xxhash64("url").alias("doc_id"), sim_udf(F.col("text")).alias("simhash")
     )
-    chunks = sigs.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("chunk_id"),
-                    F.shiftrightunsigned("simhash", i * bits)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("chunk_val"),
-                )
-                for i in range(n_chunks)
-            ])
-        ).alias("c"),
-    ).select("doc_id", "simhash", "c.chunk_id", "c.chunk_val")
+    # the batch pigeonhole posting builder: stream and batch chunk alike
+    chunks = simhash_chunks(sigs, cfg)
 
     out_type = T.StructType(
         [

@@ -20,8 +20,8 @@ from gnames_spark.functions.textstats import (
 )
 from gnames_spark.operators.embeddings import (
     ann_topk,
+    blocked_cosine_pairs,
     cosine_topk,
-    embedding_dup_pairs,
 )
 
 
@@ -100,7 +100,7 @@ class TestEmbeddings:
             assert (r["neighbor_id"], r["cosine"]) == (best_id, pytest.approx(best_cos))
 
     def test_embedding_dup_pairs(self, spark, vectors):
-        pairs = embedding_dup_pairs(vectors, threshold=0.99).collect()
+        pairs = blocked_cosine_pairs(vectors, threshold=0.99).collect()
         assert {(p["id_a"], p["id_b"]) for p in pairs} == {(100, 101)}
 
     def test_ann_finds_planted_pair(self, spark, vectors):

@@ -531,6 +531,15 @@ class TestCurationTail:
 
         layout = spark.read.parquet(f"{out}/training_layout").collect()
         assert len(layout) == len(train)  # one layout row per copy
+        # both artifacts are keyed by (doc_id, copy): joining them on it
+        # is 1:1 — no fan-out over a doc's repeated rows, nothing dropped
+        keys = {(r.doc_id, r.copy) for r in layout}
+        assert len(keys) == len(layout)
+        assert keys == {(r.doc_id, r.copy) for r in train}
+        joined = spark.read.parquet(f"{out}/training_set").join(
+            spark.read.parquet(f"{out}/training_layout"), ["doc_id", "copy"]
+        )
+        assert joined.count() == len(train)
         by_shard: dict[int, list] = {}
         for r in layout:
             by_shard.setdefault(r.shard, []).append(r)

@@ -200,3 +200,175 @@ class TestIncrementalPlanShapes:
         # (the sha distinct + the match-set groupBy); the base scan
         # streams straight into the BroadcastHashJoin
         assert count_shuffles(linked) == 2, physical_plan(linked)
+
+
+class TestPostingEnginePlan:
+    """A full run is an increment with no base: the engine's ``_new``
+    flag is a literal True there, so Catalyst folds the one-sided join
+    back to the ``a.id < b.id`` self-join — the same exchanges as the
+    hand-written self-join the branches used to carry, and no union."""
+
+    @staticmethod
+    def _self_join(post, keys, cap, n_partitions):
+        """The hand-written branch shape: count → cap → anti-join →
+        repartition → a.id < b.id self-join."""
+        counts = post.groupBy(*keys).agg(F.count("*").alias("n_docs"))
+        overflow = counts.filter(F.col("n_docs") > cap)
+        kept = post.join(overflow.select(*keys), keys, "left_anti").repartition(
+            n_partitions, *keys
+        )
+        a, b = kept.alias("a"), kept.alias("b")
+        pairs = (
+            a.join(b, keys)
+            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        )
+        return pairs, overflow
+
+    @pytest.fixture(scope="class")
+    def sigs(self, spark):
+        from gnames_spark.functions.sigkernel import make_signature_udf
+
+        sig = make_signature_udf(CFG)
+        return (
+            spark.read.parquet(f"{SF}/documents.parquet")
+            .select("doc_id", sig(F.col("text")).alias("s"))
+            .select("doc_id", "s.bands", "s.simhash", "s.n_shingles", "s.anchors")
+            .localCheckpoint(eager=True)
+        )
+
+    def test_engine_branch_matches_self_join(self, spark, sigs):
+        from gnames_spark.operators.postings import capped_posting_pairs
+        from gnames_spark.plans.audit import physical_plan
+
+        post = sigs.select("doc_id", F.posexplode("bands").alias("band", "bucket_hash"))
+        keys = ["band", "bucket_hash"]
+        engine = physical_plan(capped_posting_pairs(post, keys, 256, 8)[0])
+        hand = physical_plan(self._self_join(post, keys, 256, 8)[0])
+        assert "Union" not in engine
+        for node in ("Exchange", "Join", "Filter", "HashAggregate"):
+            assert engine.count(node) == hand.count(node), (node, engine, hand)
+
+    @staticmethod
+    def _assert_join_plans_own_exchanges(engine, hand):
+        """Same exchanges as the hand-written shape, none of them a
+        user-requested repartition (the join adds its own), no union."""
+        assert "REPARTITION_BY" not in engine and "Union" not in engine
+        assert engine.count("Exchange") == hand.count("Exchange"), (engine, hand)
+
+    def test_exact_jaccard_plans_like_uncapped_self_join(self, spark, docs):
+        from gnames_spark.operators.verify import exact_jaccard_pairs
+        from gnames_spark.plans.audit import physical_plan
+
+        sets = docs.select("doc_id", shingle_set("text", 3).alias("shingle_set"))
+        engine = physical_plan(exact_jaccard_pairs(sets, 0.5))
+        post = sets.select("doc_id", F.size("shingle_set").alias("_n"),
+                           F.explode("shingle_set").alias("shingle"))
+        a, b = post.alias("a"), post.alias("b")
+        hand = physical_plan(
+            a.join(b, "shingle").filter(F.col("a.doc_id") < F.col("b.doc_id"))
+            .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"),
+                     F.col("a._n").alias("n_a"), F.col("b._n").alias("n_b"))
+            .agg(F.count("*").alias("n_inter"))
+        )
+        self._assert_join_plans_own_exchanges(engine, hand)
+
+    def test_ann_dup_pairs_plans_like_capped_self_join(self, spark):
+        from gnames_spark.operators.embeddings import (
+            ann_dup_pairs,
+            cosine_similarity_col,
+            make_banded_hyperplane_udf,
+        )
+        from gnames_spark.plans.audit import physical_plan
+
+        rows = [(i, [float((i * 7 + j) % 5) for j in range(8)]) for i in range(40)]
+        vectors = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        engine = physical_plan(ann_dup_pairs(vectors, 0.9, 8, n_bands=4, bucket_cap=20)[0])
+        sig = make_banded_hyperplane_udf(8, 4, 8, 42)
+        post = vectors.select(F.col("vec_id").alias("vid"),
+                              F.posexplode(sig("embedding")).alias("band", "bucket"))
+        counts = post.groupBy("band", "bucket").agg(F.count("*").alias("n_vecs"))
+        over = counts.filter(F.col("n_vecs") > 20).select("band", "bucket")
+        post = post.join(over, ["band", "bucket"], "left_anti")
+        lhs = post.select("band", "bucket", F.col("vid").alias("id_a"))
+        rhs = post.select("band", "bucket", F.col("vid").alias("id_b"))
+        cands = (lhs.join(rhs, ["band", "bucket"]).filter(F.col("id_a") < F.col("id_b"))
+                 .select("id_a", "id_b").dropDuplicates())
+        va = vectors.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("_va"))
+        vb = vectors.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("_vb"))
+        hand = physical_plan(
+            cands.join(va, "id_a").join(vb, "id_b")
+            .withColumn("cosine", F.round(cosine_similarity_col("_va", "_vb"), 6))
+            .filter(F.col("cosine") >= 0.9)
+        )
+        self._assert_join_plans_own_exchanges(engine, hand)
+
+    def test_full_candidates_stage_adds_no_exchange_or_union(self, spark, sigs):
+        from gnames_spark.operators.exact import exact_dup_edges, with_content_sha
+        from gnames_spark.operators.simhash_join import simhash_chunks
+        from gnames_spark.pipeline import DedupPipeline
+        from gnames_spark.plans.audit import physical_plan
+
+        docs = with_content_sha(spark.read.parquet(f"{SF}/documents.parquet"))
+        pipe = DedupPipeline(spark, CFG)
+        pipe._stage = lambda name, build: build()  # the stage's plan, unmaterialized
+        engine = physical_plan(pipe.candidates(docs, sigs))
+
+        # the candidate stage as it was hand-written per branch
+        ref = DedupPipeline(spark, CFG)
+        nonempty = sigs.filter(F.col("n_shingles") > 0)
+        branches = [exact_dup_edges(docs).select("doc_a", "doc_b", "method")]
+        lsh, lsh_ov = self._self_join(
+            nonempty.select("doc_id", F.posexplode("bands").alias("band", "bucket_hash")),
+            ["band", "bucket_hash"], CFG.bucket_cap, CFG.shuffle_partitions,
+        )
+        ref._record_overflow("lsh_overflow_buckets", lsh_ov)
+        branches.append(lsh.withColumn("method", F.lit("lsh")))
+        chunks = simhash_chunks(nonempty.select("doc_id", "simhash"), CFG)
+        counts = chunks.groupBy("chunk_id", "chunk_val").agg(F.count("*").alias("n_docs"))
+        sim_ov = counts.filter(F.col("n_docs") > CFG.bucket_cap)
+        kept = chunks.join(
+            sim_ov.select("chunk_id", "chunk_val"), ["chunk_id", "chunk_val"], "left_anti"
+        ).repartition(CFG.shuffle_partitions, "chunk_id", "chunk_val")
+        a, b = kept.alias("a"), kept.alias("b")
+        sim = (
+            a.join(b, ["chunk_id", "chunk_val"])
+            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+            .filter(F.expr(f"bit_count(a.simhash ^ b.simhash) <= {CFG.hamming_d}"))
+            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        )
+        ref._record_overflow("simhash_overflow_chunks", sim_ov)
+        branches.append(sim.withColumn("method", F.lit("simhash")))
+        anchors = nonempty.select("doc_id", F.explode("anchors").alias("anchor"))
+        anc, anc_ov = self._self_join(anchors, ["anchor"], CFG.anchor_cap, CFG.shuffle_partitions)
+        anc_ov = ref._record_overflow("anchor_overflow", anc_ov)
+        anc = (
+            anc.groupBy("doc_a", "doc_b").agg(F.count("*").alias("_n"))
+            .filter(F.col("_n") >= CFG.min_shared_anchors).drop("_n")
+        )
+        branches.append(anc.withColumn("method", F.lit("anchor")))
+        ov_docs = anchors.join(anc_ov.select("anchor"), "anchor", "left_semi").select("doc_id").distinct()
+        out = branches[0]
+        for br in branches[1:]:
+            out = out.unionByName(br)
+        out = out.groupBy("doc_a", "doc_b").agg(
+            F.max_by("method", F.when(F.col("method") == "exact", 4)
+                     .when(F.col("method") == "anchor", 3)
+                     .when(F.col("method") == "lsh", 2).otherwise(1)).alias("method")
+        )
+        for side in ("doc_a", "doc_b"):
+            out = out.join(
+                F.broadcast(ov_docs.select(F.col("doc_id").alias(side), F.lit(True).alias(f"_ov_{side}"))),
+                side, "left",
+            )
+        hand = physical_plan(out.withColumn(
+            "anchor_overflow",
+            F.coalesce("_ov_doc_a", F.lit(False)) | F.coalesce("_ov_doc_b", F.lit(False)),
+        ).drop("_ov_doc_a", "_ov_doc_b"))
+        try:
+            assert CFG.min_shared_anchors > 1
+            for node in ("Exchange", "Union"):
+                assert engine.count(node) == hand.count(node), (node, engine, hand)
+        finally:
+            for o in pipe._overflow_cache + ref._overflow_cache:
+                o.unpersist()
