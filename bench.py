@@ -41,11 +41,11 @@ def _bench_queries(spark, sf_dir):
     # reuse a library kernel so no local type hints are needed (string
     # annotations from `from __future__ import annotations` don't resolve
     # inside pandas_udf inference)
-    from gnames_spark.functions.shingles import token_hashes
-    from gnames_spark.functions.simhash import simhash
+    from gnames_spark.functions.sigkernel import make_signature_udf
 
     warm = spark.range(256).select(F.concat(F.lit("warm up text "), F.col("id")).alias("text"))
-    warm.select(simhash(token_hashes("text"))).count()
+    # collect, not count: a count prunes the UDF projection away
+    warm.select(make_signature_udf(DedupConfig())("text")).collect()
     spark.read.parquet(f"{sf_dir}/documents.parquet").count()
 
     qs = entry.queries()

@@ -105,13 +105,12 @@ def build_arg_parser() -> argparse.ArgumentParser:
                         "embedding table (caller-managed — the promote "
                         "machinery maintains docs/signatures/components, "
                         "not embedding tables)")
-    p.add_argument("--no-simhash", action="store_true")
     p.add_argument("--no-substring", action="store_true")
     p.add_argument("--route-overflow-to-lcs", action="store_true")
     # DedupConfig knobs (defaults live in config.py; None = keep default)
     for flag, typ in [
         ("shingle-k", int), ("num-perms", int), ("bands", int),
-        ("rows-per-band", int), ("minhash-seed", int), ("hamming-d", int),
+        ("rows-per-band", int), ("minhash-seed", int),
         ("jaccard-threshold", float), ("min-substring-len", int),
         ("winnow-window", int), ("bucket-cap", int), ("anchor-cap", int),
         ("min-shared-anchors", int), ("shuffle-partitions", int),
@@ -173,7 +172,7 @@ def _config_from_args(args: argparse.Namespace):
     overrides = {}
     for field in (
         "shingle_k", "num_perms", "bands", "rows_per_band", "minhash_seed",
-        "hamming_d", "jaccard_threshold", "min_substring_len",
+        "jaccard_threshold", "min_substring_len",
         "winnow_window", "bucket_cap", "anchor_cap", "min_shared_anchors",
         "shuffle_partitions", "max_cc_iterations", "cc_salt_buckets",
         "lang_filter", "strip_shared_lines_min_docs",
@@ -229,7 +228,6 @@ def main(argv: list[str] | None = None) -> int:
         cfg,
         checkpoint_root=args.checkpoint_dir,
         run_id=args.run_id,
-        enable_simhash=not args.no_simhash,
         enable_substring=not args.no_substring,
         cc_checkpoint_rounds=args.cc_checkpoint_rounds,
         route_overflow_to_lcs=args.route_overflow_to_lcs,

@@ -9,8 +9,10 @@ document text.
 Design note (scale): no Python runs here. Tokenization, sliding-window
 k-grams and xxhash64 are Catalyst expressions, so the whole stage
 compiles into WholeStageCodegen and shingles never materialize as
-Python objects. The MinHash/SimHash pandas-UDF kernels downstream
-consume the already-hashed int64 arrays over Arrow.
+Python objects. These expressions are the oracle path of the
+DuckDB-checked queries in ``__spark_entry__.py``; the pipeline's fused
+pandas kernel (functions/sigkernel.py) satisfies the same tokenization
+contract.
 """
 
 from __future__ import annotations
@@ -53,13 +55,6 @@ def tokenize_sql(col: str, lower: bool = True) -> str:
 def tokens(col: str = "text") -> Column:
     """Lowercased whitespace tokens of ``col`` (drops empty tokens)."""
     return F.expr(f"filter({tokenize_sql(col)}, t -> t != '')")
-
-
-def token_hashes(col: str = "text") -> Column:
-    """xxhash64 of each token — input to the SimHash kernel."""
-    return F.expr(
-        f"transform(filter({tokenize_sql(col)}, t -> t != ''), t -> xxhash64(t))"
-    )
 
 
 def _bind_tokens(col: str, body: str, k: int) -> str:

@@ -1,7 +1,7 @@
 """Fused signature kernel — ONE Arrow crossing for all per-doc signatures.
 
 Computes tokens → token hashes → shingle hashes → MinHash → LSH band
-hashes → SimHash → anchor sample in a single vectorized pandas UDF.
+hashes → anchor sample in a single vectorized pandas UDF.
 
 Why this exists (measured on 120k synthetic pages, local[32]):
 producing the shingle arrays with Catalyst higher-order expressions
@@ -12,7 +12,7 @@ the in-memory columnar store costs another ~1.2 µs/element (45 s for a
 36M-element column; parquet-writing them is no better because the
 near-unique hashes thrash the dictionary encoder). The fused kernel does
 the same work in ~2 s of numpy and returns only *narrow* columns —
-`bands` (b int64s), `simhash` (1), `n_shingles` (1), `anchors`
+`bands` (b int64s), `n_shingles` (1), `anchors`
 (~n_shingles/anchor_mod) — so nothing wide is ever cached or shuffled.
 Full shingle sets are recomputed on demand (same kernel, so hashes are
 identical) for just the docs that appear in candidate pairs
@@ -21,7 +21,7 @@ identical) for just the docs that appear in candidate pairs
 Reference analog: the gnmatcher candidate index is *precomputed once into
 a compact cache* (bloom filters + trie, `/root/reference/PLAN_gnmatcher_embed.md:12-19`)
 rather than re-deriving per query — same economics: store the small
-derived index (bands/simhash/anchors), not the raw match keys.
+derived index (bands/anchors), not the raw match keys.
 
 Determinism: token hashing is ``pandas.util.hash_array`` (SipHash with
 pandas' fixed default key) and everything downstream is seeded integer
@@ -40,13 +40,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gnames_spark.config import DedupConfig
 from gnames_spark.functions.minhash import EMPTY_SENTINEL, perm_params, splitmix64
-from gnames_spark.functions.simhash import simhash_flat
 
 
 def poly_coeffs(n: int, salt: int) -> np.ndarray:
@@ -141,7 +139,6 @@ def band_hashes(mat: np.ndarray, bands: int, rows: int, coeffs: np.ndarray) -> n
 def signature_schema(include_set: bool = False, include_minhash: bool = False) -> T.StructType:
     fields = [
         T.StructField("bands", T.ArrayType(T.LongType()), False),
-        T.StructField("simhash", T.LongType(), False),
         T.StructField("n_shingles", T.IntegerType(), False),
         T.StructField("anchors", T.ArrayType(T.LongType()), False),
     ]
@@ -155,7 +152,7 @@ def signature_schema(include_set: bool = False, include_minhash: bool = False) -
 def make_signature_udf(
     cfg: DedupConfig, include_set: bool = False, include_minhash: bool = False
 ):
-    """pandas UDF: text → struct(bands, simhash, n_shingles, anchors[,
+    """pandas UDF: text → struct(bands, n_shingles, anchors[,
     minhash][, shingle_set]). One Arrow crossing per batch."""
     seeds = perm_params(cfg.num_perms, cfg.minhash_seed)
     kcoef = poly_coeffs(cfg.shingle_k, 101)
@@ -170,7 +167,6 @@ def make_signature_udf(
         S, counts = shingle_hashes_flat(th, lens, cfg.shingle_k, kcoef)
         mat = minhash_flat(S, counts, seeds)
         bandh = band_hashes(mat, b, r, bcoef)
-        sim = simhash_flat(th, lens)
         offsets = np.zeros(len(counts), dtype=np.int64)
         if len(counts):
             np.cumsum(counts[:-1], out=offsets[1:])
@@ -196,7 +192,6 @@ def make_signature_udf(
             # empty docs keep an empty bands array so a stray unfiltered
             # explode can never bucket them together
             "bands": [bandh[i] if counts[i] > 0 else empty for i in range(len(counts))],
-            "simhash": pd.Series(sim),
             "n_shingles": pd.Series(n_sh),
             "anchors": anchors,
         }
@@ -231,9 +226,9 @@ def winnow_anchors(seq: np.ndarray, wwin: int) -> np.ndarray:
 
 def make_anchor_udf(cfg: DedupConfig):
     """pandas UDF: text → array<long> winnowing anchors ONLY — the light
-    path for the standalone substring-dedup query (no MinHash/SimHash
-    work). Identical tokenizer/coefficients to :func:`make_signature_udf`
-    so anchors agree with the fused kernel's."""
+    path for the standalone substring-dedup query (no MinHash work).
+    Identical tokenizer/coefficients to :func:`make_signature_udf` so
+    anchors agree with the fused kernel's."""
     kcoef = poly_coeffs(cfg.shingle_k, 101)
     wwin = cfg.winnow_window
     empty = np.empty(0, dtype=np.int64)

@@ -1,33 +1,30 @@
 """SimHash 64-bit fingerprints — vectorized numpy inside a pandas UDF.
 
-Second candidate-generation modality alongside MinHash/LSH (the
-reference likewise layers two approximate indexes before exact
-verification: bloom-filter exact screen + levenshtein trie,
-`/root/reference/PLAN_gnmatcher_embed.md:14-18`). SimHash catches
-near-dups whose *token frequency profile* matches even when shingle
-sets drift (e.g. small reorderings), and its Hamming-ball join
-(operators/simhash_join.py) is cheap.
+One fingerprint, over FNV token hashes (:func:`make_fnv_simhash_udf`).
+Its callers are the streaming near-dup screen
+(streaming/dedup_stream.py), where it is the only near-dup signal, and
+the oracle-checked ``dedup_simhash_pairs`` query; both join on
+Hamming balls through operators/simhash_join.py. The batch pipeline does
+not use SimHash: it verifies shingle Jaccard, so its candidates come
+from MinHash LSH bands and winnowing anchors, which match that measure.
 
 Kernel: per doc, unpack each 64-bit token hash into its 64 bits, sum
 (+1 for bit set, −1 for clear) over tokens, take the sign per bit
-position, repack to one int64. Batched via ``np.add.reduceat`` over the
-flattened token-hash array — no per-row Python loops.
+position, repack to one int64, over the flattened token-hash array.
+:func:`simhash_array` is the per-list reference form the tests compare
+the flat kernel against.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_BIT_WEIGHTS = (np.uint64(1) << np.arange(64, dtype=np.uint64))
-
 
 def simhash_flat(flat_hashes: np.ndarray, sizes: np.ndarray) -> np.ndarray:
-    """int64 SimHash per doc from a flat token-hash array + per-doc sizes.
-    (Core kernel, shared with functions/sigkernel.py.)"""
+    """int64 SimHash per doc from a flat token-hash array + per-doc sizes."""
     n_docs = len(sizes)
     out = np.zeros(n_docs, dtype=np.int64)
     nonempty = sizes > 0
@@ -68,20 +65,6 @@ def simhash_array(token_hash_lists: list[np.ndarray]) -> np.ndarray:
     return simhash_flat(flat, sizes)
 
 
-@F.pandas_udf(T.LongType())
-def simhash_udf(token_hashes: pd.Series) -> pd.Series:
-    lists = [
-        np.asarray(x, dtype=np.int64) if x is not None and len(x) else np.empty(0, np.int64)
-        for x in token_hashes
-    ]
-    return pd.Series(simhash_array(lists))
-
-
-def simhash(token_hash_col: str | Column) -> Column:
-    col = F.col(token_hash_col) if isinstance(token_hash_col, str) else token_hash_col
-    return simhash_udf(col)
-
-
 def hamming64(a: int, b: int) -> int:
     """Hamming distance between two int64 fingerprints — test helper."""
     return int(bin((int(a) ^ int(b)) & ((1 << 64) - 1)).count("1"))
@@ -93,9 +76,6 @@ def hamming64(a: int, b: int) -> int:
 # EXACT same fingerprint is computable in DuckDB SQL (32-bit products fit
 # in UBIGINT without overflow — 64-bit FNV cannot wrap there), which
 # puts the SimHash Hamming-ball join under the driver's value-hash gate.
-# The production pipeline keeps the faster SipHash token hashing
-# (sigkernel.tokenize_hash_batch); only the fingerprint function differs,
-# the pigeonhole join operator is shared.
 # --------------------------------------------------------------------------
 
 FNV_PRIME = 16777619

@@ -72,7 +72,7 @@ def exact_dup_edges(docs_sha: DataFrame, id_col: str = "doc_id") -> DataFrame:
 def distinct_content(docs_sha: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """One representative row per distinct content — the early-exit
     cascade (P3 in SURVEY §4): docs already matched byte-identically
-    skip the MinHash/SimHash branches entirely; their cluster membership
+    skip the LSH and anchor branches entirely; their cluster membership
     is recovered through the exact star edges. Shrinks N for every
     downstream stage (the reference's exact-hit-suppresses-fuzzy rule,
     `/root/reference/README.md:188-195`).

@@ -1,6 +1,6 @@
 """Cross-document line-level dedup (the C4-style boilerplate screen).
 
-Doc-level near-dup (MinHash/SimHash/substring) keeps one copy of a
+Doc-level near-dup (MinHash/substring) keeps one copy of a
 duplicated PAGE; it does nothing about a navigation bar, cookie banner,
 or footer that repeats verbatim across millions of OTHERWISE-distinct
 pages. Training-data pipelines therefore also run a line-granular

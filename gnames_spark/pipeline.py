@@ -3,7 +3,7 @@
 The Spark shape of the reference's verify lifecycle (SURVEY §3.1):
 
     pages → extract (pandas UDF) → docs (content_sha, shingles)
-          → [exact branch | MinHash→LSH branch | SimHash branch | anchor branch]
+          → [exact branch | MinHash→LSH branch | anchor branch]
           → union candidate pairs → exact-Jaccard / substring verification
           → pair scoring → connected components → representatives
 
@@ -12,7 +12,10 @@ reference (gnmatcher + PostgreSQL) — collapse into joins inside one
 engine. Every stage checkpoints through CheckpointIO so a killed run
 resumes (north_rule), and per-stage metrics record docs/sec.
 
-The LSH, SimHash and anchor branches are described once, as data
+Candidates come from exact content identity, MinHash LSH bands and
+winnowing anchors only: the verified predicate is shingle Jaccard (LCS
+for anchor pairs), so the candidate families match the measure. The
+LSH and anchor branches are described once, as data
 (:class:`_PostingBranch`), and run through the one capped posting
 engine (operators/postings.py). A full run is an increment with no
 base: ``run_incremental`` calls the same ``candidates`` and
@@ -53,7 +56,6 @@ from gnames_spark.operators.incremental import merge_cluster_summary, merge_comp
 from gnames_spark.operators.postings import capped_posting_pairs
 from gnames_spark.operators.representatives import cluster_summary, select_representatives
 from gnames_spark.operators.scoring import method_rank_col, pair_score
-from gnames_spark.operators.simhash_join import simhash_chunks, within_hamming
 from gnames_spark.operators.suffix import shared_anchor_pairs, substring_verify
 from gnames_spark.operators.verify import verify_pairs
 
@@ -67,8 +69,13 @@ class _PostingBranch(NamedTuple):
     postings: Callable[[DataFrame], DataFrame]
     keys: tuple[str, ...]
     cap: int
-    extra_cols: tuple[str, ...] = ()
     pair_filter: Callable[[DataFrame], DataFrame] = lambda pairs: pairs
+
+
+def _common_union(base: DataFrame, new: DataFrame) -> DataFrame:
+    """``base`` ∪ ``new`` on the columns both carry, in base's order."""
+    common = [c for c in base.columns if c in new.columns]
+    return base.select(common).unionByName(new.select(common))
 
 
 def _passed_edges(verified: DataFrame) -> DataFrame:
@@ -88,7 +95,6 @@ class DedupPipeline:
         cfg: DedupConfig | None = None,
         checkpoint_root: str | None = None,
         run_id: str | None = None,
-        enable_simhash: bool = True,
         enable_substring: bool = True,
         cc_checkpoint_rounds: bool = False,
         route_overflow_to_lcs: bool = False,
@@ -102,7 +108,6 @@ class DedupPipeline:
             if checkpoint_root
             else None
         )
-        self.enable_simhash = enable_simhash
         self.enable_substring = enable_substring
         # route each CC round through the reliable checkpoint store
         # (survives executor loss mid-loop; resumes at the first missing
@@ -374,8 +379,8 @@ class DedupPipeline:
         return self._stage("docs", build)
 
     def signatures(self, docs: DataFrame, exclude: DataFrame | None = None) -> DataFrame:
-        """One row per DISTINCT content: LSH band hashes + simhash +
-        shingle count + anchor sample, all from ONE fused Arrow kernel
+        """One row per DISTINCT content: LSH band hashes + shingle
+        count + anchor sample, all from ONE fused Arrow kernel
         (functions/sigkernel.py — no interpreted JVM lambdas, no wide
         shingle arrays stored).
 
@@ -394,7 +399,7 @@ class DedupPipeline:
             sig = make_signature_udf(cfg)
             return (
                 reps.select("doc_id", sig(F.col("text")).alias("sig"))
-                .select("doc_id", "sig.bands", "sig.simhash", "sig.n_shingles", "sig.anchors")
+                .select("doc_id", "sig.bands", "sig.n_shingles", "sig.anchors")
                 .withColumn("config_hash", F.lit(cfg.config_hash()))
             )
 
@@ -408,13 +413,6 @@ class DedupPipeline:
             lambda s: s.select("doc_id", F.posexplode("bands").alias("band", "bucket_hash")),
             ("band", "bucket_hash"), cfg.bucket_cap,
         )]
-        if self.enable_simhash:
-            branches.append(_PostingBranch(
-                "simhash", "simhash_overflow_chunks",
-                lambda s: simhash_chunks(s.select("doc_id", "simhash"), cfg),
-                ("chunk_id", "chunk_val"), cfg.bucket_cap, ("simhash",),
-                lambda p: within_hamming(p, cfg.hamming_d),
-            ))
         if self.enable_substring:
             branches.append(_PostingBranch(
                 "anchor", "anchor_overflow",
@@ -457,7 +455,7 @@ class DedupPipeline:
                 old_post = None if old is None else br.postings(old)
                 found, overflow = capped_posting_pairs(
                     new_post, br.keys, br.cap, cfg.shuffle_partitions,
-                    base=old_post, extra_cols=br.extra_cols,
+                    base=old_post,
                 )
                 overflow = self._record_overflow(br.overflow_metric, overflow)
                 pairs = pairs.unionByName(
@@ -477,7 +475,7 @@ class DedupPipeline:
                         .distinct()
                     )
             # one groupBy dedups every branch, keeping the strongest
-            # method per pair. anchor outranks lsh/simhash: the verified
+            # method per pair. anchor outranks lsh: the verified
             # stage routes Jaccard-failed anchor pairs into the
             # substring LCS check, so a pair co-detected by lsh must not
             # lose its anchor tag (a substring dup at J<tau would
@@ -485,8 +483,7 @@ class DedupPipeline:
             out = pairs.groupBy("doc_a", "doc_b").agg(
                 F.max_by("method", F.when(F.col("method") == "exact", 4)
                          .when(F.col("method") == "anchor", 3)
-                         .when(F.col("method") == "lsh", 2)
-                         .otherwise(1)).alias("method")
+                         .otherwise(2)).alias("method")
             )
             if overflow_docs is None:
                 return out.withColumn("anchor_overflow", F.lit(False))
@@ -514,13 +511,11 @@ class DedupPipeline:
             ).withColumn("passed", F.lit(True))
             rest = candidates.filter(F.col("method") != "exact")
             # size-ratio prefilter: J(A,B) <= min(|A|,|B|)/max(|A|,|B|),
-            # so an lsh/simhash pair whose shingle-count ratio is below
+            # so an lsh pair whose shingle-count ratio is below
             # the threshold CANNOT pass Jaccard — drop it before the
             # (expensive) set hydration + intersection. n_shingles is
             # already in the narrow signatures table; the two joins ride
             # the same doc_id shuffle the hydration would have paid.
-            # Round-1 measurement: the simhash branch alone fed ~500k
-            # boilerplate pairs into verify at 120k docs; most die here.
             # anchor-tagged pairs are exempt (their Jaccard failure
             # routes them to the substring LCS check, a path that must
             # survive regardless of set-size skew); overflow-flagged
@@ -569,7 +564,7 @@ class DedupPipeline:
                 # (PartialExact). Only the anchor method indicates a
                 # possible long shared run: winnowing guarantees any
                 # >= min_substring_len shared substring produced a
-                # shared anchor, so lsh/simhash-only failures cannot be
+                # shared anchor, so lsh-only failures cannot be
                 # substring dups — skipping them keeps the expensive
                 # LCS kernel off the boilerplate cross-pair flood.
                 # EXCEPTION (opt-in): anchor_cap drops hot anchor
@@ -828,9 +823,10 @@ class DedupPipeline:
             cands = self.candidates(
                 new_docs, new_sigs, base_signatures=base_sigs, link_edges=link_edges
             )
-            sigs_all = base_sigs.unionByName(new_sigs)
-            common = [c for c in base_docs.columns if c in new_docs.columns]
-            docs_all = base_docs.select(common).unionByName(new_docs.select(common))
+            # union on the common columns: a base written by an older
+            # kernel may carry signature columns this one no longer emits
+            sigs_all = _common_union(base_sigs, new_sigs)
+            docs_all = _common_union(base_docs, new_docs)
             ver = self.verified(cands, sigs_all, docs_all)
             if new_embeddings is not None:
                 emb_edges = self.embedding_pairs(new_embeddings, base_embeddings)

@@ -37,11 +37,11 @@ sense there:
 
 Full near-dup LSH as a pure stream is intentionally NOT offered:
 candidate self-joins over an unbounded corpus need the persisted
-signatures/buckets tables. A stream-static join against the batch
-signature tables is not offered either: the stream fingerprints with
-the FNV token hash (``make_fnv_simhash_udf``) and the batch tables with
-the fused ``sigkernel`` hash, so the same text gets different
-fingerprints (pinned in tests/test_streaming.py).
+signatures/buckets tables. The SimHash screen is the stream's own
+near-dup signal: its FNV fingerprint (``make_fnv_simhash_udf``) is not
+stored in the batch signature tables, which carry LSH bands and
+anchors only, so there is no batch fingerprint to join the stream
+against.
 """
 
 from __future__ import annotations

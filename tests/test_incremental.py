@@ -123,6 +123,21 @@ class TestIncrementalPipeline:
         assert n_new_sigs == len(inc_shas - base_shas)
         assert n_new_sigs < inc_pages.count()  # some content was already known
 
+    def test_base_with_legacy_simhash_column_folds_in(self, spark, split_pages, full_res, base_res):
+        """A store whose signatures were written by the older kernel
+        still carries a ``simhash`` column between ``bands`` and
+        ``n_shingles``; folding into it must equal the fresh run."""
+        sigs = base_res["signatures"]
+        legacy = sigs.select(
+            "doc_id", "bands", F.xxhash64("doc_id").alias("simhash"),
+            *[c for c in sigs.columns if c not in ("doc_id", "bands")],
+        )
+        out = DedupPipeline(spark, CFG).run_incremental(
+            split_pages[2], {**base_res, "signatures": legacy}
+        )
+        assert _assign(out["components"]) == _assign(full_res["components"])
+        assert "simhash" not in out["signatures"].columns
+
 
 class TestIncrementalJaccard:
     def test_set_algebra_vs_full_pair_set(self, spark):

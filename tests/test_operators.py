@@ -12,8 +12,8 @@ from pyspark.sql import functions as F
 from gnames_spark.config import DedupConfig
 from gnames_spark.corpus import GROUP_SLOTS, expected_dup_groups, generate_pages, truth_role
 from gnames_spark.functions.minhash import minhash
-from gnames_spark.functions.shingles import shingle_set, token_hashes
-from gnames_spark.functions.simhash import simhash
+from gnames_spark.functions.shingles import shingle_set
+from gnames_spark.functions.simhash import make_fnv_simhash_udf
 from gnames_spark.operators import components
 from gnames_spark.operators.components import all_components, connected_components
 from gnames_spark.operators.exact import exact_dup_edges, exact_groups, with_content_sha
@@ -232,7 +232,8 @@ class TestContainment:
 
 class TestSimHash:
     def test_candidates_include_tight_near_dups(self, spark, docs):
-        sims = docs.select("doc_id", simhash(token_hashes("text")).alias("simhash")).filter(
+        fp = make_fnv_simhash_udf()
+        sims = docs.select("doc_id", fp(F.col("text")).alias("simhash")).filter(
             F.length("text") > 0
         )
         pairs, _ = simhash_candidates(sims, CFG)

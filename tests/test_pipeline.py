@@ -162,6 +162,21 @@ class TestPipeline:
         # >=0.99 statistical gate is recall_check.py's job at 100k+)
         assert found == len(truth_pairs), (found, len(truth_pairs))
 
+    def test_candidates_come_from_exact_lsh_and_anchors_only(self, spark, pages):
+        """The batch candidate families are exact identity, LSH bands
+        and winnowing anchors; no SimHash branch runs or logs overflow,
+        and the signature table carries no fingerprint."""
+        pipe = DedupPipeline(spark, CFG)
+        res = pipe.run(pages)
+        methods = {r["method"] for r in res["candidate_pairs"].select("method").distinct().collect()}
+        assert "exact" in methods and methods <= {"exact", "lsh", "anchor"} and len(methods) > 1
+        stages = {m.stage for m in pipe.metrics.stages}
+        assert {"lsh_overflow_buckets", "anchor_overflow"} <= stages
+        assert "simhash_overflow_chunks" not in stages
+        assert set(res["signatures"].columns) == {
+            "doc_id", "bands", "n_shingles", "anchors", "config_hash"
+        }
+
     def test_exact_members_inherit_component(self, spark, pages, run_nockpt):
         """Non-representative exact copies land in the same component as
         their representative (the early-exit cascade must not lose them)."""

@@ -233,7 +233,7 @@ class TestPostingEnginePlan:
         return (
             spark.read.parquet(f"{SF}/documents.parquet")
             .select("doc_id", sig(F.col("text")).alias("s"))
-            .select("doc_id", "s.bands", "s.simhash", "s.n_shingles", "s.anchors")
+            .select("doc_id", "s.bands", "s.n_shingles", "s.anchors")
             .localCheckpoint(eager=True)
         )
 
@@ -305,7 +305,6 @@ class TestPostingEnginePlan:
 
     def test_full_candidates_stage_adds_no_exchange_or_union(self, spark, sigs):
         from gnames_spark.operators.exact import exact_dup_edges, with_content_sha
-        from gnames_spark.operators.simhash_join import simhash_chunks
         from gnames_spark.pipeline import DedupPipeline
         from gnames_spark.plans.audit import physical_plan
 
@@ -324,21 +323,6 @@ class TestPostingEnginePlan:
         )
         ref._record_overflow("lsh_overflow_buckets", lsh_ov)
         branches.append(lsh.withColumn("method", F.lit("lsh")))
-        chunks = simhash_chunks(nonempty.select("doc_id", "simhash"), CFG)
-        counts = chunks.groupBy("chunk_id", "chunk_val").agg(F.count("*").alias("n_docs"))
-        sim_ov = counts.filter(F.col("n_docs") > CFG.bucket_cap)
-        kept = chunks.join(
-            sim_ov.select("chunk_id", "chunk_val"), ["chunk_id", "chunk_val"], "left_anti"
-        ).repartition(CFG.shuffle_partitions, "chunk_id", "chunk_val")
-        a, b = kept.alias("a"), kept.alias("b")
-        sim = (
-            a.join(b, ["chunk_id", "chunk_val"])
-            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-            .filter(F.expr(f"bit_count(a.simhash ^ b.simhash) <= {CFG.hamming_d}"))
-            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        )
-        ref._record_overflow("simhash_overflow_chunks", sim_ov)
-        branches.append(sim.withColumn("method", F.lit("simhash")))
         anchors = nonempty.select("doc_id", F.explode("anchors").alias("anchor"))
         anc, anc_ov = self._self_join(anchors, ["anchor"], CFG.anchor_cap, CFG.shuffle_partitions)
         anc_ov = ref._record_overflow("anchor_overflow", anc_ov)

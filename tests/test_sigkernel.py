@@ -36,7 +36,7 @@ def docs(spark):
 def sig_rows(spark, docs):
     sig = make_signature_udf(CFG, include_set=True, include_minhash=True)
     out = docs.select("doc_id", sig(F.col("text")).alias("s")).select(
-        "doc_id", "s.bands", "s.simhash", "s.n_shingles", "s.anchors",
+        "doc_id", "s.bands", "s.n_shingles", "s.anchors",
         "s.minhash", "s.shingle_set",
     )
     return out.collect()
@@ -89,12 +89,12 @@ class TestSignatureKernel:
         re = (
             docs.repartition(3)
             .select("doc_id", sig(F.col("text")).alias("s"))
-            .select("doc_id", "s.bands", "s.simhash", "s.n_shingles")
+            .select("doc_id", "s.bands", "s.n_shingles")
             .collect()
         )
-        base = {r["doc_id"]: (list(r["bands"]), r["simhash"], r["n_shingles"]) for r in sig_rows}
+        base = {r["doc_id"]: (list(r["bands"]), r["n_shingles"]) for r in sig_rows}
         for r in re:
-            assert base[r["doc_id"]] == (list(r["bands"]), r["simhash"], r["n_shingles"])
+            assert base[r["doc_id"]] == (list(r["bands"]), r["n_shingles"])
 
     def test_set_udf_consistent_with_signature_udf(self, spark, docs, sig_rows):
         """The verification-time shingle_set recomputation produces

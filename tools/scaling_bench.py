@@ -146,7 +146,7 @@ def main() -> None:
     ]
     med = sorted(paired)[len(paired) // 2]
     out = {
-        "job": "full dedup pipeline (extract + signatures + LSH + simhash + verify + components)",
+        "job": "full dedup pipeline (extract + signatures + LSH + anchors + verify + components)",
         "n_docs": n_docs,
         "trials": trials,
         "shuffle_partitions": parts,
