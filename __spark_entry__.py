@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from gnames_spark.config import DedupConfig
-from gnames_spark.functions.minhash import minhash
 from gnames_spark.functions.shingles import (
     WS_CLASS_RE2,
     shingle_set,
@@ -252,14 +251,22 @@ def q_o1_computed_sort(spark, sf_dir):
 def q_dedup_minhash_lsh(spark, sf_dir):
     """MinHash/LSH candidate generation + exact verification (M2).
 
-    UDF path end-to-end; the oracle is the brute-force Jaccard SQL —
-    recall at TAU=0.8 with (32,4) banding is 1 - ~5e-8 per pair, so the
-    result must equal the exact pair set.
+    The production fused kernel's bands (functions/sigkernel.py) feed
+    the capped band postings; pairs verify over the kernel's shingle
+    sets. The oracle is the brute-force Jaccard SQL — recall at TAU=0.8
+    with (32,4) banding is 1 - ~5e-8 per pair, so the result must equal
+    the exact pair set.
     """
-    sets = _doc_shingle_sets(spark, sf_dir).persist()
-    sigs = sets.filter(F.size("shingle_set") > 0).select(
-        "doc_id", minhash("shingle_set", CFG.num_perms, CFG.minhash_seed).alias("minhash")
+    from gnames_spark.functions.sigkernel import make_shingle_set_udf, make_signature_udf
+
+    kcfg = CFG.with_overrides(shingle_k=K)
+    docs = _docs(spark, sf_dir)
+    sigs = (
+        docs.select("doc_id", make_signature_udf(kcfg)(F.col("text")).alias("sig"))
+        .filter(F.col("sig.n_shingles") > 0)
+        .select("doc_id", "sig.bands")
     )
+    sets = docs.select("doc_id", make_shingle_set_udf(kcfg)(F.col("text")).alias("shingle_set"))
     cands, _ = lsh_candidates(sigs, CFG)
     ver = verify_pairs(cands, sets, CFG.with_overrides(jaccard_threshold=TAU), set_col="shingle_set")
     return (

@@ -79,17 +79,17 @@ _REMOTE_SCHEMES = (
 class ParquetCheckpointIO:
     """Parquet-dir checkpoint store with JSON manifest + atomic replace.
 
-    The manifests, lineage markers, and the CLI's promoted-batches
-    marker use DRIVER-LOCAL filesystem I/O (os.makedirs / open /
-    os.replace for atomicity), so the root must be a path the driver
-    sees as a POSIX filesystem — a local dir, or a shared mount (NFS)
-    in client deploy-mode. Object-store / HDFS roots are REJECTED at
-    construction: Spark would resolve the URI scheme while the
-    manifests landed under a literal local ``./s3:…`` directory —
-    a split-brained store whose resume contract silently never fires.
-    Object-store-backed checkpoints need another backend (an Iceberg
-    table store, say: atomic table replace, no local manifest files);
-    a backend must implement this class's interface.
+    The manifests, lineage markers, and the standing corpus's
+    promoted-batches marker (standing.py) use DRIVER-LOCAL filesystem
+    I/O (os.makedirs / open / os.replace for atomicity), so the root
+    must be a path the driver sees as a POSIX filesystem — a local dir,
+    or a shared mount (NFS) in client deploy-mode. Object-store / HDFS
+    roots are REJECTED at construction: Spark would resolve the URI
+    scheme while the manifests landed under a literal local ``./s3:…``
+    directory — a split-brained store whose resume contract silently
+    never fires. Object-store-backed checkpoints need another backend
+    (an Iceberg table store, say: atomic table replace, no local
+    manifest files); a backend must implement this class's interface.
     """
 
     def __init__(self, root: str, config_hash: str):

@@ -1,33 +1,21 @@
-"""MinHash signatures — vectorized numpy inside an Arrow pandas UDF.
+"""MinHash primitives: the permutation family and the reference
+MinHash matrix.
 
-Reference analog: the gnmatcher fuzzy index (levenshtein trie over
-stemmed canonicals, `/root/reference/PLAN_gnmatcher_embed.md:12-19`) — an
-approximate candidate generator screened before exact verification.
-Here the approximate structure is a 128-permutation MinHash signature
-whose banded buckets (see operators/lsh.py) produce candidate pairs.
+The pipeline's MinHash runs inside the fused signature kernel
+(functions/sigkernel.py ``minhash_flat``), which draws its permutations
+from :func:`perm_params` / :func:`splitmix64`. :func:`minhash_matrix`
+is the per-document reference the property tests compare it against.
 
 Permutation family: h_i(x) = splitmix64(x XOR seed_i) — a full-width
 64-bit finalizer per permutation, exact in numpy uint64 arithmetic (no
 Python bigints in the hot loop). Empirically matches the theoretical
 MinHash estimator error (~0.022 mean |err| at 256 perms), whereas the
 classic (a*x32+b) mod p family on folded 32-bit keys showed ~2x bias.
-
-Scale notes:
-- Scalar pandas UDF: one Arrow batch (≈2048 rows) in, signatures out;
-  the per-batch work is 128 vectorized passes over the *flattened*
-  shingle array plus one ``np.minimum.reduceat`` per permutation —
-  O(perms × total_shingles) with no per-row Python.
-- Memory stays O(total_shingles + perms × docs) per batch (the naive
-  perms × shingles outer product would be GBs at 10k-row batches).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # Sentinel signature value for empty docs: int64 max (practically never
 # produced by splitmix64 min over a non-empty set, so empty docs collide
@@ -80,25 +68,6 @@ def minhash_matrix(shingle_lists: list[np.ndarray], seeds: np.ndarray) -> np.nda
         mins[:, i] = (np.minimum.reduceat(v, offsets) >> np.uint64(1)).astype(np.int64)
     out[nonempty] = mins
     return out
-
-
-def make_minhash_udf(num_perms: int, seed: int):
-    """pandas UDF: array<long> shingle hashes → array<long> signature."""
-    seeds = perm_params(num_perms, seed)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def minhash_udf(shingle_col: pd.Series) -> pd.Series:
-        lists = [np.asarray(x, dtype=np.int64) if x is not None and len(x) else np.empty(0, np.int64) for x in shingle_col]
-        mat = minhash_matrix(lists, seeds)
-        return pd.Series(list(mat))
-
-    return minhash_udf
-
-
-def minhash(shingle_col: str | Column, num_perms: int, seed: int) -> Column:
-    udf = make_minhash_udf(num_perms, seed)
-    col = F.col(shingle_col) if isinstance(shingle_col, str) else shingle_col
-    return udf(col)
 
 
 def estimate_jaccard(sig_a: np.ndarray, sig_b: np.ndarray) -> float:

@@ -5,7 +5,7 @@ the same pattern as ``html:binary`` in the page corpus. The Spark-side
 plumbing (schemas, Arrow batch shape, partition sizing) is real and
 tested; the actual decoders are STUBS (this container ships no
 image/audio libs): ``decode_image_meta`` parses real PNG/JPEG headers
-(pure bytes, deterministic), while pixel decode / resize / frame-sample
+(pure bytes, deterministic), while pixel decode / resize
 raise NotImplementedError behind a clearly-marked gate or return a
 deterministic fake when ``fake=True`` (for pipeline tests).
 
@@ -110,38 +110,3 @@ def image_features(
 
     # blob dropped in the output schema: features only cross the shuffle
     return df.mapInPandas(extract, schema=out_schema)
-
-
-def frame_sample(
-    df: DataFrame, blob_col: str = "media", every_n: int = 30, fake: bool = False
-) -> DataFrame:
-    """Video frame sampling stub: real plumbing (explode one row per
-    sampled frame with frame_idx), fake frame payloads."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != blob_col]
-        + [
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("frame", T.BinaryType()),
-        ]
-    )
-    other_cols = [f.name for f in df.schema.fields if f.name != blob_col]
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError(
-                    "video decode requires ffmpeg/av — not in this environment; "
-                    "pass fake=True for deterministic fake frames"
-                )
-            rows = []
-            for _, row in pdf.iterrows():
-                blob = row[blob_col] or b""
-                n_frames = max(len(blob) // 1024, 1)  # fake: 1 frame per KiB
-                for idx in range(0, n_frames, every_n):
-                    rows.append(
-                        {**{c: row[c] for c in other_cols}, "frame_idx": idx,
-                         "frame": blob[idx * 16 : idx * 16 + 16]}
-                    )
-            yield pd.DataFrame(rows, columns=other_cols + ["frame_idx", "frame"])
-
-    return df.mapInPandas(sample, schema=out_schema)

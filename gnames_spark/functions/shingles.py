@@ -99,15 +99,6 @@ def shingles(col: str = "text", k: int = 5) -> Column:
     return F.expr(_bind_tokens(col, body, k))
 
 
-def char_shingles(col: str = "text", k: int = 9) -> Column:
-    """Hashed character k-shingles (for short-text corpora)."""
-    return F.expr(
-        f"CASE WHEN length({col}) < {k} THEN array() "
-        f"ELSE transform(sequence(1, length({col}) - {k} + 1), "
-        f"i -> xxhash64(substring({col}, i, {k}))) END"
-    )
-
-
 def shingle_set(col: str = "text", k: int = 5) -> Column:
     """Distinct hashed shingles — the set used for exact Jaccard."""
     return F.array_distinct(shingles(col, k))

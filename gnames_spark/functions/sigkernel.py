@@ -136,29 +136,25 @@ def band_hashes(mat: np.ndarray, bands: int, rows: int, coeffs: np.ndarray) -> n
     return (splitmix64(B) >> np.uint64(1)).astype(np.int64)
 
 
-def signature_schema(include_set: bool = False, include_minhash: bool = False) -> T.StructType:
+def signature_schema(include_set: bool = False) -> T.StructType:
     fields = [
         T.StructField("bands", T.ArrayType(T.LongType()), False),
         T.StructField("n_shingles", T.IntegerType(), False),
         T.StructField("anchors", T.ArrayType(T.LongType()), False),
     ]
-    if include_minhash:
-        fields.append(T.StructField("minhash", T.ArrayType(T.LongType()), False))
     if include_set:
         fields.append(T.StructField("shingle_set", T.ArrayType(T.LongType()), False))
     return T.StructType(fields)
 
 
-def make_signature_udf(
-    cfg: DedupConfig, include_set: bool = False, include_minhash: bool = False
-):
+def make_signature_udf(cfg: DedupConfig, include_set: bool = False):
     """pandas UDF: text → struct(bands, n_shingles, anchors[,
-    minhash][, shingle_set]). One Arrow crossing per batch."""
+    shingle_set]). One Arrow crossing per batch."""
     seeds = perm_params(cfg.num_perms, cfg.minhash_seed)
     kcoef = poly_coeffs(cfg.shingle_k, 101)
     bcoef = poly_coeffs(cfg.rows_per_band, 202)
     b, r, wwin = cfg.bands, cfg.rows_per_band, cfg.winnow_window
-    schema = signature_schema(include_set, include_minhash)
+    schema = signature_schema(include_set)
     empty = np.empty(0, dtype=np.int64)
 
     @F.pandas_udf(schema)
@@ -195,8 +191,6 @@ def make_signature_udf(
             "n_shingles": pd.Series(n_sh),
             "anchors": anchors,
         }
-        if include_minhash:
-            data["minhash"] = list(mat)
         if include_set:
             data["shingle_set"] = sets
         return pd.DataFrame(data)

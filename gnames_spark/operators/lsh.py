@@ -11,8 +11,8 @@ bucket self-join are the capped posting engine's
 (operators/postings.py); this module only builds the band postings.
 
 Scale notes:
-- Band hashing is JVM-side (`slice` + `xxhash64` over the signature
-  array) — no Python between the MinHash UDF and the join.
+- Band hashes come from the fused signature kernel
+  (functions/sigkernel.py); the postings are one JVM-side posexplode.
 - Emitted pairs are deduped across bands with one extra shuffle
   (`dropDuplicates`) — at 10^12 docs this is the dominant shuffle, and
   it is unavoidable: it is the set-union of per-band candidate sets.
@@ -29,31 +29,23 @@ from gnames_spark.config import DedupConfig
 from gnames_spark.operators.postings import capped_posting_pairs
 
 
-def band_buckets(signatures: DataFrame, cfg: DedupConfig, id_col: str = "doc_id") -> DataFrame:
-    """Explode a minhash signature into (doc_id, band, bucket_hash).
-
-    bucket_hash = xxhash64 of the band's r-slice of the signature;
-    banding is pure Catalyst (whole-stage codegen'd).
-    """
-    b, r = cfg.bands, cfg.rows_per_band
-    bands_expr = (
-        f"transform(sequence(0, {b - 1}), i -> xxhash64(slice(minhash, i * {r} + 1, {r})))"
-    )
-    return (
-        signatures.select(id_col, F.posexplode(F.expr(bands_expr)).alias("band", "bucket_hash"))
-    )
+def band_postings(signatures: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """A signature table's ``bands`` (the kernel's per-band bucket
+    hashes, functions/sigkernel.py) as (doc_id, band, bucket_hash)
+    postings."""
+    return signatures.select(id_col, F.posexplode("bands").alias("band", "bucket_hash"))
 
 
 def lsh_candidates(
     signatures: DataFrame, cfg: DedupConfig, id_col: str = "doc_id"
 ) -> tuple[DataFrame, DataFrame]:
-    """signatures (doc_id, minhash) → (candidate pairs, overflow stats).
+    """signatures (doc_id, bands) → (candidate pairs, overflow stats).
 
     Pairs are ``(doc_a < doc_b, method='lsh')``, deduped across bands;
     overflow is ``(band, bucket_hash, n_docs)`` for the buckets above
     ``cfg.bucket_cap``."""
     pairs, overflow = capped_posting_pairs(
-        band_buckets(signatures, cfg, id_col),
+        band_postings(signatures, id_col),
         ["band", "bucket_hash"],
         cfg.bucket_cap,
         cfg.shuffle_partitions,

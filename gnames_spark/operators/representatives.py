@@ -54,12 +54,3 @@ def cluster_summary(components: DataFrame) -> DataFrame:
         F.count("*").alias("n_docs"),
         F.min("doc_id").alias("rep_doc"),
     )
-
-
-def dedup_keep_list(components: DataFrame) -> DataFrame:
-    """doc_ids to KEEP (one per cluster) — the pipeline's final output."""
-    return (
-        components.groupBy("component_id")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )

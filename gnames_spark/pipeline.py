@@ -53,6 +53,7 @@ from gnames_spark.operators.exact import (
 )
 from gnames_spark.operators.embeddings import ann_dup_pairs
 from gnames_spark.operators.incremental import merge_cluster_summary, merge_components
+from gnames_spark.operators.lsh import band_postings
 from gnames_spark.operators.postings import capped_posting_pairs
 from gnames_spark.operators.representatives import cluster_summary, select_representatives
 from gnames_spark.operators.scoring import method_rank_col, pair_score
@@ -410,8 +411,7 @@ class DedupPipeline:
         cfg = self.cfg
         branches = [_PostingBranch(
             "lsh", "lsh_overflow_buckets",
-            lambda s: s.select("doc_id", F.posexplode("bands").alias("band", "bucket_hash")),
-            ("band", "bucket_hash"), cfg.bucket_cap,
+            band_postings, ("band", "bucket_hash"), cfg.bucket_cap,
         )]
         if self.enable_substring:
             branches.append(_PostingBranch(

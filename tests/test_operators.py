@@ -11,8 +11,8 @@ from pyspark.sql import functions as F
 
 from gnames_spark.config import DedupConfig
 from gnames_spark.corpus import GROUP_SLOTS, expected_dup_groups, generate_pages, truth_role
-from gnames_spark.functions.minhash import minhash
 from gnames_spark.functions.shingles import shingle_set
+from gnames_spark.functions.sigkernel import make_signature_udf
 from gnames_spark.functions.simhash import make_fnv_simhash_udf
 from gnames_spark.operators import components
 from gnames_spark.operators.components import all_components, connected_components
@@ -48,6 +48,16 @@ def docs(spark):
         .withColumn("shingle_set", shingle_set("text", CFG.shingle_k))
     )
     return d.cache()
+
+
+def _kernel_bands(docs):
+    """(doc_id, bands) from the fused signature kernel, non-empty docs."""
+    sig = make_signature_udf(CFG)
+    return (
+        docs.select("doc_id", sig(F.col("text")).alias("s"))
+        .filter(F.col("s.n_shingles") > 0)
+        .select("doc_id", "s.bands")
+    )
 
 
 @pytest.fixture(scope="module")
@@ -150,9 +160,7 @@ class TestExactSkew:
 class TestLSHRecall:
     def test_recall_gate(self, spark, docs, brute_pairs):
         """Dup-pair recall >= 0.99 vs brute-force oracle at tau (BASELINE gate)."""
-        sigs = docs.select(
-            "doc_id", minhash("shingle_set", CFG.num_perms, CFG.minhash_seed).alias("minhash")
-        ).filter(F.size("shingle_set") > 0)
+        sigs = _kernel_bands(docs)
         cands, overflow = lsh_candidates(sigs, CFG)
         verified = verify_pairs(cands, docs, CFG, set_col="shingle_set")
         found = {
@@ -171,9 +179,7 @@ class TestLSHRecall:
             assert abs(r["jaccard"] - brute_pairs[key]) < 1e-9
 
     def test_no_false_positives_after_verify(self, spark, docs, brute_pairs):
-        sigs = docs.select(
-            "doc_id", minhash("shingle_set", CFG.num_perms, CFG.minhash_seed).alias("minhash")
-        ).filter(F.size("shingle_set") > 0)
+        sigs = _kernel_bands(docs)
         cands, _ = lsh_candidates(sigs, CFG)
         verified = verify_pairs(cands, docs, CFG, set_col="shingle_set")
         for r in verified.filter("passed").collect():
@@ -381,9 +387,7 @@ class TestEndToEndClusters:
         """
         sha = with_content_sha(docs)
         e1 = exact_dup_edges(sha).select("doc_a", "doc_b")
-        sigs = docs.select(
-            "doc_id", minhash("shingle_set", CFG.num_perms, CFG.minhash_seed).alias("minhash")
-        ).filter(F.size("shingle_set") > 0)
+        sigs = _kernel_bands(docs)
         cands, _ = lsh_candidates(sigs, CFG)
         e2 = (
             verify_pairs(cands, docs, CFG, set_col="shingle_set")

@@ -9,8 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from gnames_spark.config import DedupConfig
-from gnames_spark.functions.minhash import minhash
 from gnames_spark.functions.shingles import shingle_set
+from gnames_spark.functions.sigkernel import make_signature_udf
 from gnames_spark.operators.lsh import lsh_candidates
 from gnames_spark.operators.verify import verify_pairs
 from gnames_spark.plans.audit import (
@@ -128,9 +128,10 @@ class TestPythonBoundary:
         """The only Python in the plan is Arrow-vectorized (input_hint:
         'no per-row Python')."""
         sets = docs.select("doc_id", shingle_set("text", 3).alias("shingle_set"))
-        sigs = sets.filter(F.size("shingle_set") > 0).select(
-            "doc_id", minhash("shingle_set", 32, 42).alias("minhash")
-        )
+        sig = make_signature_udf(CFG.with_overrides(shingle_k=3))
+        sigs = docs.select("doc_id", sig(F.col("text")).alias("s")).filter(
+            F.col("s.n_shingles") > 0
+        ).select("doc_id", "s.bands")
         cands, _ = lsh_candidates(sigs, CFG)
         ver = verify_pairs(cands, sets, CFG, set_col="shingle_set")
         assert not has_python_row_udf(ver)

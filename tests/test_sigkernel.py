@@ -34,10 +34,9 @@ def docs(spark):
 
 @pytest.fixture(scope="module")
 def sig_rows(spark, docs):
-    sig = make_signature_udf(CFG, include_set=True, include_minhash=True)
+    sig = make_signature_udf(CFG, include_set=True)
     out = docs.select("doc_id", sig(F.col("text")).alias("s")).select(
-        "doc_id", "s.bands", "s.n_shingles", "s.anchors",
-        "s.minhash", "s.shingle_set",
+        "doc_id", "s.bands", "s.n_shingles", "s.anchors", "s.shingle_set",
     )
     return out.collect()
 
@@ -46,7 +45,6 @@ class TestSignatureKernel:
     def test_shapes(self, sig_rows):
         for r in sig_rows:
             assert len(r["bands"]) in (0, CFG.bands)
-            assert len(r["minhash"]) == CFG.num_perms
             assert r["n_shingles"] == len(r["shingle_set"])
             # anchors are a subset of the shingle set
             assert set(r["anchors"]) <= set(r["shingle_set"])
