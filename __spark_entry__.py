@@ -804,8 +804,8 @@ def q_text_dup_ngrams(spark, sf_dir):
     (operators/repetition.dup_ngram_stats): fraction of 5-gram
     characters inside within-doc duplicate 5-grams — completes the
     published repetition family next to dup-line and top-bigram
-    fractions. Stacked (doc, gram) → (doc) map-side-combinable
-    groupBys, bounded groups, no Python."""
+    fractions. A projection of the per-doc repetition kernel (one
+    Arrow crossing, exact-string 5-gram counts, no shuffle)."""
     from gnames_spark.operators.repetition import dup_ngram_stats
 
     return dup_ngram_stats(_docs(spark, sf_dir).select("doc_id", "text"), n=5)
@@ -1789,8 +1789,9 @@ def q_text_repetition(spark, sf_dir):
     repetition.py): duplicate-line fraction over the derived lines +
     top-bigram fraction over the contract tokens; ``repetitive`` is the
     OR of the two Gopher thresholds (0.30 / 0.20, n-gram-count proxy
-    for Gopher's character weighting). Two-level map-side-combinable
-    groupBys keyed on (doc_id, unit) — no skew surface, no Python."""
+    for Gopher's character weighting). A projection of the per-doc
+    repetition kernel (one Arrow crossing, exact-string line and bigram
+    counts) — no shuffle, no skew surface."""
     from gnames_spark.operators.repetition import repetition_stats
 
     return repetition_stats(_line_docs(spark, sf_dir), ngram=2)

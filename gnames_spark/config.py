@@ -51,13 +51,17 @@ def optimal_bands(num_perms: int, tau: float, target_recall: float = 0.99) -> tu
     return best
 
 
+# fields no code reads any more, at the values they always had;
+# config_hash() keeps them so every standing checkpoint store stays valid
+_RETIRED_FIELDS = {"shingle_mode": "word", "arrow_batch_rows": 2048}
+
+
 @dataclass(frozen=True)
 class DedupConfig:
     """All knobs of the near-duplicate pipeline. Frozen: hash-stable."""
 
     # shingling
     shingle_k: int = 5            # words per shingle
-    shingle_mode: str = "word"    # "word" | "char"
 
     # MinHash / LSH
     num_perms: int = 128
@@ -119,7 +123,6 @@ class DedupConfig:
 
     # execution
     shuffle_partitions: int = 32
-    arrow_batch_rows: int = 2048
     max_cc_iterations: int = 50
     # salt the CC star-join's hot keys over this many shuffle buckets
     # (exact semantics — mins replicated, neighbors salted by hash(dst);
@@ -168,7 +171,7 @@ class DedupConfig:
     redact_pii: bool = False
 
     def config_hash(self) -> str:
-        payload = json.dumps(asdict(self), sort_keys=True, default=str)
+        payload = json.dumps({**asdict(self), **_RETIRED_FIELDS}, sort_keys=True, default=str)
         return hashlib.sha256(payload.encode("utf-8")).hexdigest()[:16]
 
     def with_overrides(self, **kw) -> "DedupConfig":

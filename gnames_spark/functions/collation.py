@@ -28,13 +28,3 @@ def ascii_fold(col: str | Column) -> Column:
     """Lowercase + strip diacritics (explicit map) — the collation key."""
     c = F.col(col) if isinstance(col, str) else col
     return F.translate(F.lower(c), ACCENTED, PLAIN)
-
-
-def collation_eq(a: str | Column, b: str | Column) -> Column:
-    """Diacritic/case-insensitive equality (X6)."""
-    return ascii_fold(a) == ascii_fold(b)
-
-
-def fold_sql_duckdb(expr: str) -> str:
-    """The DuckDB-side equivalent of :func:`ascii_fold`."""
-    return f"strip_accents(lower({expr}))"

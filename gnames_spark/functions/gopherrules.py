@@ -5,8 +5,8 @@ Published rule set, reimplemented by every major pipeline (Dolma,
 RefinedWeb, DataTrove); ours is the pure-Catalyst form: every rule is
 per-row array/string math over the contract tokens and raw lines — no
 explode, no shuffle, no Python. The repetition rules from the same
-table live in operators/repetition.py (they need cross-row grouping);
-this module is the per-document half:
+table live in operators/repetition.py (they count each doc's lines and
+n-grams, which one Arrow kernel does per row); this module is the rest:
 
   R1 n_words in [min_words, max_words]          (default 50..100,000)
   R2 mean word length in [3, 10] chars

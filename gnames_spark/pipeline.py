@@ -249,28 +249,25 @@ class DedupPipeline:
         gate → PII redaction) — they read ``text``, so they run AFTER
         html extraction. Same audit contract as the URL phase, but here
         audit mode DOES checkpoint each gate boundary: the gates are
-        expensive (line/gram shuffles) and the input is html-free, so a
-        count never recomputes the gates before it."""
+        expensive (the line shuffles, the repetition kernel) and the
+        input is html-free, so a count never recomputes the gates
+        before it."""
         cfg = self.cfg
         auditing = audit is not None
 
         def ckpt(d: DataFrame) -> DataFrame:
             return d.localCheckpoint(eager=True) if auditing else d
 
-        if (
-            cfg.strip_shared_lines_min_docs is not None
-            or cfg.max_dup_line_frac is not None
-            or cfg.max_top_gram_frac is not None
-        ) and not auditing:
-            # the line/repetition ops below reference df from several
-            # branches (lines, hot-line agg, join-back); cut lineage
-            # ONCE so extraction (the most expensive map in the
-            # pipeline) and the source scan run once, not per branch —
-            # the same localCheckpoint idiom as every stage boundary
-            df = df.localCheckpoint(eager=True)
         if cfg.strip_shared_lines_min_docs is not None:
             from gnames_spark.operators.linededup import strip_shared_lines
 
+            if not auditing:
+                # the line strip references df from several branches
+                # (lines, hot-line agg, join-back); cut lineage ONCE so
+                # extraction (the most expensive map in the pipeline)
+                # and the source scan run once, not per branch — the
+                # same localCheckpoint idiom as every stage boundary
+                df = df.localCheckpoint(eager=True)
             stripped = strip_shared_lines(
                 df, cfg.strip_shared_lines_min_docs, id_col="url"
             )
@@ -286,19 +283,17 @@ class DedupPipeline:
                      f"{n_lines} boilerplate line occurrences removed")
                 )
         if cfg.max_dup_line_frac is not None or cfg.max_top_gram_frac is not None:
-            from gnames_spark.operators.repetition import repetition_stats
+            from gnames_spark.operators import repetition as rep
 
             n_in = df.count() if auditing else None
-            stats = repetition_stats(df, id_col="url").select(
-                "url", "dup_line_frac", "top_gram_frac"
-            )
+            p, keep = F.col("_rep"), F.lit(True)
+            if cfg.max_dup_line_frac is not None:
+                keep &= rep.dup_line_frac(p) <= cfg.max_dup_line_frac
+            if cfg.max_top_gram_frac is not None:
+                keep &= rep.top_gram_frac(p) <= cfg.max_top_gram_frac
             df = ckpt(
-                df.join(stats, "url", "left").filter(
-                    (F.coalesce(F.col("dup_line_frac"), F.lit(0.0))
-                     <= (cfg.max_dup_line_frac if cfg.max_dup_line_frac is not None else 1.0))
-                    & (F.coalesce(F.col("top_gram_frac"), F.lit(0.0))
-                       <= (cfg.max_top_gram_frac if cfg.max_top_gram_frac is not None else 1.0))
-                ).drop("dup_line_frac", "top_gram_frac")
+                df.withColumn("_rep", rep.repetition_profile(F.col("text"), 2))
+                .filter(keep).drop("_rep")
             )
             if auditing:
                 audit.append(

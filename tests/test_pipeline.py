@@ -295,6 +295,17 @@ class TestConfigGuarantee:
         c1 = c2.with_overrides(min_shared_anchors=1)
         assert c1.substring_guarantee_chars() < c2.substring_guarantee_chars()
 
+    def test_config_hash_is_pinned(self):
+        """Every checkpoint store is stamped with this hash: a change to
+        the payload (a new, retired or renamed field) would make every
+        standing store refuse its stages."""
+        assert DedupConfig().config_hash() == "c75874e523cf4b7a"
+        fullconfig = DedupConfig(
+            collapse_url_snapshots=True, strip_shared_lines_min_docs=8,
+            max_dup_line_frac=0.9, max_top_gram_frac=0.5, redact_pii=True,
+        )
+        assert fullconfig.config_hash() == "c29c9549161e47fc"
+
 
 class TestAnchorOverflowRouting:
     def test_overflowed_anchor_pair_still_reaches_lcs(self, spark):

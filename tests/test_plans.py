@@ -357,3 +357,21 @@ class TestPostingEnginePlan:
         finally:
             for o in pipe._overflow_cache + ref._overflow_cache:
                 o.unpersist()
+
+
+class TestRepetitionGatePlan:
+    """The within-doc repetition gate is a per-row kernel: the docs
+    stage plans as one Arrow crossing and a filter — no shuffle and no
+    join back onto the docs."""
+
+    def test_gate_is_one_kernel_and_a_filter(self, spark, docs):
+        from gnames_spark.pipeline import DedupPipeline
+        from gnames_spark.plans.audit import physical_plan
+
+        pages = docs.select(F.concat(F.lit("u"), F.col("doc_id")).alias("url"), "text")
+        pipe = DedupPipeline(spark, CFG.with_overrides(max_dup_line_frac=0.3, max_top_gram_frac=0.2))
+        pipe._stage = lambda name, build: build()  # the stage's plan, unmaterialized
+        plan = physical_plan(pipe.prepare_docs(pages))
+        assert plan.count("Exchange") == 0, plan
+        assert plan.count("Join") == 0, plan
+        assert plan.count("ArrowEvalPython") == 1, plan

@@ -10,13 +10,15 @@ ligatures, and the known full-vs-simple lowercase divergence (U+0130).
 
 from __future__ import annotations
 
+from collections import Counter
+
 import duckdb
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from gnames_spark.config import DedupConfig
-from gnames_spark.functions.shingles import shingle_set, tokens
+from gnames_spark.functions.shingles import shingle_set, shingle_strings, tokens
 from gnames_spark.functions.sigkernel import make_shingle_set_udf
 from gnames_spark.operators.verify import exact_jaccard_pairs
 
@@ -150,3 +152,61 @@ def test_fnv_token_hash_duckdb_parity():
             f"SELECT {fnv64} FROM (SELECT $1 AS t)", [t]
         ).fetchone()[0]
         assert int(got) == int(h), t
+
+
+# The repetition kernel's line and gram rules, against the JVM
+# reference expressions. Each text is built so that a near-miss rule
+# changes a count: Python .strip() would merge the tab-edged and CRLF
+# lines with their bare twins, str.splitlines() would split on U+2028,
+# and simple lowercase would shorten İ-grams by one char.
+REPETITION_TEXTS = [
+    "\tsame\t\nsame\n same \nsame\r\nsame\r\nsame",
+    "a\xa0b a\xa0b\n\xa0a b\xa0\na b\n\xa0a b\xa0",
+    "x\u3000y x\u3000y x y\u2028x y\nx y x y",
+    "p\x1cq p q\x1cp q p q p q p",
+    "\u0130stanbul \u0130stanbul \u0130i \u0130i \u0130stanbul \u0130stanbul"
+    "\n\u0130stanbul\n\u0130STANBUL",
+    "",
+    "   \n \n",
+    None,
+]
+
+
+def _reference_profile(lines: list[str], grams: list[str]) -> tuple[int, ...]:
+    """The repetition profile, counted over the JVM's exact strings."""
+    gc = Counter(grams)
+    return (
+        len(lines),
+        len(lines) - len(set(lines)),
+        len(grams),
+        max(gc.values(), default=0),
+        sum(len(g) * c for g, c in gc.items()),
+        sum(len(g) * c for g, c in gc.items() if c >= 2),
+    )
+
+
+@pytest.mark.parametrize("n", [2, 5])
+def test_repetition_kernel_matches_jvm_lines_and_grams(spark, n):
+    from gnames_spark.operators.linededup import explode_lines
+    from gnames_spark.operators.repetition import PROFILE_FIELDS, repetition_profile
+
+    df = spark.createDataFrame(list(enumerate(REPETITION_TEXTS)), "doc_id long, text string")
+    lines: dict[int, list[str]] = {i: [] for i in range(len(REPETITION_TEXTS))}
+    for r in explode_lines(df).orderBy("doc_id", "line_no").collect():
+        lines[r.doc_id].append(r.line)
+    grams = {
+        r.doc_id: r.grams or []
+        for r in df.select("doc_id", shingle_strings("text", n).alias("grams")).collect()
+    }
+    got = {
+        r.doc_id: tuple(r.p[f] for f in PROFILE_FIELDS)
+        for r in df.select("doc_id", repetition_profile(F.col("text"), n).alias("p")).collect()
+    }
+    for i, t in enumerate(REPETITION_TEXTS):
+        assert got[i] == _reference_profile(lines[i], grams[i]), (repr(t), n)
+    # the rules the texts were built to exercise really bite
+    assert lines[0] == ["\tsame\t", "same", "same", "same\r", "same\r", "same"]
+    assert got[0][:2] == (6, 3)
+    assert lines[2][0] == "x\u3000y x\u3000y x y\u2028x y"
+    assert grams[4][0].startswith("i\u0307stanbul i\u0307stanbul")
+    assert got[6] == got[7] == (0,) * len(PROFILE_FIELDS)
