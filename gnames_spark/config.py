@@ -53,7 +53,7 @@ def optimal_bands(num_perms: int, tau: float, target_recall: float = 0.99) -> tu
 
 # fields no code reads any more, at the values they always had;
 # config_hash() keeps them so every standing checkpoint store stays valid
-_RETIRED_FIELDS = {"shingle_mode": "word", "arrow_batch_rows": 2048}
+_RETIRED_FIELDS = {"shingle_mode": "word", "arrow_batch_rows": 2048, "anchor_mod": 16}
 
 
 @dataclass(frozen=True)
@@ -85,13 +85,12 @@ class DedupConfig:
 
     # substring (suffix) pass
     min_substring_len: int = 512  # chars of exact shared substring
-    anchor_mod: int = 16          # shingle hash % anchor_mod == 0 → anchor (legacy sampler)
     # winnowing (Schleimer et al. 2003) window, in shingles: every
     # sliding window of `winnow_window` consecutive shingles contributes
     # its min hash as an anchor, so any shared run of >= winnow_window
-    # shingles GUARANTEES a shared anchor (the mod-sampler only catches a
-    # 512-char run with P≈1-(1-1/16)^106, and its random cross-doc
-    # collisions exploded to 1.9M candidate pairs at 120k docs).
+    # shingles GUARANTEES a shared anchor (the retired 1/16 mod-sampler
+    # only caught a 512-char run with P≈1-(1-1/16)^106, and its random
+    # cross-doc collisions exploded to 1.9M candidate pairs at 120k docs).
     # Sized so the min_shared_anchors guarantee below holds at
     # min_substring_len=512 even for max_token_chars-long words —
     # validate() enforces the inequality.

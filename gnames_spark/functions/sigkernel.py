@@ -12,11 +12,11 @@ the in-memory columnar store costs another ~1.2 µs/element (45 s for a
 36M-element column; parquet-writing them is no better because the
 near-unique hashes thrash the dictionary encoder). The fused kernel does
 the same work in ~2 s of numpy and returns only *narrow* columns —
-`bands` (b int64s), `n_shingles` (1), `anchors`
-(~n_shingles/anchor_mod) — so nothing wide is ever cached or shuffled.
-Full shingle sets are recomputed on demand (same kernel, so hashes are
-identical) for just the docs that appear in candidate pairs
-(:func:`make_shingle_set_udf`).
+`bands` (b int64s), `n_shingles` (1), `anchors` (the winnowing
+minima, ~2·n_shingles/(winnow_window+1)) — so nothing wide is ever
+cached or shuffled. Full shingle sets are recomputed on demand by the
+same code (:func:`shingle_set_arrays`, so hashes are identical) for just
+the docs in a batch of candidate pairs (``operators/verify.py``).
 
 Reference analog: the gnmatcher candidate index is *precomputed once into
 a compact cache* (bloom filters + trie, `/root/reference/PLAN_gnmatcher_embed.md:12-19`)
@@ -248,29 +248,30 @@ def make_anchor_udf(cfg: DedupConfig):
     return anchor_udf
 
 
-def make_shingle_set_udf(cfg: DedupConfig):
-    """pandas UDF: text → array<long> distinct shingle hashes.
-
-    Same tokenizer/coefficients as :func:`make_signature_udf`, so the
-    sets it returns are exactly the sets the signatures were built from —
-    used by the verification stage to recompute sets for only the docs
-    that appear in candidate pairs (join-back hydration, the reference's
-    `/root/reference/internal/io/pgio/match_records_map.go:31-35` shape).
-    """
-    kcoef = poly_coeffs(cfg.shingle_k, 101)
+def shingle_set_arrays(texts: pd.Series, k: int) -> list[np.ndarray]:
+    """Distinct int64 shingle hashes per doc (an empty array for a doc
+    with fewer than ``k`` tokens). Same tokenizer/coefficients as
+    :func:`make_signature_udf`, so these are exactly the sets the
+    signatures were built from."""
+    th, lens = tokenize_hash_batch(texts)
+    S, counts = shingle_hashes_flat(th, lens, k, poly_coeffs(k, 101))
+    offsets = np.zeros(len(counts), dtype=np.int64)
+    if len(counts):
+        np.cumsum(counts[:-1], out=offsets[1:])
     empty = np.empty(0, dtype=np.int64)
+    return [
+        (np.unique(S[s : s + c]) >> np.uint64(1)).astype(np.int64) if c > 0 else empty
+        for s, c in zip(offsets, counts)
+    ]
+
+
+def make_shingle_set_udf(cfg: DedupConfig):
+    """pandas UDF: text → array<long> distinct shingle hashes
+    (:func:`shingle_set_arrays`) — the set column of the graded Jaccard
+    rows and of the recall oracles."""
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def shingle_set_udf(texts: pd.Series) -> pd.Series:
-        th, lens = tokenize_hash_batch(texts)
-        S, counts = shingle_hashes_flat(th, lens, cfg.shingle_k, kcoef)
-        offsets = np.zeros(len(counts), dtype=np.int64)
-        if len(counts):
-            np.cumsum(counts[:-1], out=offsets[1:])
-        out = [
-            (np.unique(S[s : s + c]) >> np.uint64(1)).astype(np.int64) if c > 0 else empty
-            for s, c in zip(offsets, counts)
-        ]
-        return pd.Series(out)
+        return pd.Series(shingle_set_arrays(texts, cfg.shingle_k))
 
     return shingle_set_udf

@@ -69,7 +69,6 @@ def merge_components(
     new_docs: DataFrame,
     max_iterations: int = 50,
     salt_buckets: int | None = None,
-    broadcast_map: bool = True,
     return_map: bool = False,
 ):
     """Fold increment edges into a standing component assignment.
@@ -95,24 +94,21 @@ def merge_components(
        through unchanged (BroadcastHashJoin, no base shuffle; at real
        scale write only the changed rows as the table delta).
 
-    Set ``broadcast_map=False`` for pathological increments whose merge
-    map outgrows the broadcast threshold. With ``return_map=True``
-    returns ``(assignment, merge_map)`` — the map (``_node`` →
-    ``_super``; every contracted node, including self-mapped ones)
-    feeds :func:`merge_cluster_summary`.
+    With ``return_map=True`` returns ``(assignment, merge_map)`` — the
+    map (``_node`` → ``_super``; every contracted node, including
+    self-mapped ones) feeds :func:`merge_cluster_summary`.
     """
-    bc = F.broadcast if broadcast_map else (lambda df: df)
     touched = (
         new_edges.select(F.col("src").alias("doc_id"))
         .union(new_edges.select(F.col("dst").alias("doc_id")))
         .distinct()
     )
-    ba_touched = base_assign.join(bc(touched), "doc_id", "left_semi")
+    ba_touched = base_assign.join(F.broadcast(touched), "doc_id", "left_semi")
     src_map = ba_touched.select(F.col("doc_id").alias("src"), F.col("component_id").alias("_ca"))
     dst_map = ba_touched.select(F.col("doc_id").alias("dst"), F.col("component_id").alias("_cb"))
     contracted = (
-        new_edges.join(bc(src_map), "src", "left")
-        .join(bc(dst_map), "dst", "left")
+        new_edges.join(F.broadcast(src_map), "src", "left")
+        .join(F.broadcast(dst_map), "dst", "left")
         .select(
             F.coalesce("_ca", F.col("src")).alias("src"),
             F.coalesce("_cb", F.col("dst")).alias("dst"),
@@ -131,12 +127,14 @@ def merge_components(
         F.col("doc_id").alias("_node"), F.col("component_id").alias("_super")
     ).localCheckpoint(eager=True)
     updated_old = (
-        base_assign.join(bc(comp_map), base_assign["component_id"] == F.col("_node"), "left")
+        base_assign.join(
+            F.broadcast(comp_map), base_assign["component_id"] == F.col("_node"), "left"
+        )
         .select("doc_id", F.coalesce("_super", "component_id").alias("component_id"))
     )
     new_assign = (
         new_docs.select("doc_id")
-        .join(bc(comp_map), F.col("doc_id") == F.col("_node"), "left")
+        .join(F.broadcast(comp_map), F.col("doc_id") == F.col("_node"), "left")
         .select("doc_id", F.coalesce("_super", F.col("doc_id")).alias("component_id"))
     )
     out = updated_old.unionByName(new_assign)
@@ -270,7 +268,6 @@ def merge_cluster_summary(
     base_summary: DataFrame,
     comp_map: DataFrame,
     new_assign: DataFrame,
-    broadcast_map: bool = True,
 ) -> DataFrame:
     """Maintain the (component_id, n_docs, rep_doc) summary across an
     increment WITHOUT re-aggregating the corpus.
@@ -287,11 +284,10 @@ def merge_cluster_summary(
     the component id (the component's min) — exactly what
     ``cluster_summary`` produces.
     """
-    bc = F.broadcast if broadcast_map else (lambda df: df)
     touched_ids = comp_map.select(F.col("_node").alias("component_id")).distinct()
-    untouched = base_summary.join(bc(touched_ids), "component_id", "left_anti")
+    untouched = base_summary.join(F.broadcast(touched_ids), "component_id", "left_anti")
     touched_old = (
-        base_summary.join(bc(comp_map), base_summary["component_id"] == F.col("_node"))
+        base_summary.join(F.broadcast(comp_map), base_summary["component_id"] == F.col("_node"))
         .groupBy(F.col("_super").alias("component_id"))
         .agg(F.sum("n_docs").alias("n_docs"))
     )

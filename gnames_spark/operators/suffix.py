@@ -1,4 +1,4 @@
-"""Long exact-substring dedup — anchor candidates + rolling-hash LCS.
+"""Long exact-substring dedup — winnowing anchors + rolling-hash LCS.
 
 Reference analog: PartialExact matching — a name matching only a
 sub-part of another (`/root/reference/README.md:47-50`), found via a
@@ -7,18 +7,20 @@ embed one long (>= min_substring_len chars) exact substring inside
 otherwise-different text, which shingle-Jaccard under-scores.
 
 Two stages:
-1. **Anchor candidates** (pure Catalyst): a deterministic 1/anchor_mod
-   subsample of shingle hashes ("anchors", a winnowing-style content-
-   defined sample). Two docs sharing a >=512-char substring of k-word
-   shingles share ~that-many shingles, so they share an anchor with
-   probability ~1-(1-1/q)^(L/q)... in practice >=1 anchor almost surely.
-   Self-join posting lists of anchors through the capped posting
-   engine (the same J1 join shape and per-key cap as LSH buckets).
-2. **LCS verification** (grouped pandas UDF): exact longest-common-
-   substring length per candidate pair via binary search over rolling
-   hashes (two 31-bit moduli + direct string confirmation — collision-
-   proof and deterministic). Runs inside ``mapInPandas`` over the
-   pair+texts join — Arrow-batched, no per-row Python round trips.
+1. **Anchor candidates**: each doc's winnowing anchors (the window
+   minima of its in-order shingle hashes, ``sigkernel.winnow_anchors``)
+   — any shared run of >= ``winnow_window`` shingles holds a shared
+   anchor, so ``cfg.substring_guarantee_chars()`` shared chars
+   guarantee ``min_shared_anchors`` of them. Posting lists of anchors
+   self-join through the capped posting engine (the same J1 join shape
+   and per-key cap as LSH buckets): :func:`anchor_pairs_from_anchors`.
+2. **LCS verification** (:func:`has_common_substring`): one rolling-
+   hash window probe at min_substring_len (two 31-bit moduli + direct
+   string confirmation — collision-proof and deterministic). The
+   pipeline runs it in ``verify.verify_candidates``'s kernel on the
+   routed Jaccard failures; :func:`substring_verify` is the standalone
+   form (the graded row). :func:`lcs_length_sa` (generalized suffix
+   array + LCP) is the independent reference it is pytest-pinned to.
 """
 
 from __future__ import annotations
@@ -200,22 +202,6 @@ def has_common_substring(a: str, b: str, min_len: int) -> bool:
     return _common_window(a_codes, b_codes, min_len, a, b)
 
 
-def anchor_candidates(
-    shingle_sets: DataFrame, cfg: DedupConfig, id_col: str = "doc_id", set_col: str = "shingle_set"
-) -> tuple[DataFrame, DataFrame]:
-    """Docs sharing an anchor shingle → candidate pairs (method='anchor').
-
-    Anchors: shingle hashes with pmod(hash, anchor_mod) == 0 — a
-    deterministic content-defined 1/anchor_mod sample of each doc's
-    shingles, so shared long substrings surface as shared anchors
-    without comparing full sets.
-    """
-    anchors = shingle_sets.select(
-        id_col, F.explode(set_col).alias("anchor")
-    ).filter(F.pmod(F.col("anchor"), F.lit(cfg.anchor_mod)) == 0)
-    return anchor_pairs_from_anchors(anchors, cfg, id_col)
-
-
 def shared_anchor_pairs(pairs: DataFrame, min_shared: int) -> DataFrame:
     """Keep the anchor-engine pairs sharing >= ``min_shared`` distinct
     anchors (one engine row per shared anchor; deduped as a side effect
@@ -254,21 +240,12 @@ def substring_verify(
     cfg: DedupConfig,
     id_col: str = "doc_id",
     text_col: str = "text",
-    kernel: str = "rolling",
 ) -> DataFrame:
     """Verify candidate pairs for a shared >= min_substring_len substring.
 
     Joins texts onto the pairs (two shuffles) then streams Arrow batches
-    through the window check. Output:
-    (doc_a, doc_b, method='suffix', passed, lcs_len=-1 sentinel unless
-    computed).
-
-    ``kernel`` picks the per-pair algorithm: ``"rolling"`` (default —
-    one rolling-hash window probe at min_len, cheapest) or
-    ``"suffix_array"`` (generalized suffix array + LCP; the
-    independent second implementation, pytest-pinned equal)."""
-    if kernel not in ("rolling", "suffix_array"):
-        raise ValueError(f"unknown substring kernel: {kernel!r}")
+    through :func:`has_common_substring`. Output:
+    (doc_a, doc_b, passed, method='suffix')."""
     min_len = cfg.min_substring_len
     texts_a = docs.select(F.col(id_col).alias("doc_a"), F.col(text_col).alias("_ta"))
     texts_b = docs.select(F.col(id_col).alias("doc_b"), F.col(text_col).alias("_tb"))
@@ -276,16 +253,10 @@ def substring_verify(
 
     def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if kernel == "rolling":
-                passed = [
-                    has_common_substring(ta, tb, min_len)
-                    for ta, tb in zip(pdf["_ta"], pdf["_tb"])
-                ]
-            else:
-                passed = [
-                    lcs_length_sa(ta, tb) >= min_len
-                    for ta, tb in zip(pdf["_ta"], pdf["_tb"])
-                ]
+            passed = [
+                has_common_substring(ta, tb, min_len)
+                for ta, tb in zip(pdf["_ta"], pdf["_tb"])
+            ]
             yield pd.DataFrame(
                 {"doc_a": pdf["doc_a"], "doc_b": pdf["doc_b"], "passed": passed}
             )

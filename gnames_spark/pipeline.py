@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from gnames_spark.checkpoint import ParquetCheckpointIO
 from gnames_spark.config import DedupConfig
 from gnames_spark.functions.extraction import extract_text
-from gnames_spark.functions.sigkernel import make_shingle_set_udf, make_signature_udf
+from gnames_spark.functions.sigkernel import make_signature_udf
 from gnames_spark.metrics import MetricsCollector
 from gnames_spark.operators.components import all_components, connected_components
 from gnames_spark.operators.exact import (
@@ -57,8 +57,8 @@ from gnames_spark.operators.lsh import band_postings
 from gnames_spark.operators.postings import capped_posting_pairs
 from gnames_spark.operators.representatives import cluster_summary, select_representatives
 from gnames_spark.operators.scoring import method_rank_col, pair_score
-from gnames_spark.operators.suffix import shared_anchor_pairs, substring_verify
-from gnames_spark.operators.verify import verify_pairs
+from gnames_spark.operators.suffix import shared_anchor_pairs
+from gnames_spark.operators.verify import verify_candidates
 
 
 class _PostingBranch(NamedTuple):
@@ -501,23 +501,36 @@ class DedupPipeline:
 
         def build():
             # exact-method pairs are already proven (byte identity)
-            exact = candidates.filter(F.col("method") == "exact").withColumn(
-                "jaccard", F.lit(1.0)
-            ).withColumn("passed", F.lit(True))
+            exact = candidates.filter(F.col("method") == "exact").select(
+                "doc_a", "doc_b", "method",
+                F.lit(1.0).alias("jaccard"), F.lit(True).alias("passed"),
+            )
             rest = candidates.filter(F.col("method") != "exact")
+            # Jaccard-failed ANCHOR pairs get the substring check
+            # (PartialExact): winnowing guarantees any >= min_substring_len
+            # shared substring produced a shared anchor, so lsh-only
+            # failures cannot be substring dups — skipping them keeps the
+            # LCS kernel off the boilerplate cross-pair flood. EXCEPTION
+            # (opt-in): anchor_cap drops hot anchor buckets, so a doc
+            # whose anchors overflowed may carry a genuine substring dup
+            # without the anchor tag; route_overflow_to_lcs=True routes
+            # its pairs (flagged anchor_overflow) too — full PartialExact
+            # recall at boilerplate-flood cost (see __init__).
+            lcs_route = F.col("method") == "anchor"
+            if self.route_overflow_to_lcs:
+                lcs_route = lcs_route | F.col("anchor_overflow")
             # size-ratio prefilter: J(A,B) <= min(|A|,|B|)/max(|A|,|B|),
             # so an lsh pair whose shingle-count ratio is below
             # the threshold CANNOT pass Jaccard — drop it before the
-            # (expensive) set hydration + intersection. n_shingles is
-            # already in the narrow signatures table; the two joins ride
-            # the same doc_id shuffle the hydration would have paid.
-            # anchor-tagged pairs are exempt (their Jaccard failure
-            # routes them to the substring LCS check, a path that must
-            # survive regardless of set-size skew); overflow-flagged
-            # pairs are exempt ONLY when route_overflow_to_lcs is on —
-            # with routing off (default) they can never reach LCS, so
-            # exempting them just bought 143k useless hydrations per 30k
-            # docs (measured: every one died at Jaccard).
+            # (expensive) text join-back + intersection. n_shingles is
+            # already in the narrow signatures table. LCS-routable pairs
+            # are exempt (their Jaccard failure routes them to the
+            # substring check, a path that must survive regardless of
+            # set-size skew); overflow-flagged pairs are routable ONLY
+            # when route_overflow_to_lcs is on — with routing off
+            # (default) they can never reach LCS, so exempting them just
+            # bought 143k useless hydrations per 30k docs (measured:
+            # every one died at Jaccard).
             nsz = signatures.select("doc_id", "n_shingles")
             na = nsz.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("_na"))
             nb = nsz.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("_nb"))
@@ -526,69 +539,20 @@ class DedupPipeline:
                 F.least("_na", "_nb")
                 < F.lit(cfg.jaccard_threshold) * F.greatest("_na", "_nb")
             )
-            lcs_exempt = F.col("method") == "anchor"
-            if self.route_overflow_to_lcs:
-                lcs_exempt = lcs_exempt | F.col("anchor_overflow")
-            prunable = ratio_fail & ~lcs_exempt & F.col("_na").isNotNull() & F.col("_nb").isNotNull()
-            pruned = (
-                sized.filter(prunable)
-                .select("doc_a", "doc_b", "method", "anchor_overflow")
-                .withColumn("jaccard", F.lit(0.0))
-                .withColumn("passed", F.lit(False))
+            prunable = ratio_fail & ~lcs_route & F.col("_na").isNotNull() & F.col("_nb").isNotNull()
+            pruned = sized.filter(prunable).select(
+                "doc_a", "doc_b", "method",
+                F.lit(0.0).alias("jaccard"), F.lit(False).alias("passed"),
             )
-            rest = sized.filter(~prunable).drop("_na", "_nb")
-            # join-back hydration: recompute shingle sets (same kernel →
-            # identical hashes) for ONLY the docs that appear in a pair —
-            # cheaper at every scale than storing/shuffling the wide
-            # shingle arrays for the whole corpus
-            participants = (
-                rest.select(F.col("doc_a").alias("doc_id"))
-                .union(rest.select(F.col("doc_b").alias("doc_id")))
-                .distinct()
+            # join-back: one pair⋈texts crossing whose kernel builds each
+            # participant's shingle set (same code as the signature
+            # kernel → identical hashes), takes the Jaccard and runs the
+            # substring check on the routed failures
+            ver = verify_candidates(
+                sized.filter(~prunable), docs, cfg,
+                route=lcs_route if self.enable_substring else None,
             )
-            set_udf = make_shingle_set_udf(cfg)
-            sets = (
-                docs.join(participants, "doc_id", "left_semi")
-                .select("doc_id", set_udf(F.col("text")).alias("shingle_set"))
-            )
-            ver = verify_pairs(rest, sets, cfg, set_col="shingle_set").unionByName(
-                pruned.select(*rest.columns, "jaccard", "passed")
-            )
-            if self.enable_substring:
-                # Jaccard-failed ANCHOR pairs get the substring check
-                # (PartialExact). Only the anchor method indicates a
-                # possible long shared run: winnowing guarantees any
-                # >= min_substring_len shared substring produced a
-                # shared anchor, so lsh-only failures cannot be
-                # substring dups — skipping them keeps the expensive
-                # LCS kernel off the boilerplate cross-pair flood.
-                # EXCEPTION (opt-in): anchor_cap drops hot anchor
-                # buckets before pair generation, so a doc whose anchors
-                # overflowed may carry a genuine substring dup without
-                # the anchor tag. With route_overflow_to_lcs=True those
-                # pairs (flagged anchor_overflow by the candidates
-                # stage) are routed to LCS regardless of method — full
-                # PartialExact recall, at boilerplate-flood cost (see
-                # __init__ docstring for the measured tradeoff).
-                route = F.col("method") == "anchor"
-                if self.route_overflow_to_lcs:
-                    route = route | F.col("anchor_overflow")
-                failed = ver.filter((~F.col("passed")) & route).select("doc_a", "doc_b")
-                sub = substring_verify(failed, docs, cfg).filter("passed")
-                sub_edges = sub.select(
-                    "doc_a", "doc_b", F.lit("suffix").alias("method"),
-                    F.lit(0.0).alias("jaccard"), F.lit(True).alias("passed"),
-                )
-                ver = ver.select("doc_a", "doc_b", "method", "jaccard", "passed").unionByName(
-                    sub_edges
-                ).groupBy("doc_a", "doc_b").agg(
-                    F.max_by("method", F.when(F.col("passed"), 2).otherwise(1)).alias("method"),
-                    F.max("jaccard").alias("jaccard"),
-                    F.max("passed").alias("passed"),
-                )
-            else:
-                ver = ver.select("doc_a", "doc_b", "method", "jaccard", "passed")
-            out = exact.select("doc_a", "doc_b", "method", "jaccard", "passed").unionByName(ver)
+            out = exact.unionByName(pruned).unionByName(ver)
             return out.withColumn("score", pair_score(hamming_col=None))
 
         return self._stage("verified_pairs", build)

@@ -12,7 +12,11 @@ from pyspark.sql import functions as F
 from gnames_spark.config import DedupConfig
 from gnames_spark.corpus import GROUP_SLOTS, expected_dup_groups, generate_pages, truth_role
 from gnames_spark.functions.shingles import shingle_set
-from gnames_spark.functions.sigkernel import make_signature_udf
+from gnames_spark.functions.sigkernel import (
+    make_anchor_udf,
+    make_shingle_set_udf,
+    make_signature_udf,
+)
 from gnames_spark.functions.simhash import make_fnv_simhash_udf
 from gnames_spark.operators import components
 from gnames_spark.operators.components import all_components, connected_components
@@ -22,14 +26,16 @@ from gnames_spark.operators.representatives import cluster_summary, select_repre
 from gnames_spark.operators.scoring import best_match_per_doc, pair_score
 from gnames_spark.operators.simhash_join import simhash_candidates
 from gnames_spark.operators.suffix import (
-    anchor_candidates,
+    anchor_pairs_from_anchors,
     has_common_substring,
     lcs_length,
+    lcs_length_sa,
     substring_verify,
 )
 from gnames_spark.operators.verify import (
     containment_pairs,
     exact_jaccard_pairs,
+    verify_candidates,
     verify_pairs,
 )
 
@@ -434,6 +440,15 @@ class TestEndToEndClusters:
 
 
 class TestSuffix:
+    @staticmethod
+    def _anchor_pairs(docs):
+        """The pipeline's anchor branch: winnowing anchors → capped
+        posting engine → pairs sharing >= min_shared_anchors."""
+        anchors = docs.select(
+            "doc_id", F.explode(make_anchor_udf(CFG)(F.col("text"))).alias("anchor")
+        )
+        return anchor_pairs_from_anchors(anchors, CFG)[0]
+
     def test_lcs_unit(self):
         assert lcs_length("abcdef", "zzabczz") == 3
         assert lcs_length("abc", "xyz") == 0
@@ -451,7 +466,7 @@ class TestSuffix:
 
     def test_substring_pipeline(self, spark, docs):
         """Planted substring families are caught by anchors + LCS verify."""
-        pairs, _ = anchor_candidates(docs, CFG, set_col="shingle_set")
+        pairs = self._anchor_pairs(docs)
         verified = substring_verify(pairs, docs, CFG)
         hits = verified.filter("passed")
         # docs sharing >=512-char substring: group role 'substring'
@@ -474,24 +489,128 @@ class TestSuffix:
         assert checked > 3
 
     def test_suffix_array_kernel_matches_rolling(self, spark, docs):
-        """The generalized-suffix-array verify kernel passes exactly the
-        same pairs as the rolling-hash kernel on the planted corpus."""
-        pairs, _ = anchor_candidates(docs, CFG, set_col="shingle_set")
+        """The generalized-suffix-array LCS length passes exactly the
+        same pairs as the rolling-hash check on the planted corpus."""
+        pairs = self._anchor_pairs(docs)
         rolling = {
             (r["doc_a"], r["doc_b"])
             for r in substring_verify(pairs, docs, CFG).filter("passed").collect()
         }
+        ta = docs.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("ta"))
+        tb = docs.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("tb"))
         sa = {
             (r["doc_a"], r["doc_b"])
-            for r in substring_verify(pairs, docs, CFG, kernel="suffix_array")
-            .filter("passed")
-            .collect()
+            for r in pairs.join(ta, "doc_a").join(tb, "doc_b").collect()
+            if lcs_length_sa(r["ta"], r["tb"]) >= CFG.min_substring_len
         }
         assert sa == rolling and rolling
-        import pytest as _pytest
 
-        with _pytest.raises(ValueError):
-            substring_verify(pairs, docs, CFG, kernel="bogus")
+
+class TestVerifyCandidates:
+    """The one-crossing verifier equals its oracles: verify_pairs over
+    make_shingle_set_udf sets, then substring_verify on the routed
+    Jaccard failures (a pass there → method 'suffix', jaccard kept)."""
+
+    @staticmethod
+    def _corpus():
+        rng = np.random.RandomState(3)
+
+        def words(n):
+            return " ".join(f"w{v}" for v in rng.randint(0, 100_000, n))
+
+        shared = words(120)  # ~840 chars, well over min_substring_len
+        near = words(150)
+        edge = words(100).split()
+        uni = "\xa0".join(["İstanbul", "straße", "中文　文本"] * 30 + [words(40)])
+        texts = {
+            1: near,
+            2: near.replace(near.split()[7], "changed", 1),  # J ≥ 0.8
+            3: words(200) + " " + shared,
+            4: shared + " " + words(200),
+            5: words(80) + " " + shared + " " + words(80),
+            6: words(200),
+            7: words(200),
+            8: "two tokens",  # fewer than shingle_k tokens
+            9: uni,
+            10: uni.replace("straße", "strasse", 1),
+            11: words(300) + "　" + uni,
+            12: "",
+            13: "   \t\xa0　   ",
+            14: None,
+            15: " ".join(edge),
+            # two far-apart words changed: 86 of 106 shingles shared, J ≈ 0.81
+            16: " ".join(edge[:20] + ["x1"] + edge[21:60] + ["x2"] + edge[61:]),
+        }
+        # (doc_a, doc_b, method, anchor_overflow)
+        pairs = [
+            (1, 2, "lsh", False),      # Jaccard pass
+            (3, 4, "anchor", False),   # routed, LCS pass
+            (4, 5, "anchor", True),    # routed, LCS pass
+            (6, 7, "anchor", False),   # routed, LCS fail
+            (3, 5, "lsh", False),      # unrouted J-fail sharing a long run
+            (3, 6, "lsh", True),       # routed by the overflow flag, LCS fail
+            (5, 6, "lsh", True),       # routed by the overflow flag, LCS fail
+            (4, 11, "lsh", True),      # routed by the overflow flag
+            (15, 16, "lsh", False),    # Jaccard pass just above the threshold
+            (9, 10, "lsh", False),     # unicode near-dup
+            (9, 11, "anchor", False),  # unicode, routed, LCS pass
+            (8, 1, "anchor", False),
+            (8, 12, "lsh", False),
+            (12, 13, "anchor", False),
+            (13, 14, "anchor", True),
+            (14, 1, "lsh", False),
+        ]
+        # doc 1 sits in many pairs, so its rows span several Arrow batches
+        pairs += [(1, d, "anchor" if d % 2 else "lsh", d % 3 == 0) for d in range(3, 17)]
+        return list(texts.items()), pairs
+
+    def test_matches_oracles_across_arrow_batches(self, spark):
+        texts, pairs = self._corpus()
+        docs = spark.createDataFrame(texts, "doc_id long, text string").repartition(3)
+        cands = spark.createDataFrame(
+            pairs, "doc_a long, doc_b long, method string, anchor_overflow boolean"
+        ).repartition(2)
+        route = (F.col("method") == "anchor") | F.col("anchor_overflow")
+
+        sets = docs.select("doc_id", make_shingle_set_udf(CFG)(F.col("text")).alias("shingle_set"))
+        jac = verify_pairs(cands, sets, CFG).collect()
+        routed = {
+            (r["doc_a"], r["doc_b"])
+            for r in jac if not r["passed"] and (r["method"] == "anchor" or r["anchor_overflow"])
+        }
+        lcs = {
+            (r["doc_a"], r["doc_b"])
+            for r in substring_verify(
+                spark.createDataFrame(sorted(routed), "doc_a long, doc_b long"), docs, CFG
+            ).filter("passed").collect()
+        }
+        plain = {(r["doc_a"], r["doc_b"], r["method"], r["jaccard"], r["passed"]) for r in jac}
+        expected = {
+            (a, b, "suffix", j, True) if (a, b) in lcs else (a, b, m, j, p)
+            for a, b, m, j, p in plain
+        }
+        # every case the kernel branches on is present
+        assert len(expected) == len(pairs)
+        assert any(p and m != "suffix" and j < 0.85 for _, _, m, j, p in expected)
+        assert {(3, 4), (4, 5), (9, 11)} <= lcs and routed - lcs
+        # (3, 5) fails Jaccard and shares a long run, but is not routed
+        text = dict(texts)
+        assert has_common_substring(text[3], text[5], CFG.min_substring_len)
+        assert (3, 5) not in routed and not any(p for a, b, _, _, p in plain if (a, b) == (3, 5))
+
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "3")
+        try:
+            cols = ("doc_a", "doc_b", "method", "jaccard", "passed")
+            got = {tuple(r[c] for c in cols)
+                   for r in verify_candidates(cands, docs, CFG, route=route).collect()}
+            unrouted = {tuple(r[c] for c in cols)
+                        for r in verify_candidates(cands, docs, CFG).collect()}
+        finally:
+            spark.conf.set(key, old)
+        assert got == expected
+        assert unrouted == plain
 
 
 class TestScoring:

@@ -375,3 +375,25 @@ class TestRepetitionGatePlan:
         assert plan.count("Exchange") == 0, plan
         assert plan.count("Join") == 0, plan
         assert plan.count("ArrowEvalPython") == 1, plan
+
+
+class TestVerifiedStagePlan:
+    """The verify stage is one pair⋈texts crossing: the Jaccard and the
+    substring check run in one Arrow kernel — no per-doc set hydration,
+    no second crossing for the routed pairs, no merge aggregate."""
+
+    def test_verify_is_one_kernel(self, spark, docs):
+        from gnames_spark.pipeline import DedupPipeline
+        from gnames_spark.plans.audit import physical_plan
+
+        cands = spark.createDataFrame(
+            [(1, 2, "exact", False), (1, 3, "lsh", False), (2, 3, "anchor", True)],
+            "doc_a long, doc_b long, method string, anchor_overflow boolean",
+        )
+        sigs = docs.select("doc_id", F.length("text").alias("n_shingles"))
+        pipe = DedupPipeline(spark, CFG)
+        pipe._stage = lambda name, build: build()  # the stage's plan, unmaterialized
+        plan = physical_plan(pipe.verified(cands, sigs, docs))
+        assert plan.count("MapInPandas") == 1, plan
+        for node in ("ArrowEvalPython", "HashAggregate", "SortAggregate"):
+            assert plan.count(node) == 0, (node, plan)
