@@ -9,7 +9,7 @@ Prints ONE JSON line:
    "scaling": {...}}   # scaling block only when SPARK_GRAFT_SCALING=1
 
 The headline is the flagship dedup pipeline (extract-less corpus →
-signatures → LSH+SimHash+anchor candidates → verify → components →
+signatures → exact+LSH+anchor candidates → verify → components →
 representatives) over the sf documents table, plus one query per major
 operator family. Each timing includes full materialization (count/write),
 not plan construction.

@@ -128,7 +128,6 @@ def build_arg_parser() -> argparse.ArgumentParser:
                         "machinery maintains docs/signatures/components, "
                         "not embedding tables)")
     p.add_argument("--no-substring", action="store_true")
-    p.add_argument("--route-overflow-to-lcs", action="store_true")
     for flag, typ in _CFG_FLAGS:
         p.add_argument(f"--{flag}", type=typ, default=None)
     p.add_argument("--collapse-url-snapshots", action="store_true",
@@ -237,7 +236,6 @@ def main(argv: list[str] | None = None) -> int:
         run_id=args.run_id,
         enable_substring=not args.no_substring,
         cc_checkpoint_rounds=args.cc_checkpoint_rounds,
-        route_overflow_to_lcs=args.route_overflow_to_lcs,
     )
     out = args.output.rstrip("/")
     if args.preclean_report:

@@ -53,7 +53,9 @@ def optimal_bands(num_perms: int, tau: float, target_recall: float = 0.99) -> tu
 
 # fields no code reads any more, at the values they always had;
 # config_hash() keeps them so every standing checkpoint store stays valid
-_RETIRED_FIELDS = {"shingle_mode": "word", "arrow_batch_rows": 2048, "anchor_mod": 16}
+_RETIRED_FIELDS = {
+    "shingle_mode": "word", "arrow_batch_rows": 2048, "anchor_mod": 16, "simhash_bits": 64,
+}
 
 
 @dataclass(frozen=True)
@@ -69,8 +71,7 @@ class DedupConfig:
     rows_per_band: int = 4        # (32,4): P(catch|J=0.75) ≈ 0.999995
     minhash_seed: int = 42
 
-    # SimHash / Hamming
-    simhash_bits: int = 64
+    # SimHash / Hamming (64-bit fingerprints, one long column)
     hamming_d: int = 3            # pigeonhole: d+1 = 4 chunks of 16 bits
 
     # verification
@@ -195,10 +196,8 @@ class DedupConfig:
             raise ValueError(
                 f"bands*rows ({self.bands}*{self.rows_per_band}) must equal num_perms ({self.num_perms})"
             )
-        if self.simhash_bits != 64:
-            raise ValueError("simhash_bits must be 64 (packed into one long column)")
-        if self.simhash_bits % (self.hamming_d + 1) != 0:
-            raise ValueError("hamming_d+1 must divide simhash_bits for pigeonhole chunks")
+        if 64 % (self.hamming_d + 1) != 0:
+            raise ValueError("hamming_d+1 must divide the 64 SimHash bits for pigeonhole chunks")
         if not (0.0 < self.emb_threshold <= 1.0):
             raise ValueError("emb_threshold must be in (0, 1]")
         if self.min_shared_anchors > 2:

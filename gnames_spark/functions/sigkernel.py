@@ -141,25 +141,18 @@ def band_hashes(mat: np.ndarray, bands: int, rows: int, coeffs: np.ndarray) -> n
     return (splitmix64(B) >> np.uint64(1)).astype(np.int64)
 
 
-def signature_schema(include_set: bool = False) -> T.StructType:
-    fields = [
-        T.StructField("bands", T.ArrayType(T.LongType()), False),
-        T.StructField("n_shingles", T.IntegerType(), False),
-        T.StructField("anchors", T.ArrayType(T.LongType()), False),
-    ]
-    if include_set:
-        fields.append(T.StructField("shingle_set", T.ArrayType(T.LongType()), False))
-    return T.StructType(fields)
-
-
-def make_signature_udf(cfg: DedupConfig, include_set: bool = False):
-    """pandas UDF: text → struct(bands, n_shingles, anchors[,
-    shingle_set]). One Arrow crossing per batch."""
+def make_signature_udf(cfg: DedupConfig):
+    """pandas UDF: text → struct(bands, n_shingles, anchors). One Arrow
+    crossing per batch."""
     seeds = perm_params(cfg.num_perms, cfg.minhash_seed)
     kcoef = poly_coeffs(cfg.shingle_k, 101)
     bcoef = poly_coeffs(cfg.rows_per_band, 202)
     b, r, wwin = cfg.bands, cfg.rows_per_band, cfg.winnow_window
-    schema = signature_schema(include_set)
+    schema = T.StructType([
+        T.StructField("bands", T.ArrayType(T.LongType()), False),
+        T.StructField("n_shingles", T.IntegerType(), False),
+        T.StructField("anchors", T.ArrayType(T.LongType()), False),
+    ])
     empty = np.empty(0, dtype=np.int64)
 
     @F.pandas_udf(schema)
@@ -173,32 +166,23 @@ def make_signature_udf(cfg: DedupConfig, include_set: bool = False):
             np.cumsum(counts[:-1], out=offsets[1:])
         n_sh = np.zeros(len(counts), dtype=np.int32)
         anchors: list[np.ndarray] = []
-        sets: list[np.ndarray] = []
         for i, (s, c) in enumerate(zip(offsets, counts)):
             if c == 0:
                 anchors.append(empty)
-                if include_set:
-                    sets.append(empty)
                 continue
             seq = S[s : s + c]
-            u = np.unique(seq)
-            n_sh[i] = len(u)
+            n_sh[i] = len(np.unique(seq))
             # winnowing anchors (see winnow_anchors): far fewer random
             # cross-doc collisions than mod-sampling (which emitted 1.9M
             # candidate pairs at 120k docs).
             anchors.append(winnow_anchors(seq, wwin))
-            if include_set:
-                sets.append((u >> np.uint64(1)).astype(np.int64))
-        data = {
+        return pd.DataFrame({
             # empty docs keep an empty bands array so a stray unfiltered
             # explode can never bucket them together
             "bands": [bandh[i] if counts[i] > 0 else empty for i in range(len(counts))],
             "n_shingles": pd.Series(n_sh),
             "anchors": anchors,
-        }
-        if include_set:
-            data["shingle_set"] = sets
-        return pd.DataFrame(data)
+        })
 
     return signature_udf
 

@@ -179,9 +179,7 @@ def _local_finish(edges: DataFrame) -> DataFrame:
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 50,
-    checkpoint: bool = True,
     io=None,
-    stage_prefix: str = "cc_round",
     salt_buckets: int | None = None,
 ) -> DataFrame:
     """(src, dst) edge list → (doc_id, component_id) assignments.
@@ -210,32 +208,23 @@ def connected_components(
     # ~10 rounds.
     spark = edges.sparkSession
 
-    def _cut(df: DataFrame | None, round_no: int, build=None):
+    def _cut(round_no: int, build) -> DataFrame:
         if io is not None:
-            got, _ = io.write_or_reuse(
-                spark, f"{stage_prefix}_{round_no:03d}", (build or (lambda: df))
-            )
-            return got
-        if df is None:
-            df = build()
-        return df.localCheckpoint(eager=True) if checkpoint else df
+            return io.write_or_reuse(spark, f"cc_round_{round_no:03d}", build)[0]
+        return build().localCheckpoint(eager=True)
 
-    e = _cut(_normalize(edges), 0)
+    e = _cut(0, lambda: _normalize(edges))
     prev = _checksum(e)
     if prev[0] <= LOCAL_FINISH_MAX_EDGES:
         if io is None:
             return _local_finish(e)
         # one store stage, so a resumed run reuses the finished assignment
-        got, _ = io.write_or_reuse(spark, f"{stage_prefix}_final", lambda: _local_finish(e))
+        got, _ = io.write_or_reuse(spark, "cc_round_final", lambda: _local_finish(e))
         return got
     converged = False
     for i in range(max_iterations):
         prev_e = e
-        e = _cut(
-            None,
-            i + 1,
-            build=lambda: _small_star(_large_star(prev_e, salt_buckets), salt_buckets),
-        )
+        e = _cut(i + 1, lambda: _small_star(_large_star(prev_e, salt_buckets), salt_buckets))
         cur = _checksum(e)
         if cur == prev:
             converged = True

@@ -149,7 +149,6 @@ def remove_docs(
     remove_ids: DataFrame,
     max_iterations: int = 50,
     salt_buckets: int | None = None,
-    broadcast_small: bool = True,
 ) -> DataFrame:
     """Delete docs from a standing assignment — the hard half of an
     upsert (a re-crawled url is ``remove_docs`` of the old version +
@@ -174,30 +173,24 @@ def remove_docs(
     member minima) is preserved: the sub-clustering yields minima of
     the surviving sub-components, which are global minima.
 
-    Set ``broadcast_small=False`` if a removal batch touches components
-    whose combined membership outgrows the broadcast threshold.
-
     Signature-store hygiene is handled separately: pair this with
     :func:`transfer_orphaned_signatures` so that removing a signed
     exact-group representative hands its signature row to a surviving
     byte-identical copy (same content_sha ⇒ identical signature — a
     relabel, not a recompute).
     """
-    bc = F.broadcast if broadcast_small else (lambda df: df)
     rm = remove_ids.select("doc_id").distinct()
     affected = (
-        base_assign.join(bc(rm), "doc_id", "left_semi")
+        base_assign.join(F.broadcast(rm), "doc_id", "left_semi")
         .select("component_id")
         .distinct()
     )
-    members = base_assign.join(bc(affected), "component_id", "left_semi")
-    survivors = members.join(bc(rm), "doc_id", "left_anti").select("doc_id")
+    members = base_assign.join(F.broadcast(affected), "component_id", "left_semi")
+    survivors = members.join(F.broadcast(rm), "doc_id", "left_anti").select("doc_id")
     sub_edges = (
-        edges.join(
-            bc(members.select(F.col("doc_id").alias("src"))), "src", "left_semi"
-        )
-        .join(bc(rm.select(F.col("doc_id").alias("src"))), "src", "left_anti")
-        .join(bc(rm.select(F.col("doc_id").alias("dst"))), "dst", "left_anti")
+        edges.join(F.broadcast(members.select(F.col("doc_id").alias("src"))), "src", "left_semi")
+        .join(F.broadcast(rm.select(F.col("doc_id").alias("src"))), "src", "left_anti")
+        .join(F.broadcast(rm.select(F.col("doc_id").alias("dst"))), "dst", "left_anti")
     )
     sub_assign = connected_components(
         sub_edges, max_iterations=max_iterations, salt_buckets=salt_buckets
@@ -208,15 +201,12 @@ def remove_docs(
             "doc_id", F.coalesce("component_id", F.col("doc_id")).alias("component_id")
         )
     )
-    untouched = base_assign.join(bc(affected), "component_id", "left_anti")
+    untouched = base_assign.join(F.broadcast(affected), "component_id", "left_anti")
     return untouched.unionByName(re_clustered)
 
 
 def transfer_orphaned_signatures(
-    base_docs: DataFrame,
-    base_sigs: DataFrame,
-    remove_ids: DataFrame,
-    broadcast_small: bool = True,
+    base_docs: DataFrame, base_sigs: DataFrame, remove_ids: DataFrame
 ) -> DataFrame:
     """Signature table after a removal batch — the other half of
     :func:`remove_docs`.
@@ -234,30 +224,28 @@ def transfer_orphaned_signatures(
     broadcasts; ``base_docs`` and ``base_sigs`` are each scanned once
     with broadcast semi/anti joins — the standing tables never shuffle.
     The heir choice is a map-side-combined ``groupBy(content_sha).min``
-    over only the affected shas' members. Set ``broadcast_small=False``
-    for pathological removal batches.
+    over only the affected shas' members.
     """
-    bc = F.broadcast if broadcast_small else (lambda df: df)
     rm = remove_ids.select("doc_id").distinct()
     # shas whose SIGNED doc is being removed
     dead = (
         base_sigs.select("doc_id")
-        .join(bc(rm), "doc_id", "left_semi")
+        .join(F.broadcast(rm), "doc_id", "left_semi")
         .join(base_docs.select("doc_id", "content_sha"), "doc_id")
         .select(F.col("doc_id").alias("_dead"), "content_sha")
     )
     # minimum surviving member of each affected sha (the heir)
     heirs = (
         base_docs.select("doc_id", "content_sha")
-        .join(bc(dead.select("content_sha")), "content_sha", "left_semi")
-        .join(bc(rm), "doc_id", "left_anti")
+        .join(F.broadcast(dead.select("content_sha")), "content_sha", "left_semi")
+        .join(F.broadcast(rm), "doc_id", "left_anti")
         .groupBy("content_sha")
         .agg(F.min("doc_id").alias("_heir"))
     )
-    transfer = dead.join(bc(heirs), "content_sha").select("_dead", "_heir")
-    kept = base_sigs.join(bc(rm), "doc_id", "left_anti")
+    transfer = dead.join(F.broadcast(heirs), "content_sha").select("_dead", "_heir")
+    kept = base_sigs.join(F.broadcast(rm), "doc_id", "left_anti")
     moved = (
-        base_sigs.join(bc(transfer), base_sigs["doc_id"] == F.col("_dead"))
+        base_sigs.join(F.broadcast(transfer), base_sigs["doc_id"] == F.col("_dead"))
         .withColumn("doc_id", F.col("_heir"))
         .select(*base_sigs.columns)
     )

@@ -26,7 +26,7 @@ from gnames_spark.operators.postings import capped_posting_pairs
 def simhash_chunks(simhashes: DataFrame, cfg: DedupConfig, id_col: str = "doc_id") -> DataFrame:
     """(doc_id, simhash) → (doc_id, simhash, chunk_id, chunk_val)."""
     n_chunks = cfg.hamming_d + 1
-    width = cfg.simhash_bits // n_chunks
+    width = 64 // n_chunks
     mask = (1 << width) - 1
     chunks_expr = (
         f"transform(sequence(0, {n_chunks - 1}), "

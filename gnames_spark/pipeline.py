@@ -98,7 +98,6 @@ class DedupPipeline:
         run_id: str | None = None,
         enable_substring: bool = True,
         cc_checkpoint_rounds: bool = False,
-        route_overflow_to_lcs: bool = False,
     ):
         self.spark = spark
         self.cfg = cfg or DedupConfig()
@@ -116,19 +115,6 @@ class DedupPipeline:
         # sandbox — localCheckpoint is faster and single-JVM local mode
         # cannot lose an executor. Turn ON for cluster runs.
         self.cc_checkpoint_rounds = cc_checkpoint_rounds and self.io is not None
-        # anchor_cap recall policy. The cap drops hot anchor buckets, so
-        # a pair whose shared anchors ALL sat in overflowed buckets loses
-        # its anchor tag and (by default) skips the substring LCS check —
-        # a DELIBERATE recall bound, not an accident: overflowed anchor
-        # buckets are boilerplate families at web scale (measured: at 30k
-        # synthetic pages 36 overflowed buckets covered 11k docs, and
-        # routing their Jaccard-failed pairs to LCS passed 143k
-        # chrome-sharing pairs — re-creating the quadratic flood the cap
-        # exists to stop AND merging pages that share only template
-        # chrome). Set route_overflow_to_lcs=True to trade that cost for
-        # full PartialExact recall on overflowed buckets; either way the
-        # overflow volume is logged per run (never silent).
-        self.route_overflow_to_lcs = route_overflow_to_lcs
         self._overflow_cache: list[DataFrame] = []
         # stage-name namespace: run_incremental() prefixes every stage
         # ("inc_docs", "inc_verified_pairs", ...) so an increment's
@@ -166,23 +152,21 @@ class DedupPipeline:
 
     def _record_overflow(
         self, name: str, overflow: DataFrame, count_col: str = "n_docs"
-    ) -> DataFrame:
+    ) -> None:
         """Hot-bucket truncation is NEVER silent (north_rule / SURVEY §4
         P5): record how many buckets were dropped and how many docs
         (``count_col``) they held — the analog of the reference logging
         skipped-record counts.
 
         The overflow DF is persisted first: it is consumed twice (this
-        stats collect + the branch's anti-join) and is tiny. The
-        persisted handle is returned; :meth:`_stage` unpersists it once
-        the stage is materialized."""
+        stats collect + the branch's anti-join) and is tiny;
+        :meth:`_stage` unpersists it once the stage is materialized."""
         overflow = overflow.persist()
         self._overflow_cache.append(overflow)
         row = overflow.agg(
             F.count("*").alias("n"), F.coalesce(F.sum(count_col), F.lit(0)).alias("docs")
         ).collect()[0]
         self.metrics.record(self._stage_ns + name, int(row["n"]), 0.0, dropped_docs=int(row["docs"]))
-        return overflow
 
     # -- stages --------------------------------------------------------
     # The full hygiene chain is the composition of the two phases below;
@@ -435,7 +419,16 @@ class DedupPipeline:
         pairs touching >= 1 doc of ``signatures`` are generated —
         old-vs-old connectivity already lives in the base component
         assignment. ``link_edges`` (doc_a, doc_b, method) join the exact
-        branch: the increment's byte-identity edges to base docs."""
+        branch: the increment's byte-identity edges to base docs.
+
+        The caps are the recall bound, as in the reference, which drops
+        a hot key and counts it (``match_records_map.go:17-22``): a pair
+        whose shared keys all sat in overflowed buckets is not a
+        candidate of that branch, and a substring dup whose anchors all
+        overflowed never reaches the LCS check. Overflowed anchor
+        buckets are boilerplate families (measured: at 30k synthetic
+        pages, re-admitting their pairs to LCS passed 143k
+        chrome-sharing pairs). Each branch logs its overflow per run."""
         cfg = self.cfg
 
         def build():
@@ -444,54 +437,25 @@ class DedupPipeline:
                 pairs = pairs.unionByName(link_edges)
             new = signatures.filter(F.col("n_shingles") > 0)
             old = None if base_signatures is None else base_signatures.filter(F.col("n_shingles") > 0)
-            overflow_docs = None
             for br in self._posting_branches():
-                new_post = br.postings(new)
-                old_post = None if old is None else br.postings(old)
                 found, overflow = capped_posting_pairs(
-                    new_post, br.keys, br.cap, cfg.shuffle_partitions,
-                    base=old_post,
+                    br.postings(new), br.keys, br.cap, cfg.shuffle_partitions,
+                    base=None if old is None else br.postings(old),
                 )
-                overflow = self._record_overflow(br.overflow_metric, overflow)
+                self._record_overflow(br.overflow_metric, overflow)
                 pairs = pairs.unionByName(
                     br.pair_filter(found).select("doc_a", "doc_b", F.lit(br.method).alias("method"))
                 )
-                if br.method == "anchor":
-                    # docs whose anchors sat in a dropped (overflowed)
-                    # bucket lost their chance at the anchor tag —
-                    # remember them so the verify stage can still route
-                    # their Jaccard-failed pairs to the substring LCS
-                    # check (cap must truncate work, never silently
-                    # truncate RECALL)
-                    posts = new_post if old_post is None else old_post.unionByName(new_post)
-                    overflow_docs = (
-                        posts.join(overflow.select(*br.keys), list(br.keys), "left_semi")
-                        .select("doc_id")
-                        .distinct()
-                    )
             # one groupBy dedups every branch, keeping the strongest
             # method per pair. anchor outranks lsh: the verified
             # stage routes Jaccard-failed anchor pairs into the
             # substring LCS check, so a pair co-detected by lsh must not
             # lose its anchor tag (a substring dup at J<tau would
             # silently skip LCS otherwise)
-            out = pairs.groupBy("doc_a", "doc_b").agg(
+            return pairs.groupBy("doc_a", "doc_b").agg(
                 F.max_by("method", F.when(F.col("method") == "exact", 4)
                          .when(F.col("method") == "anchor", 3)
                          .otherwise(2)).alias("method")
-            )
-            if overflow_docs is None:
-                return out.withColumn("anchor_overflow", F.lit(False))
-            ova = overflow_docs.select(F.col("doc_id").alias("doc_a"), F.lit(True).alias("_ova"))
-            ovb = overflow_docs.select(F.col("doc_id").alias("doc_b"), F.lit(True).alias("_ovb"))
-            return (
-                out.join(F.broadcast(ova), "doc_a", "left")
-                .join(F.broadcast(ovb), "doc_b", "left")
-                .withColumn(
-                    "anchor_overflow",
-                    F.coalesce("_ova", F.lit(False)) | F.coalesce("_ovb", F.lit(False)),
-                )
-                .drop("_ova", "_ovb")
             )
 
         return self._stage("candidate_pairs", build)
@@ -510,27 +474,18 @@ class DedupPipeline:
             # (PartialExact): winnowing guarantees any >= min_substring_len
             # shared substring produced a shared anchor, so lsh-only
             # failures cannot be substring dups — skipping them keeps the
-            # LCS kernel off the boilerplate cross-pair flood. EXCEPTION
-            # (opt-in): anchor_cap drops hot anchor buckets, so a doc
-            # whose anchors overflowed may carry a genuine substring dup
-            # without the anchor tag; route_overflow_to_lcs=True routes
-            # its pairs (flagged anchor_overflow) too — full PartialExact
-            # recall at boilerplate-flood cost (see __init__).
+            # LCS kernel off the boilerplate cross-pair flood. A pair whose
+            # shared anchors all sat in overflowed buckets carries no
+            # anchor tag and never reaches LCS: the cap is the recall
+            # bound (see candidates).
             lcs_route = F.col("method") == "anchor"
-            if self.route_overflow_to_lcs:
-                lcs_route = lcs_route | F.col("anchor_overflow")
             # size-ratio prefilter: J(A,B) <= min(|A|,|B|)/max(|A|,|B|),
             # so an lsh pair whose shingle-count ratio is below
             # the threshold CANNOT pass Jaccard — drop it before the
             # (expensive) text join-back + intersection. n_shingles is
-            # already in the narrow signatures table. LCS-routable pairs
-            # are exempt (their Jaccard failure routes them to the
-            # substring check, a path that must survive regardless of
-            # set-size skew); overflow-flagged pairs are routable ONLY
-            # when route_overflow_to_lcs is on — with routing off
-            # (default) they can never reach LCS, so exempting them just
-            # bought 143k useless hydrations per 30k docs (measured:
-            # every one died at Jaccard).
+            # already in the narrow signatures table. Anchor pairs are
+            # exempt: their Jaccard failure routes them to the substring
+            # check, a path that must survive regardless of set-size skew.
             nsz = signatures.select("doc_id", "n_shingles")
             na = nsz.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("_na"))
             nb = nsz.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("_nb"))

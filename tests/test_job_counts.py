@@ -7,7 +7,10 @@ jobs, read from the status tracker under a job group:
 - a checkpoint stage write launches exactly the jobs of the bare data
   write (its lineage comes from the parquet footers, on the driver);
 - a small graph's connected components run in a fixed number of jobs,
-  however long its paths are (the local finish replaces the star loop).
+  however long its paths are (the local finish replaces the star loop);
+- the candidate stage, with both posting caps overflowing, launches the
+  jobs of its branches, their two overflow records and its count, and
+  no job that builds a per-pair flag.
 """
 
 from __future__ import annotations
@@ -15,8 +18,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from gnames_spark.checkpoint import ParquetCheckpointIO
+from gnames_spark.config import DedupConfig
+from gnames_spark.corpus import generate_pages
 from gnames_spark.operators import components
 from gnames_spark.operators.components import connected_components
+from gnames_spark.pipeline import DedupPipeline
 
 
 def _jobs(spark, group: str, fn):
@@ -75,3 +81,31 @@ class TestComponentsJobs:
         assert got_long == {i: 0 for i in range(200)}
         # round 0 (normalize + checkpoint), its count, one finishing task
         assert long_ == short <= 6
+
+
+class TestCandidateStageJobs:
+    def test_candidate_stage_job_ceiling(self, spark):
+        gen = generate_pages(spark, 200, seed=5).drop("html")
+        # 50 near-duplicates (one word in 40 differs): their LSH bands and
+        # anchors fill buckets past both caps
+        family = []
+        for i in range(50):
+            words = [f"b{j}" for j in range(320)]
+            for p in range(0, len(words), 40):
+                words[p] = f"x{i}"
+            family.append((f"https://family.example.org/p/{i}", " ".join(words), "en"))
+        pages = gen.select("url", "text", "lang").unionByName(
+            spark.createDataFrame(family, "url string, text string, lang string")
+        )
+        pipe = DedupPipeline(spark, DedupConfig(shuffle_partitions=4, bucket_cap=40, anchor_cap=40))
+        docs = pipe.prepare_docs(pages)
+        sigs = pipe.signatures(docs)
+        n, cands = _jobs(spark, "jc_cands", lambda: pipe.candidates(docs, sigs))
+        assert n <= 24, n
+        records = {m.stage: m for m in pipe.metrics.stages}
+        for overflow in ("lsh_overflow_buckets", "anchor_overflow"):
+            assert records[overflow].extra["dropped_docs"] > 0
+        assert {r["method"] for r in cands.select("method").distinct().collect()} == {
+            "exact", "lsh", "anchor"
+        }
+        assert cands.columns == ["doc_a", "doc_b", "method"]

@@ -131,7 +131,7 @@ def grid_runs(spark, corpus):
             out[(sp, ip)] = {
                 **_summary(res),
                 "candidate_pairs": _digest(
-                    res["candidate_pairs"], ["doc_a", "doc_b", "method", "anchor_overflow"]
+                    res["candidate_pairs"], ["doc_a", "doc_b", "method"]
                 ),
                 "passed_edges": _digest(
                     res["verified_pairs"].filter("passed"), ["doc_a", "doc_b", "method"]

@@ -308,45 +308,10 @@ class TestConfigGuarantee:
 
 
 class TestAnchorOverflowRouting:
-    def test_overflowed_anchor_pair_still_reaches_lcs(self, spark):
-        """A substring dup whose anchors ALL sit in overflowed buckets
-        (anchor_cap=1 drops every shared anchor) must still pass via
-        the overflow->LCS route as long as any branch surfaced the
-        pair. Before the fix it silently lost the substring check."""
-        common = ("shared boilerplate sentence with many stable words "
-                  "keeps flowing onward through the page body " * 12)
-        a = common + " unique tail alpha beta gamma delta epsilon zeta"
-        b = common + " different ending words omega psi chi phi upsilon tau"
-        docs = [(1, a), (2, b)] + [
-            (10 + i, f"unrelated filler document number {i} with its own words "
-                     f"and nothing shared across {i} pages at all")
-            for i in range(8)
-        ]
-        pages = spark.createDataFrame(docs, "doc_id long, text string").withColumn(
-            "url", F.concat(F.lit("u"), F.col("doc_id"))
-        ).withColumn("lang", F.lit("en")).select("url", "doc_id", "text", "lang")
-        cfg = DedupConfig(
-            shuffle_partitions=4,
-            shingle_k=3,
-            winnow_window=8,
-            min_substring_len=200,
-            min_shared_anchors=1,
-            anchor_cap=1,       # every shared anchor bucket overflows
-            max_token_chars=12,
-        )
-        pipe = DedupPipeline(spark, cfg, route_overflow_to_lcs=True)
-        res = pipe.run(pages)
-        ver = {
-            (r["doc_a"], r["doc_b"]): (r["method"], r["passed"])
-            for r in res["verified_pairs"].collect()
-        }
-        assert (1, 2) in ver
-        method, passed = ver[(1, 2)]
-        assert passed and method == "suffix"
-
     def test_default_routing_skips_overflow_but_logs(self, spark):
-        """Default policy: overflowed-anchor pairs do NOT flood LCS; the
-        drop volume is recorded in metrics (never silent)."""
+        """Overflowed-anchor pairs do NOT flood LCS (the cap is the
+        recall bound); the drop volume is recorded in metrics (never
+        silent)."""
         common = ("shared boilerplate sentence with many stable words "
                   "keeps flowing onward through the page body " * 12)
         docs = [(i, common + f" tail variant {i} alpha beta gamma") for i in range(6)]
@@ -357,7 +322,7 @@ class TestAnchorOverflowRouting:
             shuffle_partitions=4, shingle_k=3, winnow_window=8,
             min_substring_len=200, min_shared_anchors=1, anchor_cap=1,
         )
-        pipe = DedupPipeline(spark, cfg)  # default: no overflow routing
+        pipe = DedupPipeline(spark, cfg)
         res = pipe.run(pages)
         res["verified_pairs"].count()
         ov = [m for m in pipe.metrics.stages if m.stage == "anchor_overflow"]

@@ -326,13 +326,12 @@ class TestPostingEnginePlan:
         branches.append(lsh.withColumn("method", F.lit("lsh")))
         anchors = nonempty.select("doc_id", F.explode("anchors").alias("anchor"))
         anc, anc_ov = self._self_join(anchors, ["anchor"], CFG.anchor_cap, CFG.shuffle_partitions)
-        anc_ov = ref._record_overflow("anchor_overflow", anc_ov)
+        ref._record_overflow("anchor_overflow", anc_ov)
         anc = (
             anc.groupBy("doc_a", "doc_b").agg(F.count("*").alias("_n"))
             .filter(F.col("_n") >= CFG.min_shared_anchors).drop("_n")
         )
         branches.append(anc.withColumn("method", F.lit("anchor")))
-        ov_docs = anchors.join(anc_ov.select("anchor"), "anchor", "left_semi").select("doc_id").distinct()
         out = branches[0]
         for br in branches[1:]:
             out = out.unionByName(br)
@@ -341,15 +340,7 @@ class TestPostingEnginePlan:
                      .when(F.col("method") == "anchor", 3)
                      .when(F.col("method") == "lsh", 2).otherwise(1)).alias("method")
         )
-        for side in ("doc_a", "doc_b"):
-            out = out.join(
-                F.broadcast(ov_docs.select(F.col("doc_id").alias(side), F.lit(True).alias(f"_ov_{side}"))),
-                side, "left",
-            )
-        hand = physical_plan(out.withColumn(
-            "anchor_overflow",
-            F.coalesce("_ov_doc_a", F.lit(False)) | F.coalesce("_ov_doc_b", F.lit(False)),
-        ).drop("_ov_doc_a", "_ov_doc_b"))
+        hand = physical_plan(out)
         try:
             assert CFG.min_shared_anchors > 1
             for node in ("Exchange", "Union"):
@@ -387,8 +378,8 @@ class TestVerifiedStagePlan:
         from gnames_spark.plans.audit import physical_plan
 
         cands = spark.createDataFrame(
-            [(1, 2, "exact", False), (1, 3, "lsh", False), (2, 3, "anchor", True)],
-            "doc_a long, doc_b long, method string, anchor_overflow boolean",
+            [(1, 2, "exact"), (1, 3, "lsh"), (2, 3, "anchor")],
+            "doc_a long, doc_b long, method string",
         )
         sigs = docs.select("doc_id", F.length("text").alias("n_shingles"))
         pipe = DedupPipeline(spark, CFG)
