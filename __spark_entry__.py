@@ -953,8 +953,8 @@ def q_dedup_substring_pairs(spark, sf_dir):
     """M5 substring pass under a REAL oracle: winnowing anchors (w=12
     over word-3-shingles guarantees a shared anchor for any verbatim
     run of >= 14 tokens — far under 256 chars at this corpus's <= 8-char
-    words) + exact double-rolling-hash window verification with direct
-    string confirmation. anchor_cap is lifted so the oracle (all
+    words) + exact verification by ``str.find`` probes extended with
+    direct slice compares. anchor_cap is lifted so the oracle (all
     256-char windows string-equi-joined in DuckDB) sees the exact pair
     set; the production pipeline keeps the cap + overflow log."""
     cfg = CFG.with_overrides(

@@ -11,8 +11,8 @@ Why a kernel: the previous Catalyst form ``aggregate(split(text, ''),
 ...)`` evaluates an interpreted JVM lambda per character (~18 µs/elem,
 no codegen — the same pathology purged from shingling, see
 functions/sigkernel.py). Here the window hashes come from modular
-prefix sums (O(n) per doc, same trick as operators/suffix.py but mod
-2^31 with the inverse of 31, which exists because 31 is odd).
+prefix sums (O(n) per doc, mod 2^31 with the inverse of 31, which
+exists because 31 is odd).
 """
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""Long exact-substring dedup — winnowing anchors + rolling-hash LCS.
+"""Long exact-substring dedup — winnowing anchors + probe-and-extend check.
 
 Reference analog: PartialExact matching — a name matching only a
 sub-part of another (`/root/reference/README.md:47-50`), found via a
@@ -14,13 +14,14 @@ Two stages:
    guarantee ``min_shared_anchors`` of them. Posting lists of anchors
    self-join through the capped posting engine (the same J1 join shape
    and per-key cap as LSH buckets): :func:`anchor_pairs_from_anchors`.
-2. **LCS verification** (:func:`has_common_substring`): one rolling-
-   hash window probe at min_substring_len (two 31-bit moduli + direct
-   string confirmation — collision-proof and deterministic). The
-   pipeline runs it in ``verify.verify_candidates``'s kernel on the
-   routed Jaccard failures; :func:`substring_verify` is the standalone
-   form (the graded row). :func:`lcs_length_sa` (generalized suffix
-   array + LCP) is the independent reference it is pytest-pinned to.
+2. **Substring verification** (:func:`has_common_substring`): probes
+   of ceil(min_substring_len/2) chars from ``a`` found in ``b`` with
+   ``str.find``, each extended left and right by direct slice compares
+   — no hashing, exact and deterministic. The pipeline runs it in
+   ``verify.verify_candidates``'s kernel on the routed Jaccard
+   failures; :func:`substring_verify` is the standalone form (the
+   graded row). :func:`lcs_length_sa` (generalized suffix array + LCP)
+   is the LCS reference it is pytest-pinned to.
 """
 
 from __future__ import annotations
@@ -34,72 +35,6 @@ from pyspark.sql import functions as F
 
 from gnames_spark.config import DedupConfig
 from gnames_spark.operators.postings import capped_posting_pairs
-
-_P1, _B1 = np.uint64(2147483647), np.uint64(1000003)      # 2^31-1
-_P2, _B2 = np.uint64(2147483629), np.uint64(100019)
-
-
-def _pow_array(base: int, n: int, p: int) -> np.ndarray:
-    """[base^0, base^1, ..., base^n] mod p — vectorized block doubling."""
-    pw = np.empty(n + 1, dtype=np.uint64)
-    pw[0] = 1
-    m = 1
-    while m <= n:
-        k = min(m, n + 1 - m)
-        # pw[m:m+k] = pw[0:k] * base^m  (operands < 2^31 → exact uint64)
-        pw[m : m + k] = (pw[:k] * pw[m - 1] % p) * (int(base) % p) % p
-        m *= 2
-    return pw
-
-
-def _window_hashes(codes: np.ndarray, L: int, p: np.uint64, base: np.uint64) -> np.ndarray:
-    """Polynomial hashes of all length-L windows, mod p — O(n) via
-    modular prefix sums.
-
-    P_i = Σ_{j<i} c_j·B^j (mod p); window hash
-    H_i = (P_{i+L} − P_i)·B^{-i} = Σ_{j<L} c_{i+j}·B^j (mod p),
-    position-independent. All operands < 2^31 so products stay < 2^62
-    (exact in uint64); the prefix cumsum of n terms < 2^31 stays exact
-    for n < 2^33. (Replaces an O(n·L) window-matrix form that cost
-    ~2-5 ms per 1800-char doc at L=512 — this is ~50 µs.)
-    """
-    n = len(codes)
-    if n < L:
-        return np.empty(0, dtype=np.uint64)
-    pi, bi = int(p), int(base)
-    c = codes.astype(np.uint64) % p
-    bpow = _pow_array(bi, n, pi)
-    binv_pow = _pow_array(pow(bi, pi - 2, pi), n, pi)  # B^{-i} mod p
-    terms = (c * bpow[:n]) % p            # < 2^31 each
-    pref = np.zeros(n + 1, dtype=np.uint64)
-    np.cumsum(terms, out=pref[1:])        # exact: n·2^31 < 2^64
-    pref %= p
-    diff = (pref[L : n + 1] + p - pref[: n - L + 1]) % p
-    return (diff * binv_pow[: n - L + 1]) % p
-
-
-def _common_window(a_codes: np.ndarray, b_codes: np.ndarray, L: int, a: str, b: str) -> bool:
-    """True iff a and b share some exact substring of length L."""
-    if len(a_codes) < L or len(b_codes) < L:
-        return False
-    ha1 = _window_hashes(a_codes, L, _P1, _B1)
-    hb1 = _window_hashes(b_codes, L, _P1, _B1)
-    common1 = np.intersect1d(ha1, hb1, assume_unique=False)
-    if len(common1) == 0:
-        return False
-    ha2 = _window_hashes(a_codes, L, _P2, _B2)
-    hb2 = _window_hashes(b_codes, L, _P2, _B2)
-    # double-hash match, then direct string confirmation (collision-proof)
-    b_by_pair: dict[tuple[int, int], list[int]] = {}
-    for j in np.flatnonzero(np.isin(hb1, common1)):
-        b_by_pair.setdefault((int(hb1[j]), int(hb2[j])), []).append(int(j))
-    for i in np.flatnonzero(np.isin(ha1, common1)):
-        js = b_by_pair.get((int(ha1[i]), int(ha2[i])))
-        if js:
-            window = a[i : i + L]
-            if any(b[j : j + L] == window for j in js):
-                return True
-    return False
 
 
 def _suffix_array(codes: np.ndarray) -> np.ndarray:
@@ -154,9 +89,8 @@ def lcs_length_sa(a: str, b: str) -> int:
     sentinel above any codepoint, then b; the LCS is the max LCP
     between ADJACENT suffixes originating in different docs.
 
-    Independent algorithm from :func:`lcs_length` (binary search over
-    rolling hashes) — the two are property-pinned equal in pytest, so
-    a bug in either kernel's math is caught by the other."""
+    The LCS reference: pytest pins it to an O(nm) DP and
+    :func:`has_common_substring` to ``lcs_length_sa(a, b) >= L``."""
     if not a or not b:
         return 0
     a_codes = np.frombuffer(a.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
@@ -175,31 +109,39 @@ def lcs_length_sa(a: str, b: str) -> int:
     return int(lcp[cross].max())
 
 
-def lcs_length(a: str, b: str) -> int:
-    """Exact longest-common-substring length, O((n+m) log min(n,m))."""
-    if not a or not b:
-        return 0
-    a_codes = np.frombuffer(a.encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
-    b_codes = np.frombuffer(b.encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
-    lo, hi = 0, min(len(a_codes), len(b_codes))
-    while lo < hi:
-        mid = (lo + hi + 1) // 2
-        if _common_window(a_codes, b_codes, mid, a, b):
-            lo = mid
-        else:
-            hi = mid - 1
-    return lo
-
-
 def has_common_substring(a: str, b: str, min_len: int) -> bool:
     """True iff a and b share an exact substring of >= min_len chars.
-    (Any longer common substring contains a length-min_len one, so a
-    single window check suffices — no binary search.)"""
-    if not a or not b:
+
+    Probe and extend, all in C string search and slice compares: with
+    m = ceil(L/2) and s = L + 1 - m, every length-L window of ``a``
+    holds a probe a[i:i+m] with i a multiple of s. At each occurrence j
+    of a probe in ``b``, a binary search finds the longest left
+    extension x <= min(i, j, L-m) (slice equality is monotone in x);
+    the pair passes iff the other L-m-x chars match on the right, with
+    both right slices inside their texts. Raw chars are compared, so a
+    pass is exact; the probe argument makes every shared window found.
+    """
+    L = min_len
+    if not a or not b or len(a) < L or len(b) < L:
         return False
-    a_codes = np.frombuffer(a.encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
-    b_codes = np.frombuffer(b.encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
-    return _common_window(a_codes, b_codes, min_len, a, b)
+    m = (L + 1) // 2
+    s = L + 1 - m
+    for i in range(0, len(a) - m + 1, s):
+        probe = a[i : i + m]
+        j = b.find(probe)
+        while j >= 0:
+            lo, hi = 0, min(i, j, L - m)
+            while lo < hi:
+                x = (lo + hi + 1) // 2
+                if a[i - x : i] == b[j - x : j]:
+                    lo = x
+                else:
+                    hi = x - 1
+            end_a, end_b = i + L - lo, j + L - lo
+            if end_a <= len(a) and end_b <= len(b) and a[i + m : end_a] == b[j + m : end_b]:
+                return True
+            j = b.find(probe, j + 1)
+    return False
 
 
 def shared_anchor_pairs(pairs: DataFrame, min_shared: int) -> DataFrame:

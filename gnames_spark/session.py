@@ -138,7 +138,7 @@ _TUNING_CONFS = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     # AQE coalescing targets BYTES, but the verify stages downstream
     # of candidate joins are tiny-bytes / heavy-Python-CPU (pair ids
-    # + short texts feeding rolling-hash / Jaccard kernels). The
+    # + short texts feeding substring / Jaccard kernels). The
     # default 1MB minPartitionSize floor collapses them to 1-2
     # partitions and the pandas kernel runs single-threaded
     # (measured: substring verify 44s -> 4s at sf0.1 with the floor

@@ -10,7 +10,9 @@ jobs, read from the status tracker under a job group:
   however long its paths are (the local finish replaces the star loop);
 - the candidate stage, with both posting caps overflowing, launches the
   jobs of its branches, their two overflow records and its count, and
-  no job that builds a per-pair flag.
+  no job that builds a per-pair flag;
+- the verified stage, whose one pair⋈texts crossing runs both the
+  Jaccard and the substring check, stays within a fixed job count.
 """
 
 from __future__ import annotations
@@ -83,23 +85,28 @@ class TestComponentsJobs:
         assert long_ == short <= 6
 
 
+def _overflowing_corpus(spark):
+    """(pipeline, docs, signatures) over 200 generated pages plus 50
+    near-duplicates (one word in 40 differs), whose LSH bands and
+    anchors fill buckets past both caps."""
+    gen = generate_pages(spark, 200, seed=5).drop("html")
+    family = []
+    for i in range(50):
+        words = [f"b{j}" for j in range(320)]
+        for p in range(0, len(words), 40):
+            words[p] = f"x{i}"
+        family.append((f"https://family.example.org/p/{i}", " ".join(words), "en"))
+    pages = gen.select("url", "text", "lang").unionByName(
+        spark.createDataFrame(family, "url string, text string, lang string")
+    )
+    pipe = DedupPipeline(spark, DedupConfig(shuffle_partitions=4, bucket_cap=40, anchor_cap=40))
+    docs = pipe.prepare_docs(pages)
+    return pipe, docs, pipe.signatures(docs)
+
+
 class TestCandidateStageJobs:
     def test_candidate_stage_job_ceiling(self, spark):
-        gen = generate_pages(spark, 200, seed=5).drop("html")
-        # 50 near-duplicates (one word in 40 differs): their LSH bands and
-        # anchors fill buckets past both caps
-        family = []
-        for i in range(50):
-            words = [f"b{j}" for j in range(320)]
-            for p in range(0, len(words), 40):
-                words[p] = f"x{i}"
-            family.append((f"https://family.example.org/p/{i}", " ".join(words), "en"))
-        pages = gen.select("url", "text", "lang").unionByName(
-            spark.createDataFrame(family, "url string, text string, lang string")
-        )
-        pipe = DedupPipeline(spark, DedupConfig(shuffle_partitions=4, bucket_cap=40, anchor_cap=40))
-        docs = pipe.prepare_docs(pages)
-        sigs = pipe.signatures(docs)
+        pipe, docs, sigs = _overflowing_corpus(spark)
         n, cands = _jobs(spark, "jc_cands", lambda: pipe.candidates(docs, sigs))
         assert n <= 24, n
         records = {m.stage: m for m in pipe.metrics.stages}
@@ -109,3 +116,18 @@ class TestCandidateStageJobs:
             "exact", "lsh", "anchor"
         }
         assert cands.columns == ["doc_a", "doc_b", "method"]
+
+
+class TestVerifiedStageJobs:
+    def test_verified_stage_job_ceiling(self, spark):
+        pipe, docs, sigs = _overflowing_corpus(spark)
+        cands = pipe.candidates(docs, sigs)
+        n, ver = _jobs(spark, "jc_verified", lambda: pipe.verified(cands, sigs, docs))
+        rows = ver.select("method", "passed").collect()
+        # Jaccard-failed anchor pairs reach the substring check: some
+        # pass there (method "suffix"), some fail it
+        assert any(r["method"] == "suffix" for r in rows)
+        assert any(r["method"] == "anchor" and not r["passed"] for r in rows)
+        # 11 jobs; in some runs adaptive execution adds a twelfth
+        # (two-stage) job before the lineage cut
+        assert n <= 12, n

@@ -28,7 +28,6 @@ from gnames_spark.operators.simhash_join import simhash_candidates
 from gnames_spark.operators.suffix import (
     anchor_pairs_from_anchors,
     has_common_substring,
-    lcs_length,
     lcs_length_sa,
     substring_verify,
 )
@@ -450,13 +449,13 @@ class TestSuffix:
         return anchor_pairs_from_anchors(anchors, CFG)[0]
 
     def test_lcs_unit(self):
-        assert lcs_length("abcdef", "zzabczz") == 3
-        assert lcs_length("abc", "xyz") == 0
-        assert lcs_length("", "x") == 0
-        assert lcs_length("same", "same") == 4
+        assert lcs_length_sa("abcdef", "zzabczz") == 3
+        assert lcs_length_sa("abc", "xyz") == 0
+        assert lcs_length_sa("", "x") == 0
+        assert lcs_length_sa("same", "same") == 4
         long = "x" * 100 + "SHARED-SEGMENT" * 50 + "y" * 100
         other = "a" * 37 + "SHARED-SEGMENT" * 50 + "b" * 11
-        assert lcs_length(long, other) == 14 * 50
+        assert lcs_length_sa(long, other) == 14 * 50
 
     def test_has_common_substring(self):
         a = "unique-left " + "common words here " * 40 + "unique-right"
@@ -490,9 +489,9 @@ class TestSuffix:
 
     def test_suffix_array_kernel_matches_rolling(self, spark, docs):
         """The generalized-suffix-array LCS length passes exactly the
-        same pairs as the rolling-hash check on the planted corpus."""
+        same pairs as the probe-and-extend check on the planted corpus."""
         pairs = self._anchor_pairs(docs)
-        rolling = {
+        probed = {
             (r["doc_a"], r["doc_b"])
             for r in substring_verify(pairs, docs, CFG).filter("passed").collect()
         }
@@ -503,7 +502,7 @@ class TestSuffix:
             for r in pairs.join(ta, "doc_a").join(tb, "doc_b").collect()
             if lcs_length_sa(r["ta"], r["tb"]) >= CFG.min_substring_len
         }
-        assert sa == rolling and rolling
+        assert sa == probed and probed
 
 
 class TestVerifyCandidates:

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from gnames_spark.config import DedupConfig
@@ -38,13 +38,7 @@ from gnames_spark.functions.sigkernel import (
     winnow_anchors,
 )
 from gnames_spark.functions.simhash import simhash_array, simhash_flat
-from gnames_spark.operators.suffix import (
-    _P1,
-    _B1,
-    _window_hashes,
-    has_common_substring,
-    lcs_length,
-)
+from gnames_spark.operators.suffix import has_common_substring, lcs_length_sa
 
 # pure-numpy tests are fast; disable the wall-clock deadline so a noisy
 # shared host can't produce flaky DeadlineExceeded failures
@@ -194,26 +188,12 @@ class TestFingerprintProperties:
 
 
 class TestRollingHashProperties:
-    @given(texts, st.integers(min_value=1, max_value=10))
-    def test_window_hashes_position_independent(self, t, L):
-        """suffix.py's O(n) prefix-sum window hash == the naive
-        Σ c_{i+j}·B^j mod p per window (position independence is what
-        makes cross-document window intersection meaningful)."""
-        codes = _codes(t)
-        if len(codes) < L:
-            return
-        got = _window_hashes(codes, L, _P1, _B1)
-        p, b = int(_P1), int(_B1)
-        expect = [
-            sum(int(codes[i + j]) * pow(b, j, p) for j in range(L)) % p
-            for i in range(len(codes) - L + 1)
-        ]
-        assert [int(v) for v in got] == expect
+    """The exact substring check and its LCS reference."""
 
     @given(st.text(alphabet="abc", max_size=40), st.text(alphabet="abc", max_size=40))
     def test_lcs_matches_dp_reference(self, a, b):
-        """Binary-search-over-rolling-hash LCS == O(nm) DP on a tiny
-        alphabet chosen to maximize hash-collision pressure."""
+        """Suffix-array + LCP LCS == O(nm) DP on a tiny alphabet, which
+        maximizes repeated substrings and suffix-rank ties."""
         n, m = len(a), len(b)
         best = 0
         dp = [0] * (m + 1)
@@ -224,30 +204,60 @@ class TestRollingHashProperties:
                 dp[j] = prev + 1 if a[i - 1] == b[j - 1] else 0
                 best = max(best, dp[j])
                 prev = cur
-        assert lcs_length(a, b) == best
+        assert lcs_length_sa(a, b) == best
 
     @given(st.text(alphabet="ab", max_size=30), st.text(alphabet="ab", max_size=30),
            st.integers(min_value=1, max_value=10))
     def test_has_common_substring_consistent_with_lcs(self, a, b, min_len):
-        assert has_common_substring(a, b, min_len) == (lcs_length(a, b) >= min_len)
-
-    @given(st.text(alphabet="abc", max_size=60), st.text(alphabet="abc", max_size=60))
-    def test_suffix_array_lcs_equals_rolling_hash_lcs(self, a, b):
-        """Two independent exact-LCS algorithms (generalized suffix
-        array + Kasai LCP vs binary search over rolling hashes) must
-        agree on every input — a bug in either kernel's math is caught
-        by the other. Tiny alphabet maximizes repeated-substring and
-        hash-collision pressure."""
-        from gnames_spark.operators.suffix import lcs_length_sa
-
-        assert lcs_length_sa(a, b) == lcs_length(a, b)
+        assert has_common_substring(a, b, min_len) == (lcs_length_sa(a, b) >= min_len)
 
     @given(st.text(min_size=0, max_size=50))
     def test_suffix_array_lcs_unicode_and_self(self, a):
-        from gnames_spark.operators.suffix import lcs_length_sa
-
         assert lcs_length_sa(a, a) == len(a)
         assert lcs_length_sa(a, "") == 0
+
+
+# tiny alphabets force many probe occurrences; İ (2 bytes), U+3000 (3)
+# and an astral emoji (4) keep the check on code points, not bytes
+_SUBSTRING_ALPHABETS = ["a", "ab", "abc", "İ\u3000 ", "a\U0001F600"]
+
+
+@st.composite
+def _planted_substring_cases(draw):
+    """(a, b, L): one run of L-3..L+3 chars planted in both texts at
+    random offsets, the run either random or periodic in a 1- or 2-char
+    unit. The run starts, ends or sits inside each text."""
+    alphabet = draw(st.sampled_from(_SUBSTRING_ALPHABETS))
+    L = draw(st.sampled_from(range(1, 46)))
+    n = max(0, L + draw(st.integers(min_value=-3, max_value=3)))
+    if draw(st.booleans()):
+        run = draw(st.text(alphabet=alphabet, min_size=n, max_size=n))
+    else:
+        unit = draw(st.text(alphabet=alphabet, min_size=1, max_size=2))
+        run = (unit * n)[:n]
+
+    def plant() -> str:
+        left, right = (
+            draw(st.text(alphabet=alphabet, min_size=1, max_size=30)) for _ in range(2)
+        )
+        at = draw(st.sampled_from(["start", "end", "inside"]))
+        return (
+            run + right if at == "start" else left + run if at == "end" else left + run + right
+        )
+
+    return plant(), plant(), L
+
+
+class TestSubstringCheckProperties:
+    @settings(max_examples=1000)
+    @given(_planted_substring_cases())
+    @example(("xxab", "yab", 3))  # the shared "ab" ends both texts, 1 char short of L
+    def test_planted_runs_match_suffix_array_lcs(self, case):
+        """Probe-and-extend passes exactly when the suffix-array LCS is
+        >= L, including probes whose right extension would run past
+        the end of either text."""
+        a, b, L = case
+        assert has_common_substring(a, b, L) == (lcs_length_sa(a, b) >= L)
 
 
 class TestTokenizerProperties:

@@ -25,7 +25,9 @@ their representative's star edges).
 Cross-group merges are reported separately (with the planted structure
 they indicate either a real near-dup coincidence or over-merging).
 
-Usage: python tools/recall_check.py [n_docs] → prints JSON, writes RECALL.json
+Usage: python tools/recall_check.py [n_docs] → prints the result as JSON
+on stdout and writes no file; regenerate the committed 500k-doc
+evidence with ``python tools/recall_check.py 500000 > RECALL.json``.
 """
 
 from __future__ import annotations
@@ -128,8 +130,6 @@ def main() -> None:
         "docs_per_sec": round(n_docs / pipe_secs, 1),
     }
     print(json.dumps(out, indent=1))
-    with open("RECALL.json", "w") as f:
-        json.dump(out, f, indent=1)
     spark.stop()
 
 
