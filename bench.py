@@ -6,6 +6,7 @@ N is $SPARK_GRAFT_CPUS when set, else the CPUs this process may run on
 Prints ONE JSON line:
   {"metric": "...", "value": total_sec, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ..., "docs_per_sec": ...,
+   "engine_confs": {conf: value, ...},
    "scaling": {...}}   # scaling block only when SPARK_GRAFT_SCALING=1
 
 The headline is the flagship dedup pipeline (extract-less corpus →
@@ -28,7 +29,7 @@ os.environ.setdefault("SPARK_GRAFT_TMPFS", "1")
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from gnames_spark.session import get_spark, host_cpus  # noqa: E402
+from gnames_spark.session import engine_confs, get_spark, host_cpus  # noqa: E402
 
 
 def _bench_queries(spark, sf_dir):
@@ -204,6 +205,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = host_cpus()
     spark = get_spark(app_name="gnames_spark_bench", master=f"local[{cpus}]")
+    confs = engine_confs(spark)
     try:
         (timings, n_docs, pipeline_sec, syn_dps, big_dps,
          full_dps, full_stages, funnel_dps) = _bench_queries(spark, sf_dir)
@@ -224,6 +226,8 @@ def main() -> None:
         "funnel_120k_docs_per_sec": funnel_dps,
         "fullconfig_120k_stages_sec": full_stages,
         "cpus": cpus,
+        # the session tuning the run ran under (the CLI run record's dict)
+        "engine_confs": confs,
     }
 
     if os.environ.get("SPARK_GRAFT_SCALING") == "1":

@@ -343,7 +343,7 @@ def _curation_tail(args: argparse.Namespace, docs, reps, out: str) -> int:
 
 
 def _run_record(spark, pipe, cfg) -> dict:
-    from gnames_spark.session import _TUNING_CONFS
+    from gnames_spark.session import engine_confs
 
     return {
         "run_id": pipe.metrics.run_id,
@@ -351,11 +351,9 @@ def _run_record(spark, pipe, cfg) -> dict:
         "config_hash": cfg.config_hash(),
         # effective engine confs (lineage: library defaults yield to
         # submit-line --conf; this records which value actually ran)
-        "engine_confs": {
-            k: spark.conf.get(k, "unset") for k in sorted(_TUNING_CONFS)
-        },
+        "engine_confs": engine_confs(spark),
         "stages": [
-            {"stage": m.stage, "rows": m.rows, "secs": round(m.secs, 3)}
+            {"stage": m.stage, "rows": m.rows, "secs": round(m.secs, 3), **m.extra}
             for m in pipe.metrics.stages
         ],
     }

@@ -50,6 +50,14 @@ class MetricsCollector:
             f.write(self.to_json())
 
 
+def codegen_compiles(spark) -> int:
+    """Generated classes this JVM has compiled so far (Spark's
+    ``CodegenMetrics`` compile count): a driver-side read that launches
+    no job. In local mode task threads compile in the same JVM."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def timed(fn):
     """(result, seconds) of fn()."""
     t0 = time.monotonic()

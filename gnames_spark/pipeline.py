@@ -44,7 +44,7 @@ from gnames_spark.checkpoint import ParquetCheckpointIO
 from gnames_spark.config import DedupConfig
 from gnames_spark.functions.extraction import extract_text
 from gnames_spark.functions.sigkernel import make_signature_udf
-from gnames_spark.metrics import MetricsCollector
+from gnames_spark.metrics import MetricsCollector, codegen_compiles
 from gnames_spark.operators.components import all_components, connected_components
 from gnames_spark.operators.exact import (
     distinct_content,
@@ -124,10 +124,13 @@ class DedupPipeline:
 
     # -- stage helper ------------------------------------------------
     def _stage(self, name: str, build) -> DataFrame:
+        """Materialize ``build()`` as stage ``name`` and record its rows,
+        wall and the generated classes Spark compiled for it."""
         name = self._stage_ns + name
+        compiled0 = codegen_compiles(self.spark)
         if self.io is not None:
             df, res = self.io.write_or_reuse(self.spark, name, build)
-            self.metrics.record(name, res.rows, res.secs, reused=res.reused)
+            rows, secs, reused = res.rows, res.secs, res.reused
         else:
             # no checkpoint store: localCheckpoint (persist + LINEAGE
             # CUT) so downstream stages (each consumed 2-4x) never
@@ -141,7 +144,11 @@ class DedupPipeline:
             # before this cut).
             t0 = time.monotonic()
             df = build().localCheckpoint(eager=True)
-            self.metrics.record(name, df.count(), time.monotonic() - t0)
+            rows, secs, reused = df.count(), time.monotonic() - t0, False
+        self.metrics.record(
+            name, rows, secs, reused=reused,
+            codegen_compiles=codegen_compiles(self.spark) - compiled0,
+        )
         # the overflow tables the build persisted were double-consumed
         # (stats collect + anti-join); the stage is materialized now, so
         # release the cached partitions

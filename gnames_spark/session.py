@@ -12,6 +12,7 @@ than the 200 default.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -48,6 +49,25 @@ def driver_memory() -> str:
     return f"{max(1, int(kb * DRIVER_MEM_FRACTION) // 2**20)}g"
 
 
+# the task slots of a local master: local, local[N], local[*] and the
+# max-failures forms local[N,F] / local[*,F]
+_LOCAL_MASTER = re.compile(r"local(?:\[(\*|\d+)(?:\s*,\s*\d+)?\])?")
+
+
+def default_shuffle_partitions(master: str) -> int:
+    """``spark.sql.shuffle.partitions`` when none is given: a local
+    master's task slots (``local[*]`` → :func:`host_cpus`, ``local[N]``
+    and ``local[N,F]`` → N, bare ``local`` → 1), at least 4, so the
+    shuffle width ≈ cores; 32 for any other master (``local-cluster``,
+    a cluster URL), where spark-submit ``--conf`` is expected to set
+    ~2-3x the total executor cores."""
+    m = _LOCAL_MASTER.fullmatch(master.strip())
+    if m is None:
+        return 32
+    slots = m.group(1)
+    return max(host_cpus() if slots == "*" else int(slots or 1), 4)
+
+
 def get_spark(
     app_name: str = "gnames_spark",
     master: str | None = None,
@@ -61,12 +81,13 @@ def get_spark(
     and no driver-memory override, so the cluster manager, executor
     topology, and driver sizing chosen on the ``spark-submit`` command
     line win. The engine's tuning confs (AQE, Arrow, SHJ preference,
-    coalesce floor, UTC) also yield to explicit ``--conf``: on a fresh
-    driver ``getOrCreate`` would apply ``builder.config`` OVER the
-    submit-line properties, so each tuning conf is set only when absent
-    from the ambient SparkConf — operators can disable AQE, the SHJ
-    preference, the 64k minPartitionSize floor, or the UTC session
-    timezone from the command line.
+    coalesce floor, UTC, generated-code cache size) also yield to
+    explicit ``--conf``: on a fresh driver ``getOrCreate`` would apply
+    ``builder.config`` OVER the submit-line properties, so each tuning
+    conf is set only when absent from the ambient SparkConf — operators
+    can disable AQE, the SHJ preference, the 64k minPartitionSize floor,
+    or the UTC session timezone, or resize the generated-code cache,
+    from the command line.
     """
     if inherit_master:
         builder = SparkSession.builder.appName(app_name)
@@ -83,11 +104,7 @@ def get_spark(
     if master is None:
         master = f"local[{host_cpus()}]"
     if shuffle_partitions is None:
-        # local[N] → N concurrent tasks; shuffle width ≈ cores. On a real
-        # cluster this is overridden via spark-submit --conf to
-        # ~2-3x total executor cores.
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
-        shuffle_partitions = 32 if n == "*" else max(int(n), 4)
+        shuffle_partitions = default_shuffle_partitions(master)
 
     # shuffle/spill scratch on tmpfs is OPT-IN (SPARK_GRAFT_TMPFS=1 or an
     # explicit SPARK_GRAFT_LOCAL_DIR): tmpfs is RAM-backed and typically
@@ -154,7 +171,23 @@ _TUNING_CONFS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
+    # Spark keeps compiled generated classes in one JVM-wide LRU cache
+    # keyed by (class loader, source), default 100 entries. One
+    # 1,200-page fullconfig batch walks ~228 keys (driver and task
+    # threads compile one body under different loaders) in the same
+    # order every batch, so at 100 every class of every batch missed
+    # and Janino recompiled it: ~227 compiles per batch, 0-15 with
+    # 1,000 (measured at local[4]). Fold-ins add ~65 keys per
+    # increment, so 1,000 holds a batch plus several increments. A
+    # static conf: only the JVM's first session sets it.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
+
+
+def engine_confs(spark: SparkSession) -> dict[str, str]:
+    """The tuning confs the session actually runs with: library
+    defaults, or the submit-line ``--conf`` values that beat them."""
+    return {k: spark.conf.get(k, "unset") for k in sorted(_TUNING_CONFS)}
 
 
 def _tuning(builder, respect_ambient: bool = False):

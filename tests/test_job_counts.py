@@ -12,10 +12,17 @@ jobs, read from the status tracker under a job group:
   jobs of its branches, their two overflow records and its count, and
   no job that builds a per-pair flag;
 - the verified stage, whose one pair⋈texts crossing runs both the
-  Jaccard and the substring check, stays within a fixed job count.
+  Jaccard and the substring check, stays within a fixed job count;
+- a second batch of the same plans compiles (almost) no generated
+  code: the JVM-wide codegen cache holds a whole batch's classes.
 """
 
 from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
 
 from pyspark.sql import functions as F
 
@@ -131,3 +138,58 @@ class TestVerifiedStageJobs:
         # 11 jobs; in some runs adaptive execution adds a twelfth
         # (two-stage) job before the lineage cut
         assert n <= 12, n
+
+
+# perfbench's fullconfig hygiene gates (a copy: tests do not import the
+# benchmark)
+FULLCONFIG_GATES = {
+    "collapse_url_snapshots": True,
+    "strip_shared_lines_min_docs": 8,
+    "max_dup_line_frac": 0.9,
+    "max_top_gram_frac": 0.5,
+    "redact_pii": True,
+}
+
+# two docs → components batches over the same pages in one new session;
+# prints the generated classes each compiled, summed from its per-stage
+# records
+_TWO_BATCHES = """
+import json, sys
+from gnames_spark.config import DedupConfig
+from gnames_spark.corpus import generate_pages
+from gnames_spark.pipeline import DedupPipeline
+from gnames_spark.session import get_spark
+
+spark = get_spark(app_name="codegen_reuse", master="local[4]", shuffle_partitions=4)
+cfg = DedupConfig(shuffle_partitions=4).with_overrides(**json.loads(sys.argv[1]))
+pages = generate_pages(spark, 200, seed=7, partitions=4).drop("html").cache()
+pages.count()
+compiles = []
+for _ in range(2):
+    pipe = DedupPipeline(spark, cfg)
+    docs = pipe.prepare_docs(pages)
+    sigs = pipe.signatures(docs)
+    pipe.components(docs, pipe.verified(pipe.candidates(docs, sigs), sigs, docs))
+    compiles.append(sum(m.extra.get("codegen_compiles", 0) for m in pipe.metrics.stages))
+spark.stop()
+print(json.dumps(compiles))
+"""
+
+
+class TestGeneratedCodeReuse:
+    def test_second_batch_compiles_almost_nothing(self):
+        # a JVM of its own: the codegen cache is JVM-wide, so in the test
+        # session earlier tests' plans would already fill it
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        path = os.pathsep.join(filter(None, [repo, os.environ.get("PYTHONPATH")]))
+        proc = subprocess.run(
+            [sys.executable, "-c", _TWO_BATCHES, json.dumps(FULLCONFIG_GATES)],
+            cwd=repo, env={**os.environ, "PYTHONPATH": path},
+            capture_output=True, text=True, timeout=600,
+        )
+        assert proc.returncode == 0, proc.stderr[-4000:]
+        first, second = json.loads(proc.stdout.splitlines()[-1])
+        # the batch's working set overflows Spark's default 100-entry
+        # cache, which would miss on every class of the second batch
+        assert first > 100, first
+        assert second <= 10, (first, second)

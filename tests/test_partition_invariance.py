@@ -105,9 +105,14 @@ def _digest(df, cols) -> str:
 
 
 def _records(pipe) -> list[tuple]:
-    """The run's metric records without their timings: per-stage rows
-    (the funnel) and the overflow records (buckets, dropped docs)."""
-    return [(m.stage, m.rows, sorted(m.extra.items())) for m in pipe.metrics.stages]
+    """The run's metric records without their costs (timings and the
+    generated classes compiled, which depend on what the JVM compiled
+    before): per-stage rows (the funnel) and the overflow records
+    (buckets, dropped docs)."""
+    return [
+        (m.stage, m.rows, sorted((k, v) for k, v in m.extra.items() if k != "codegen_compiles"))
+        for m in pipe.metrics.stages
+    ]
 
 
 def _summary(res) -> dict:

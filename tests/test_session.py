@@ -1,4 +1,5 @@
-"""Host-sized local-session defaults (session.host_cpus / driver_memory).
+"""Host-sized local-session defaults (session.host_cpus / driver_memory /
+default_shuffle_partitions).
 
 No SparkSession: the derivation is pure Python over the environment,
 the CPU affinity mask and /proc/meminfo.
@@ -51,3 +52,25 @@ class TestHostSizedDefaults:
         _meminfo(tmp_path, monkeypatch, 16 * 2**20)
         monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "10g")
         assert session.driver_memory() == "10g"
+
+
+
+@pytest.mark.usefixtures("no_overrides")
+class TestDefaultShufflePartitions:
+    @pytest.mark.parametrize("master, cpus, want", [
+        ("local[*]", "12", 12),
+        ("local[*,3]", "12", 12),
+        ("local[*]", "2", 4),  # floor of 4
+        ("local[16]", None, 16),
+        ("local[4,2]", None, 4),  # N threads, 2 max task failures
+        ("local[8, 2]", None, 8),
+        ("local[2]", None, 4),
+        ("local", None, 4),  # one slot, floored
+        ("local-cluster[2,1,1024]", None, 32),
+        ("spark://host:7077", None, 32),
+        ("yarn", None, 32),
+    ])
+    def test_master_forms(self, monkeypatch, master, cpus, want):
+        if cpus is not None:
+            monkeypatch.setenv("SPARK_GRAFT_CPUS", cpus)
+        assert session.default_shuffle_partitions(master) == want

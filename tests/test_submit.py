@@ -138,6 +138,7 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
     assert doc["engine_confs"]["spark.sql.session.timeZone"] == "America/New_York"
     assert doc["engine_confs"]["spark.sql.join.preferSortMergeJoin"] == "false"
     assert doc["engine_confs"]["spark.sql.adaptive.enabled"] == "true"
+    assert doc["engine_confs"]["spark.sql.codegen.cache.maxEntries"] == "1000"
 
     # curation tail landed next to the standard outputs
     train = pq.read_table(str(out / "training_set"))
